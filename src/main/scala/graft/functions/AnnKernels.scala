@@ -139,7 +139,9 @@ object AnnKernels {
           var s = 0.0d
           var j = 0
           while (j < dim) { s += v.getDouble(j) * cw(j); j += 1 }
-          if (s >= 0) bucket |= (1L << p)
+          // Spark's NaN-safe `>=` (the replaced expression tree) orders NaN
+          // above every number, so a NaN dot product sets the bit too
+          if (s >= 0 || java.lang.Double.isNaN(s)) bucket |= (1L << p)
           p += 1
         }
       }

@@ -470,16 +470,17 @@ final class LakeTable(spark: SparkSession, val root: String,
   }
 
   /** CHECK-constraint enforcement over a batch's storage-projected source
-    * rows ([[addConstraint]]): violating UPSERT rows are quarantined —
-    * written next to the table for inspection, counted into
+    * rows ([[addConstraint]]), under the batch's evolved snapshot `snap`:
+    * violating UPSERT rows are quarantined — written to `quarantineDir` (the
+    * merge attempt's own, by an `aux` job) for inspection, counted into
     * `MergeStats.constraintQuarantined`, logged loudly — never a stream
     * failure (the batch would redeliver forever), never a silent drop.
     * Zero cost when the snapshot has no constraints. The delivery counters
     * (eventsSeen/upserts/deletes) describe the batch AS DELIVERED;
     * `constraintQuarantined` records what enforcement then removed.
     */
-  private def enforceConstraints(snap: Snapshot, evolvedSchema: StructType,
-                                 src: DataFrame, batchId: Long)
+  private def enforceConstraints(snap: Snapshot, src: DataFrame,
+                                 quarantineDir: String, aux: AuxJobs)
       : (DataFrame, scala.concurrent.Future[Long]) = {
     if (snap.constraints.isEmpty)
       return (src, scala.concurrent.Future.successful(0L))
@@ -491,18 +492,16 @@ final class LakeTable(spark: SparkSession, val root: String,
     // not the violator count, so the extra per-batch job leaves the critical
     // path; the caller awaits before committing (a failed quarantine write
     // must still fail the batch, not land a commit that lost rows silently).
-    val quarantined = scala.concurrent.Future {
+    val quarantined = aux {
       val n = bad.count()
       if (n > 0) {
-        val dir = s"$root/quarantine/constraints-v${snap.version + 1}-b$batchId-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        bad.select((evolvedSchema.fieldNames.toSeq :+ "_lsn").map(col): _*)
-          .write.mode("overwrite").parquet(dir)
+        bad.select((snap.schema.fieldNames.toSeq :+ "_lsn").map(col): _*)
+          .write.mode("overwrite").parquet(quarantineDir)
         System.err.println(s"[lake] QUARANTINED $n rows violating CHECK " +
-          s"(${snap.constraints.keys.mkString(", ")}) -> $dir")
+          s"(${snap.constraints.keys.mkString(", ")}) -> $quarantineDir")
       }
       n
-    }(LakeTable.auxJobEc)
+    }
     (src.filter(!violates), quarantined)
   }
 
@@ -768,9 +767,6 @@ final class LakeTable(spark: SparkSession, val root: String,
     j.filter(changed).select(out: _*)
   }
 
-  /** Apply one micro-batch of change events (EventLog.eventSchema shape).
-    * Idempotent per (epoch, batchId): a replayed batch is a no-op.
-    */
   private val timing = sys.env.getOrElse("GRAFT_MERGE_TIMING", "0") == "1"
   private def timed[T](name: String)(f: => T): T = {
     if (!timing) f
@@ -782,7 +778,10 @@ final class LakeTable(spark: SparkSession, val root: String,
     }
   }
 
-  /** `recordInLedger = false` is for SINGLE-SHOT writes (`df.write`, SQL
+  /** Apply one micro-batch of change events (EventLog.eventSchema shape).
+    * Idempotent per (epoch, batchId): a replayed batch is a no-op.
+    *
+    * `recordInLedger = false` is for SINGLE-SHOT writes (`df.write`, SQL
     * INSERT): they never replay, and recording a fresh never-reused epoch
     * per call would grow the ledger — serialized into EVERY snapshot — by
     * one entry per ad-hoc write forever. Exactly-once for such a write is
@@ -791,37 +790,9 @@ final class LakeTable(spark: SparkSession, val root: String,
     * ledger idempotence per (epoch, batchId).
     */
   def merge(batch: DataFrame, epoch: String, batchId: Long, saltBuckets: Int = 0,
-            recordInLedger: Boolean = true, operation: String = "merge"): MergeStats = {
-    // Optimistic concurrency: on a lost commit race the merge RECOMPUTES
-    // against the new head rather than rebasing its output metadata. A
-    // metadata-only rebase is UNSOUND for a merge: output rows are stamped
-    // `_ver = parent + 1` at write time, so re-parenting the same files onto
-    // a newer head would publish rows whose `_ver` sits below their commit
-    // version and the change feed's `_ver > fromVersion` filter would
-    // silently drop them for consumers resuming in between. Compaction (which
-    // preserves stored `_ver`s) takes the cheap rebase path instead — so the
-    // long-running maintenance job rarely forces the ingest loop to redo work.
-    var attempts = 0
-    var out: MergeStats = null
-    while (out == null) {
-      val snap = head()
-      if (recordInLedger && snap.ledger.contains(epoch, batchId)) {
-        return MergeStats(epoch, batchId, snap.version, 0, 0, 0, 0, 0, noOp = true)
-      }
-      mergeOnce(snap, batch, epoch, batchId, saltBuckets, recordInLedger,
-        operation) match {
-        case Some(stats) => out = stats
-        case None =>
-          attempts += 1
-          if (attempts >= 5) throw new IllegalStateException(
-            s"merge($epoch, $batchId) lost $attempts commit races; giving up " +
-              "(is another writer committing in a tight loop?)")
-          System.err.println(s"[lake] merge($epoch, $batchId) lost a commit " +
-            "race; recomputing against the new head")
-      }
-    }
-    out
-  }
+            recordInLedger: Boolean = true, operation: String = "merge"): MergeStats =
+    mergeWithRetry(batch, epoch, batchId, saltBuckets, recordInLedger, operation,
+      deferred = false)
 
   /** MERGE-ON-READ twin of [[merge]] (Hudi log-file / Iceberg v2
     * merge-on-read analog): apply the batch WITHOUT reading or rewriting any
@@ -837,10 +808,8 @@ final class LakeTable(spark: SparkSession, val root: String,
     * later copy-on-write merge touching the same ranges — materializes the
     * deltas ([[compact]] rewrites delta files unconditionally, pulling in
     * every base file whose key range overlaps). Same idempotence ledger,
-    * schema-evolution handling, and lineage counters as [[merge]]; same
-    * recompute-on-lost-race concurrency rule (output rows are stamped
-    * `_ver = parent + 1`, so a metadata rebase would break the change feed —
-    * see [[merge]]; the recompute is cheap here, O(batch)).
+    * schema-evolution handling, lineage counters and recompute-on-lost-race
+    * rule as [[merge]] — both run the one merge body, `mergeOnce`.
     *
     * Trade-offs a caller accepts until the next compaction: reads resolve
     * through a window (no longer a bare vectorized scan — the
@@ -850,7 +819,23 @@ final class LakeTable(spark: SparkSession, val root: String,
     */
   def mergeDeferred(batch: DataFrame, epoch: String, batchId: Long,
                     saltBuckets: Int = 0, recordInLedger: Boolean = true,
-                    operation: String = "merge-deferred"): MergeStats = {
+                    operation: String = "merge-deferred"): MergeStats =
+    mergeWithRetry(batch, epoch, batchId, saltBuckets, recordInLedger, operation,
+      deferred = true)
+
+  private def mergeWithRetry(batch: DataFrame, epoch: String, batchId: Long,
+                             saltBuckets: Int, recordInLedger: Boolean,
+                             operation: String, deferred: Boolean): MergeStats = {
+    // Optimistic concurrency: on a lost commit race the merge RECOMPUTES
+    // against the new head rather than rebasing its output metadata. A
+    // metadata-only rebase is UNSOUND for a merge: output rows are stamped
+    // `_ver = parent + 1` at write time, so re-parenting the same files onto
+    // a newer head would publish rows whose `_ver` sits below their commit
+    // version and the change feed's `_ver > fromVersion` filter would
+    // silently drop them for consumers resuming in between. Compaction (which
+    // preserves stored `_ver`s) takes the cheap rebase path instead — so the
+    // long-running maintenance job rarely forces the ingest loop to redo work.
+    val name = if (deferred) "mergeDeferred" else "merge"
     var attempts = 0
     var out: MergeStats = null
     while (out == null) {
@@ -858,177 +843,246 @@ final class LakeTable(spark: SparkSession, val root: String,
       if (recordInLedger && snap.ledger.contains(epoch, batchId)) {
         return MergeStats(epoch, batchId, snap.version, 0, 0, 0, 0, 0, noOp = true)
       }
-      deferredOnce(snap, batch, epoch, batchId, saltBuckets, recordInLedger,
-        operation) match {
+      mergeOnce(snap, batch, epoch, batchId, saltBuckets, recordInLedger,
+        operation, deferred) match {
         case Some(stats) => out = stats
         case None =>
           attempts += 1
           if (attempts >= 5) throw new IllegalStateException(
-            s"mergeDeferred($epoch, $batchId) lost $attempts commit races; giving up " +
+            s"$name($epoch, $batchId) lost $attempts commit races; giving up " +
               "(is another writer committing in a tight loop?)")
-          System.err.println(s"[lake] mergeDeferred($epoch, $batchId) lost a " +
-            "commit race; recomputing against the new head")
+          System.err.println(s"[lake] $name($epoch, $batchId) lost a commit " +
+            "race; recomputing against the new head")
       }
     }
     out
   }
 
-  private def deferredOnce(snap: Snapshot, batch: DataFrame, epoch: String,
-                           batchId: Long, saltBuckets: Int,
-                           recordInLedger: Boolean,
-                           operation: String): Option[MergeStats] = {
-    // concurrent with the pre-agg below — same §2.6 overlap as mergeOnce
-    val scFut = scala.concurrent.Future(timed("schema-scan")(batch
-      .filter(col("op") === "schema_change")
-      .select(col("lsn"), col("schema_change"))
-      .collect().toSeq.sortBy(_.getLong(0))))(LakeTable.auxJobEc)
-
-    // Lineage counters (no file pruning here — no target files are read,
-    // which is the whole point). A deferred merge writes EXACTLY one delta
-    // row per distinct batch key on EVERY batch (the dedup window below,
-    // independent of target state — nothing is read to merge against), so
-    // `distinctKeys` = written delta rows and `deleteWinners` = written
-    // tombstone delta rows, both free from the commit's footer stats; the
-    // remaining scalars need only a SHUFFLE-FREE map-side agg, submitted
-    // concurrently with the delta write (guide §2.4/§2.6 — the per-key
-    // hash shuffle leaves the deferred ingest entirely). Constraints
-    // disable the identity (quarantined rows never reach the delta);
-    // the grouped pre-agg remains for that case.
-    val fastCounters = snap.constraints.isEmpty
-    val scalarFut =
-      if (!fastCounters) None
-      else Some(scala.concurrent.Future(timed("scalar-agg") {
-        val r = batch.filter(col("op") =!= "schema_change")
-          .agg(count(lit(1)), coalesce(max(col("lsn")), lit(-1L))).collect()(0)
-        (r.getLong(0), r.getLong(1))
-      })(LakeTable.auxJobEc))
-    val (distinctKeys0, eventsSeen0, deleteWinners0, dataMaxLsn0) =
-      if (fastCounters) (-1L, -1L, -1L, -1L)
-      else timed("pre-agg") {
-        val r = batch
-          .filter(col("op") =!= "schema_change")
-          .select(col("repo"), col("path"), col("lsn"), col("event_id"), col("op"))
-          .groupBy(col("repo"), col("path"))
-          .agg(
-            max_by(col("op"), struct(col("lsn"), col("event_id"))).as("__winOp"),
-            count(lit(1)).as("__n"),
-            max(col("lsn")).as("__maxLsn"))
-          .agg(
-            count(lit(1)),
-            coalesce(sum(col("__n")), lit(0L)),
-            coalesce(sum(when(col("__winOp") === "delete", 1L).otherwise(0L)), lit(0L)),
-            coalesce(max(col("__maxLsn")), lit(-1L))).collect()(0)
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      }
-    val scRows = scala.concurrent.Await.result(
-      scFut, scala.concurrent.duration.Duration.Inf)
-
-    val evo = evolveSchema(snap, scRows)
-
-    val data = batch.filter(col("op") =!= "schema_change")
-    val changes =
-      if (saltBuckets == 0) data
-      else Salting.dedupSalted(data, keyCols, Seq(col("lsn"), col("event_id")),
-        if (saltBuckets == -1) 0 else saltBuckets)
-
-    val src0 = changes.select(
-      storageProjection(evo.schema, evo.addedAt, evo.widened, evo.renames) ++ Seq(
-        col("lsn").as("_lsn"),
-        (col("op") === "delete").as("_deleted"),
-        lit(snap.version + 1).as("_ver"),
-        col("event_id").as("__tie")): _*)
-    val (src, constraintQuarantinedF) =
-      enforceConstraints(snap, evo.schema, src0, batchId)
-
-    // batch-local dedup in ONE range shuffle; the delta files come out
-    // range-clustered by key, so their manifest bounding boxes stay tight —
-    // read-time resolution, compaction closure, and later copy-on-write
-    // pruning all depend on delta bounds being selective
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("_lsn").desc, col("__tie").desc)
-    val winners = src.repartitionByRange(col("repo"), col("path"))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__tie")
-
-    val newDir = s"${log.dataDir}/delta-v${snap.version + 1}-b$batchId-" +
+  /** One attempt of [[merge]] (copy-on-write) or, with `deferred`, of
+    * [[mergeDeferred]] against `snap`; `None` when another writer committed
+    * first. The two modes share every step but four:
+    *  - target read: copy-on-write unions the touched target files into the
+    *    merge window, deferred reads no target at all;
+    *  - output dir: `v…` vs `delta-v…` (both parsed by [[expireSnapshots]]);
+    *  - the `delta` flag on the new file entries;
+    *  - kept files: copy-on-write drops the touched files it rewrites,
+    *    deferred touches none and keeps them all.
+    */
+  private def mergeOnce(snap: Snapshot, batch: DataFrame, epoch: String,
+                        batchId: Long, saltBuckets: Int,
+                        recordInLedger: Boolean, operation: String,
+                        deferred: Boolean): Option[MergeStats] = {
+    import scala.concurrent.Await
+    import scala.concurrent.duration.Duration
+    val aux = new AuxJobs(spark.sparkContext)
+    val quarantineDir = s"$root/quarantine/constraints-v${snap.version + 1}-b$batchId-" +
       java.util.UUID.randomUUID().toString.take(8)
-    timed("delta-write")(dataWriter(toPhysicalCols(evo.physical, winners)).parquet(newDir))
-    val newFiles = timed("footer-stats")(
-      LakeTable.footerStats(spark, newDir, statColumns = statColumns)
-        .map(_.copy(delta = true)))
+    var committed = false
+    try {
+      // ---- schema-change events: a separate TINY pass (`op = 'schema_change'`
+      // pushes down to the scan, so it touches almost nothing; folding it into
+      // the per-key agg as a collect_list used to allocate a buffer per key and
+      // forced the agg off the codegen hash path). Submitted CONCURRENTLY with
+      // the counter job below (guide §2.6 — actions are only sequential because
+      // the driver calls them sequentially): the scheduler back-fills, so this
+      // job's fixed cost leaves the critical path.
+      val scFut = aux(timed("schema-scan")(batch
+        .filter(col("op") === "schema_change")
+        .select(col("lsn"), col("schema_change"))
+        .collect().toSeq.sortBy(_.getLong(0))))
 
-    // fast-path counters resolve here (one delta row per distinct key;
-    // scalar agg awaited after the write it overlapped with)
-    val (distinctKeys, eventsSeen, deleteWinners, dataMaxLsn) = scalarFut match {
-      case None => (distinctKeys0, eventsSeen0, deleteWinners0, dataMaxLsn0)
-      case Some(f) =>
-        val (n, mx) = scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf)
-        (newFiles.map(_.rows).sum, n, newFiles.filter(_.tomb).map(_.rows).sum, mx)
+      // ---- lineage counters, from one of two places.
+      // (a) ONE narrow pre-aggregation over data events (key/lsn/op columns
+      // only — a few % of batch bytes) folds per partition into counter
+      // totals plus, on a non-empty copy-on-write target, the touched-file
+      // hits against a broadcast interval index (an O(log files + hits) probe
+      // per distinct key, not a join); only those partials return to the
+      // driver. It runs only where the write cannot supply the counters:
+      // file pruning needs the job anyway, constraints keep quarantined rows
+      // out of the written output, and salting pre-dedups before the write.
+      // (b) Everywhere else — the initial load, every constraint-free
+      // deferred batch — the merge window writes EXACTLY one row per distinct
+      // batch key (tombstones in their own file group), so `distinctKeys` and
+      // `deleteWinners` come from the footer stats the commit collects
+      // anyway, and `eventsSeen` / max lsn from an Observation on the write
+      // job itself: no per-key hash shuffle and no extra job (guide §2.4).
+      val pruneIx =
+        if (deferred || snap.files.isEmpty) None
+        else Some(spark.sparkContext.broadcast(PruneIndex(snap.files)))
+      val (preAgg, touched) =
+        if (pruneIx.isEmpty && snap.constraints.isEmpty && saltBuckets == 0)
+          (None, Set.empty[String])
+        else timed("pre-agg+prune") {
+          val keyAgg = batch
+            .filter(col("op") =!= "schema_change")
+            .select(col("repo"), col("path"), col("lsn"), col("event_id"), col("op"))
+            .groupBy(col("repo"), col("path"))
+            .agg(
+              max_by(col("op"), struct(col("lsn"), col("event_id"))).as("__winOp"),
+              count(lit(1)).as("__n"),
+              max(col("lsn")).as("__maxLsn"))
+          val partials = keyAgg.rdd.mapPartitions { it =>
+            var keys = 0L; var n = 0L; var del = 0L; var mx = -1L
+            val hits = scala.collection.mutable.HashSet.empty[String]
+            it.foreach { r =>
+              keys += 1
+              n += r.getLong(3)
+              if (!r.isNullAt(2) && r.getString(2) == "delete") del += 1
+              // null-safe: an all-null-lsn group adds nothing to the max
+              val m = if (r.isNullAt(4)) -1L else r.getLong(4)
+              if (m > mx) mx = m
+              if (!r.isNullAt(0) && !r.isNullAt(1))
+                pruneIx.foreach(ix => hits ++= ix.value.lookup(r.getString(0), r.getString(1)))
+            }
+            Iterator.single((keys, n, del, mx, hits.toSeq))
+          }.collect()
+          (Some((partials.map(_._1).sum, partials.map(_._2).sum, partials.map(_._3).sum,
+            partials.foldLeft(-1L)((a, p) => math.max(a, p._4)))),
+            partials.iterator.flatMap(_._5).toSet)
+        }
+      val scRows = Await.result(scFut, Duration.Inf)
+
+      val (evolved, scApplied, scQuarantined) = evolveSchema(snap, scRows)
+      // ---- the change stream for this batch (all data events) ----
+      val data = batch.filter(col("op") =!= "schema_change")
+
+      // optional pre-dedup for extreme duplicate storms: saltBuckets selects
+      //  0 (default) → none: the fused merge window dedups everything in the
+      //                single range shuffle below;
+      // -1           → hash-agg pre-dedup (map-side partial combine collapses
+      //                hot-key duplicates before any shuffle);
+      // -2           → adaptive salted window: probe the batch's hottest key
+      //                and size the salt buckets from it (Salting.chooseSaltBuckets);
+      // >=1          → (salted) window pre-dedup with a fixed bucket count.
+      val changes =
+        if (saltBuckets == 0) data
+        else Salting.dedupSalted(data, keyCols, Seq(col("lsn"), col("event_id")),
+          if (saltBuckets == -1) 0 else saltBuckets)
+
+      // ---- project events to storage rows ([[storageProjection]]).
+      // `_ver` = commit version that last modified the row: source rows carry
+      // the committing version, target rows their stored one. Ties prefer the
+      // target (__tie below), so a source row wins the merge window iff it
+      // strictly changes the key's state — the winner's own _ver is therefore
+      // exactly "version of last modification" with no extra comparison, and a
+      // re-delivered duplicate keeps the old _ver (no spurious change-feed row).
+      val src0 = changes.select(
+        storageProjection(evolved) ++ Seq(
+          col("lsn").as("_lsn"),
+          (col("op") === "delete").as("_deleted"),
+          lit(snap.version + 1).as("_ver"),
+          col("event_id").as("__tie"),
+          lit(-1L).as("__pref")): _*)
+      val (src, constraintQuarantinedF) =
+        enforceConstraints(evolved, src0, quarantineDir, aux)
+
+      // copy-on-write target rows, via readStoredTagged: when touched files
+      // include deferred-merge deltas, the per-row `__pref` (base −1, delta
+      // _ver) breaks LSN ties among TARGET rows the same way the read-time
+      // resolution does — base beats delta (duplicate re-delivery keeps the
+      // original `_ver`), earlier delta commit beats later. Touched delta
+      // files are rewritten like any other touched file, so a copy-on-write
+      // merge also MATERIALIZES the deltas it touches.
+      val window =
+        if (deferred) src
+        else readStoredTagged(evolved, snap.files.filter(f => touched.contains(f.path)))
+          .withColumn("__tie", lit(Long.MaxValue)) // target wins LSN ties: re-applied dup is a no-op
+          .unionByName(src)
+
+      // ---- the fused MERGE: ONE shuffle. repartitionByRange(key) satisfies
+      // the window's ClusteredDistribution, so batch-dedup + target-merge run
+      // in a single exchange, and the output files come out range-clustered by
+      // key (tight min/max → effective pruning on the next merge). Counter
+      // mode (b) observes the rows ABOVE the exchange: below it, the
+      // range-sampling job would run the observation too and count twice.
+      import org.apache.spark.sql.expressions.Window
+      lazy val observed = org.apache.spark.sql.Observation()
+      val clustered = window.repartitionByRange(col("repo"), col("path"))
+      val w = Window.partitionBy(keyCols.map(col): _*)
+        .orderBy(col("_lsn").desc, col("__tie").desc, col("__pref").asc)
+      val merged = (if (preAgg.nonEmpty) clustered else clustered.observe(observed,
+          count(lit(1)).as("n"), coalesce(max(col("_lsn")), lit(-1L)).as("maxLsn")))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+        .drop("__rn", "__tie", "__pref")
+
+      // ---- write new data files: live rows and tombstones to SEPARATE files
+      // (Iceberg delete-file analog) so live reads never open tombstone bytes.
+      // The dir carries a per-attempt suffix: two writers racing on the same
+      // (version, batchId) — or two epochs sharing a batchId — must never
+      // overwrite each other's in-flight files; the loser's dir becomes an
+      // unreferenced orphan that expireSnapshots' GC removes. ----
+      val newDir = s"${log.dataDir}/${if (deferred) "delta-" else ""}" +
+        s"v${snap.version + 1}-b$batchId-" + java.util.UUID.randomUUID().toString.take(8)
+      timed("write")(dataWriter(toPhysicalCols(evolved.physicalName, merged)).parquet(newDir))
+      val newFiles = timed("footer-stats")(
+        LakeTable.footerStats(spark, newDir, statColumns = statColumns)
+          .map(_.copy(delta = deferred)))
+
+      val (distinctKeys, eventsSeen, deleteWinners, dataMaxLsn) = preAgg.getOrElse {
+        // a write the optimizer proved empty reports no metrics at all
+        val m = observed.get
+        (newFiles.map(_.rows).sum, m.getOrElse("n", 0L).asInstanceOf[Long],
+          newFiles.filter(_.tomb).map(_.rows).sum,
+          m.getOrElse("maxLsn", -1L).asInstanceOf[Long])
+      }
+      val batchMaxLsn = math.max(dataMaxLsn,
+        scRows.lastOption.map(_.getLong(0)).getOrElse(-1L))
+
+      val next = evolved.copy(
+        version = snap.version + 1,
+        files = snap.files.filterNot(f => touched.contains(f.path)) ++ newFiles,
+        ledger = if (recordInLedger) snap.ledger.add(epoch, batchId) else snap.ledger,
+        parent = snap.version,
+        maxLsn = math.max(snap.maxLsn, batchMaxLsn),
+        operation = operation,
+        manifestSummaries = Nil) // the commit writes its own
+      // the concurrent quarantine job must have LANDED before the commit does
+      // (a failed quarantine write fails the batch, never a silent row loss)
+      val constraintQuarantined = Await.result(constraintQuarantinedF, Duration.Inf)
+      committed = log.tryCommit(next)
+      if (!committed) None // lost the race: the caller recomputes
+      else Some(MergeStats(epoch, batchId, next.version,
+        eventsSeen = eventsSeen + scRows.length,
+        duplicatesDropped = eventsSeen - distinctKeys,
+        upserts = distinctKeys - deleteWinners,
+        deletes = deleteWinners,
+        schemaChanges = scApplied,
+        schemaQuarantined = scQuarantined,
+        constraintQuarantined = constraintQuarantined,
+        noOp = false))
+    } finally if (!committed) {
+      // a failed or lost attempt: none of its auxiliary jobs may outlive it,
+      // and its quarantined rows belong to a batch that never committed (a
+      // recompute quarantines them again)
+      aux.cancel()
+      val q = new org.apache.hadoop.fs.Path(quarantineDir)
+      q.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(q, true)
     }
-    val batchMaxLsn = math.max(dataMaxLsn,
-      scRows.lastOption.map(_.getLong(0)).getOrElse(-1L))
-
-    val next = Snapshot(
-      version = snap.version + 1,
-      schema = evo.schema,
-      addedAtLsn = evo.addedAt,
-      files = snap.files ++ newFiles,
-      ledger = if (recordInLedger) snap.ledger.add(epoch, batchId) else snap.ledger,
-      parent = snap.version,
-      maxLsn = math.max(snap.maxLsn, batchMaxLsn),
-      widenedAt = evo.widened,
-      operation = operation,
-      constraints = snap.constraints,
-      droppedAtLsn = evo.dropped,
-      physicalName = evo.physical,
-      renamedAt = evo.renames)
-    // the concurrent quarantine job must have LANDED before the commit does
-    // (a failed quarantine write fails the batch, never a silent row loss)
-    val constraintQuarantined = scala.concurrent.Await.result(
-      constraintQuarantinedF, scala.concurrent.duration.Duration.Inf)
-    if (!log.tryCommit(next)) return None
-
-    Some(MergeStats(epoch, batchId, next.version,
-      eventsSeen = eventsSeen + scRows.length,
-      duplicatesDropped = eventsSeen - distinctKeys,
-      upserts = distinctKeys - deleteWinners,
-      deletes = deleteWinners,
-      schemaChanges = evo.applied,
-      schemaQuarantined = evo.quarantined,
-      constraintQuarantined = constraintQuarantined,
-      noOp = false))
   }
 
-  /** Event→storage-row projection under an evolved schema: extras gated by
-    * column add-LSN; the PARSE type of a widened column is gated by the widen
-    * LSN (a pre-widen row parses through the ORIGINAL type then widens —
-    * exactly how its stored physical value would read back — so the final
-    * table is invariant to how the log is split into batches). Shared by the
-    * copy-on-write and deferred merge paths.
+  /** Event→storage-row projection under `snap`'s (evolved) schema: extras
+    * gated by column add-LSN; the PARSE type of a widened column is gated by
+    * the widen LSN (a pre-widen row parses through the ORIGINAL type then
+    * widens — exactly how its stored physical value would read back — so the
+    * final table is invariant to how the log is split into batches).
     */
-  private def storageProjection(
-      schema: StructType, addedAt: Map[String, Long],
-      widened: Map[String, (Long, String)],
-      renames: Map[String, Seq[(Long, String)]] = Map.empty)
-      : Seq[org.apache.spark.sql.Column] =
-    schema.fields.toSeq.map { f =>
+  private def storageProjection(snap: Snapshot): Seq[org.apache.spark.sql.Column] =
+    snap.schema.fields.toSeq.map { f =>
       if (keyCols.contains(f.name)) col(f.name)
-      else addedAt.get(f.name) match {
+      else snap.addedAtLsn.get(f.name) match {
         case Some(atLsn) =>
           // era-gated extras key: a row produced BEFORE a rename carried the
           // THEN-current name in its JSON extra — parse the name active at
           // the row's lsn (ascending history; foldRight tests earliest
           // rename first) so replay is invariant to batch splits
-          val raw = renames.getOrElse(f.name, Nil)
+          val raw = snap.renamedAt.getOrElse(f.name, Nil)
             .foldRight(get_json_object(col("extra"), s"$$.${f.name}")) {
               case ((rLsn, prior), later) =>
                 when(col("lsn") <= lit(rLsn),
                   get_json_object(col("extra"), s"$$.$prior")).otherwise(later)
             }
-          val typed = widened.get(f.name) match {
+          val typed = snap.widenedAt.get(f.name) match {
             case Some((wLsn, fromName)) =>
               when(col("lsn") > lit(wLsn), raw.cast(f.dataType))
                 .otherwise(raw.cast(parseTypeName(fromName)).cast(f.dataType))
@@ -1041,7 +1095,8 @@ final class LakeTable(spark: SparkSession, val root: String,
       }
     }
 
-  /** Apply `scRows` (lsn-sorted schema_change events) to `snap`'s schema.
+  /** Apply `scRows` (lsn-sorted schema_change events) to `snap`'s schema:
+    * the evolved snapshot plus the counts of applied and quarantined changes.
     * `addColumn` introduces a nullable column; `widenColumn` changes an
     * existing column's type within the SAFE-WIDENING whitelist (int→long,
     * float→double; a new column is already the null→anything case) —
@@ -1059,7 +1114,7 @@ final class LakeTable(spark: SparkSession, val root: String,
     * (SURVEY §7.7(3)).
     */
   private def evolveSchema(
-      snap: Snapshot, scRows: Seq[org.apache.spark.sql.Row]): SchemaEvolution = {
+      snap: Snapshot, scRows: Seq[org.apache.spark.sql.Row]): (Snapshot, Long, Long) = {
     var schema = snap.schema
     var addedAt = snap.addedAtLsn
     var widened = snap.widenedAt
@@ -1199,8 +1254,9 @@ final class LakeTable(spark: SparkSession, val root: String,
           quarantine(r.getLong(0), s"malformed JSON: ${r.getString(1).take(120)}")
       }
     }
-    SchemaEvolution(schema, addedAt, widened, scApplied, scQuarantined, dropped,
-      physical, renames)
+    (snap.copy(schema = schema, addedAtLsn = addedAt, widenedAt = widened,
+      droppedAtLsn = dropped, physicalName = physical, renamedAt = renames),
+      scApplied, scQuarantined)
   }
 
   /** Names of CHECK constraints whose expression references `name` — a drop
@@ -1216,215 +1272,6 @@ final class LakeTable(spark: SparkSession, val root: String,
             a.nameParts.last
         }.contains(name)).getOrElse(true) => cname // unparseable → fail safe
     }.sorted
-
-  private def mergeOnce(snap: Snapshot, batch: DataFrame, epoch: String,
-                        batchId: Long, saltBuckets: Int,
-                        recordInLedger: Boolean,
-                        operation: String): Option[MergeStats] = {
-
-    // ---- schema-change events: a separate TINY pass (`op = 'schema_change'`
-    // pushes down to the scan, so it touches almost nothing; folding it into
-    // the per-key agg as a collect_list used to allocate a buffer per key and
-    // forced the agg off the codegen hash path). Submitted CONCURRENTLY with
-    // the pre-agg job below (guide §2.6 — actions are only sequential because
-    // the driver calls them sequentially): the scheduler back-fills, so this
-    // job's fixed cost leaves the critical path.
-    val scFut = scala.concurrent.Future(timed("schema-scan")(batch
-      .filter(col("op") === "schema_change")
-      .select(col("lsn"), col("schema_change"))
-      .collect().toSeq.sortBy(_.getLong(0))))(LakeTable.auxJobEc)
-
-    // ---- ONE narrow pre-aggregation over data events (key/lsn/op columns
-    // only — a few % of batch bytes) feeds lineage counters AND file pruning
-    // in a SINGLE job: the per-key hash aggregate folds per partition into
-    // (counter totals + touched-file hits against the broadcast interval
-    // index) and only those partials return to the driver — no cache
-    // round-trip, no second scalar-agg job, no distinct shuffle of file
-    // paths (guide §1.2 fewer passes; §2.4 remove shuffles outright).
-    // File pruning: touch only files whose (repo, path) bounding box meets a
-    // batch key — the broadcast PruneIndex probe is O(log files + hits) per
-    // distinct key, not a join.
-    // ---- EMPTY-TARGET fast path (the initial load / first batch / the
-    // bench's one-shot drain): with no target files there is nothing to
-    // prune, and the merge's own dedup window writes EXACTLY one row per
-    // distinct batch key (tombstones included, in their own file group) — so
-    // `distinctKeys` = written rows and `deleteWinners` = written tombstone
-    // rows, both free from the footer stats the commit collects anyway. The
-    // remaining counters (eventsSeen, max lsn) need only a SHUFFLE-FREE
-    // map-side scalar agg, submitted concurrently with the merge write
-    // (§2.6). Net: the per-key hash-agg SHUFFLE of the whole batch
-    // disappears from the initial load (guide §2.4 — remove shuffles
-    // outright). Constraints disable the path: quarantined rows never reach
-    // the written output, which would break the rows==keys identity.
-    val emptyFastPath = snap.files.isEmpty && snap.constraints.isEmpty
-    val scalarFut =
-      if (!emptyFastPath) None
-      else Some(scala.concurrent.Future(timed("scalar-agg") {
-        val r = batch.filter(col("op") =!= "schema_change")
-          .agg(count(lit(1)), coalesce(max(col("lsn")), lit(-1L))).collect()(0)
-        (r.getLong(0), r.getLong(1))
-      })(LakeTable.auxJobEc))
-    val pruneIx =
-      if (snap.files.isEmpty) None
-      else Some(spark.sparkContext.broadcast(PruneIndex(snap.files)))
-    val (distinctKeys0, eventsSeen0, deleteWinners0, dataMaxLsn0, touched) =
-      if (emptyFastPath) (-1L, -1L, -1L, -1L, Set.empty[String])
-      else timed("pre-agg+prune") {
-        val keyAgg = batch
-          .filter(col("op") =!= "schema_change")
-          .select(col("repo"), col("path"), col("lsn"), col("event_id"), col("op"))
-          .groupBy(col("repo"), col("path"))
-          .agg(
-            max_by(col("op"), struct(col("lsn"), col("event_id"))).as("__winOp"),
-            count(lit(1)).as("__n"),
-            max(col("lsn")).as("__maxLsn"))
-        val partials = keyAgg.rdd.mapPartitions { it =>
-          var keys = 0L; var n = 0L; var del = 0L; var mx = -1L
-          val hits = scala.collection.mutable.HashSet.empty[String]
-          it.foreach { r =>
-            keys += 1
-            n += r.getLong(3)
-            if (!r.isNullAt(2) && r.getString(2) == "delete") del += 1
-            // null-safe like the old coalesce(max(__maxLsn), -1): an
-            // all-null-lsn group contributes nothing to the max
-            val m = if (r.isNullAt(4)) -1L else r.getLong(4)
-            if (m > mx) mx = m
-            if (!r.isNullAt(0) && !r.isNullAt(1))
-              pruneIx.foreach(ix => hits ++= ix.value.lookup(r.getString(0), r.getString(1)))
-          }
-          Iterator.single((keys, n, del, mx, hits.toSeq))
-        }.collect()
-        (partials.map(_._1).sum, partials.map(_._2).sum, partials.map(_._3).sum,
-          partials.foldLeft(-1L)((a, p) => math.max(a, p._4)),
-          partials.iterator.flatMap(_._5).toSet)
-      }
-    val scRows = scala.concurrent.Await.result(
-      scFut, scala.concurrent.duration.Duration.Inf)
-
-    val evo = evolveSchema(snap, scRows)
-    val schema = evo.schema
-    val addedAt = evo.addedAt
-    val widened = evo.widened
-    val scApplied = evo.applied
-    val scQuarantined = evo.quarantined
-    val evolved = snap.copy(schema = schema, addedAtLsn = addedAt,
-      widenedAt = widened, droppedAtLsn = evo.dropped,
-      physicalName = evo.physical, renamedAt = evo.renames)
-    // ---- the change stream for this batch (all data events) ----
-    val data = batch.filter(col("op") =!= "schema_change")
-
-    // optional pre-dedup for extreme duplicate storms: saltBuckets selects
-    //  0 (default) → none: the fused merge window dedups everything in the
-    //                single range shuffle below;
-    // -1           → hash-agg pre-dedup (map-side partial combine collapses
-    //                hot-key duplicates before any shuffle);
-    // -2           → adaptive salted window: probe the batch's hottest key
-    //                and size the salt buckets from it (Salting.chooseSaltBuckets);
-    // >=1          → (salted) window pre-dedup with a fixed bucket count.
-    val changes =
-      if (saltBuckets == 0) data
-      else Salting.dedupSalted(data, keyCols, Seq(col("lsn"), col("event_id")),
-        if (saltBuckets == -1) 0 else saltBuckets)
-
-    // ---- project events to storage rows (extras gated by column add-LSN;
-    // the PARSE type of a widened column is gated by the widen LSN: a
-    // pre-widen row parses through the ORIGINAL type then widens — exactly
-    // how its stored physical value would read back — so the final table is
-    // invariant to how the log is split into batches) ----
-    val srcCols = storageProjection(evolved.schema, addedAt, widened, evo.renames)
-    // `_ver` = commit version that last modified the row: source rows carry
-    // the committing version, target rows their stored one. Ties prefer the
-    // target (__tie below), so a source row wins the merge window iff it
-    // strictly changes the key's state — the winner's own _ver is therefore
-    // exactly "version of last modification" with no extra comparison, and a
-    // re-delivered duplicate keeps the old _ver (no spurious change-feed row).
-    val src0 = changes.select(srcCols ++ Seq(
-      col("lsn").as("_lsn"),
-      (col("op") === "delete").as("_deleted"),
-      lit(snap.version + 1).as("_ver"),
-      col("event_id").as("__tie"),
-      lit(-1L).as("__pref"),
-      lit(false).as("__isTarget")): _*)
-    val (src, constraintQuarantinedF) =
-      enforceConstraints(snap, evolved.schema, src0, batchId)
-
-    // readStoredTagged: when touched files include deferred-merge deltas, the
-    // per-row `__pref` (base −1, delta _ver) breaks LSN ties among TARGET
-    // rows the same way the read-time resolution does — base beats delta
-    // (duplicate re-delivery keeps the original `_ver`), earlier delta commit
-    // beats later. Touched delta files are rewritten like any other touched
-    // file, so a copy-on-write merge also MATERIALIZES the deltas it touches.
-    val target = readStoredTagged(evolved, snap.files.filter(f => touched.contains(f.path)))
-      .withColumn("__tie", lit(Long.MaxValue)) // target wins LSN ties: re-applied dup is a no-op
-      .withColumn("__isTarget", lit(true))
-
-    // ---- the fused MERGE: ONE shuffle. repartitionByRange(key) satisfies
-    // the window's ClusteredDistribution, so batch-dedup + target-merge run
-    // in a single exchange, and the output files come out range-clustered by
-    // key (tight min/max → effective pruning on the next merge).
-    import org.apache.spark.sql.expressions.Window
-    val unioned = target.unionByName(src)
-      .repartitionByRange(col("repo"), col("path"))
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col("_lsn").desc, col("__tie").desc, col("__pref").asc)
-    val merged = unioned.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn", "__tie", "__pref", "__isTarget")
-
-    // ---- write new data files: live rows and tombstones to SEPARATE files
-    // (Iceberg delete-file analog) so live reads never open tombstone bytes.
-    // The dir carries a per-attempt suffix: two writers racing on the same
-    // (version, batchId) — or two epochs sharing a batchId — must never
-    // overwrite each other's in-flight files; the loser's dir becomes an
-    // unreferenced orphan that expireSnapshots' GC removes. ----
-    val newDir = s"${log.dataDir}/v${snap.version + 1}-b$batchId-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    timed("merge-write")(dataWriter(toPhysicalCols(evo.physical, merged)).parquet(newDir))
-
-    val newFiles = timed("footer-stats")(LakeTable.footerStats(spark, newDir, statColumns = statColumns))
-
-    // fast-path counters resolve HERE: one written row per distinct key
-    // (tombstones in their own file group), scalar agg awaited after the
-    // write it overlapped with
-    val (distinctKeys, eventsSeen, deleteWinners, dataMaxLsn) = scalarFut match {
-      case None => (distinctKeys0, eventsSeen0, deleteWinners0, dataMaxLsn0)
-      case Some(f) =>
-        val (n, mx) = scala.concurrent.Await.result(
-          f, scala.concurrent.duration.Duration.Inf)
-        (newFiles.map(_.rows).sum, n, newFiles.filter(_.tomb).map(_.rows).sum, mx)
-    }
-    val batchMaxLsn = math.max(dataMaxLsn,
-      scRows.lastOption.map(_.getLong(0)).getOrElse(-1L))
-
-    val next = Snapshot(
-      version = snap.version + 1,
-      schema = schema,
-      addedAtLsn = addedAt,
-      files = snap.files.filterNot(f => touched.contains(f.path)) ++ newFiles,
-      ledger = if (recordInLedger) snap.ledger.add(epoch, batchId) else snap.ledger,
-      parent = snap.version,
-      maxLsn = math.max(snap.maxLsn, batchMaxLsn),
-      widenedAt = widened,
-      operation = operation,
-      constraints = snap.constraints,
-      droppedAtLsn = evo.dropped,
-      physicalName = evo.physical,
-      renamedAt = evo.renames)
-    // concurrent quarantine job must land before the commit (see mergeOnce)
-    val constraintQuarantined = scala.concurrent.Await.result(
-      constraintQuarantinedF, scala.concurrent.duration.Duration.Inf)
-    if (!log.tryCommit(next)) return None // lost the race: caller recomputes
-
-    Some(MergeStats(epoch, batchId, next.version,
-      eventsSeen = eventsSeen + scRows.length,
-      duplicatesDropped = eventsSeen - distinctKeys,
-      upserts = distinctKeys - deleteWinners,
-      deletes = deleteWinners,
-      schemaChanges = scApplied,
-      schemaQuarantined = scQuarantined,
-      constraintQuarantined = constraintQuarantined,
-      noOp = false))
-  }
 
   /** Plain-row write surface backing `df.write.format("graft")`, SQL
     * `INSERT INTO`, and the `writeStream.format("graft")` sink: rows of the
@@ -1743,25 +1590,41 @@ final class LakeTable(spark: SparkSession, val root: String,
 object LakeTable {
 
   /** Driver-side pool for overlapping small independent Spark actions with a
-    * bigger one in the same merge (guide §2.6): daemon threads so an idle
-    * pool never blocks JVM exit. Bounded by use — a merge submits one
-    * auxiliary action at a time.
+    * bigger one in the same merge (guide §2.6). A merge attempt submits at
+    * most two ([[AuxJobs]]: schema scan, constraint quarantine), so four
+    * threads serve two concurrent writers; further writers queue rather
+    * than grow the pool. Daemon threads so an idle pool never blocks JVM
+    * exit.
     */
   private[lake] lazy val auxJobEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
+      java.util.concurrent.Executors.newFixedThreadPool(4, r => {
         val t = new Thread(r, "lake-aux-job"); t.setDaemon(true); t
       }))
 
-  /** Outcome of applying a batch's schema-change events to a snapshot's
-    * schema (shared by the copy-on-write and deferred merge paths).
+  /** The auxiliary Spark actions of ONE merge attempt, run on [[auxJobEc]]
+    * under a job tag of their own, so an attempt that fails or loses its
+    * commit race can cancel their jobs and wait until none is left running.
     */
-  private[lake] final case class SchemaEvolution(
-      schema: StructType, addedAt: Map[String, Long],
-      widened: Map[String, (Long, String)], applied: Long, quarantined: Long,
-      dropped: Map[String, Long],
-      physical: Map[String, String],
-      renames: Map[String, Seq[(Long, String)]])
+  private[lake] final class AuxJobs(sc: org.apache.spark.SparkContext) {
+    private val tag = s"graft-merge-aux-${java.util.UUID.randomUUID()}"
+    private var started = List.empty[scala.concurrent.Future[_]]
+
+    def apply[T](f: => T): scala.concurrent.Future[T] = {
+      val fut = scala.concurrent.Future {
+        sc.addJobTag(tag)
+        try f finally sc.removeJobTag(tag)
+      }(auxJobEc)
+      started ::= fut
+      fut
+    }
+
+    /** Cancel the running jobs, then wait for every action to finish. */
+    def cancel(): Unit = {
+      sc.cancelJobsWithTag(tag)
+      started.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
+    }
+  }
 
   /** UTF-8 unsigned lexicographic comparison — the order Parquet uses for
     * binary stats AND the order Spark's UTF8String sorts by. Java String

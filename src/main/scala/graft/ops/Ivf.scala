@@ -88,8 +88,8 @@ object Ivf {
     else {
       var cents = ordered.take(nlist)
       // the fallback loop re-reads the projected corpus once per iteration —
-      // cache it for the loop's lifetime (iters + the caller's final
-      // assignment all reuse it), as the pre-driver-Lloyd shape did
+      // cache it for the loop's lifetime only (the caller's final assignment
+      // reads the corpus afresh), as the pre-driver-Lloyd shape did
       pv.persist()
       try {
         for (_ <- 0 until iters) {

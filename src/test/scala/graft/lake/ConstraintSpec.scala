@@ -73,6 +73,56 @@ class ConstraintSpec extends SparkSuite {
     assert(t.read().select("path").as[String].collect().toSeq === Seq("a"))
   }
 
+  private def quarantinedPaths(root: String): Seq[String] = {
+    val qdir = new java.io.File(root, "quarantine")
+    if (!qdir.exists || qdir.listFiles().isEmpty) Nil
+    else spark.read.option("recursiveFileLookup", "true").parquet(qdir.toString)
+      .select("path").as[String].collect().toSeq.sorted
+  }
+
+  test("a lost commit race quarantines each violating row exactly once") {
+    val root = tmpDir("check-race")
+    val t = new LakeTable(spark, root)
+    t.create(LakeTable.baseSchema)
+    t.addConstraint("lang-allowed", "lang IN ('scala', 'java')")
+    // a second handle commits a metadata-only version from inside the
+    // merge's first task, so the merge's first commit attempt must lose
+    val racer = new LakeTable(spark, root)
+    ConstraintSpec.arm { () =>
+      val s = racer.head()
+      assert(racer.log.tryCommit(s.copy(version = s.version + 1, parent = s.version,
+        operation = "race")))
+    }
+    val before = t.head().version
+    val stats = t.merge(ConstraintSpec.racingBatch(spark, Seq(
+      ev(1, "insert", "r1", "a", "scala", "ok"),
+      ev(2, "insert", "r1", "b", "cobol", "violates"),
+      ev(3, "insert", "r1", "c", "fortran", "violates too"))), "e", 0)
+    assert(!ConstraintSpec.armed, "the race hook never fired")
+    assert(stats.version === before + 2, "the merge must have recomputed once")
+    assert(stats.constraintQuarantined === 2L)
+    assert(quarantinedPaths(root) === Seq("b", "c"))
+    assert(t.read().select("path").as[String].collect().toSeq === Seq("a"))
+  }
+
+  test("a merge whose data write fails leaves no quarantine dir") {
+    val root = tmpDir("check-fail")
+    val t = new LakeTable(spark, root)
+    t.create(LakeTable.baseSchema)
+    t.addConstraint("lang-allowed", "lang IN ('scala', 'java')")
+    // a plain file where the data directory belongs: every data write fails
+    assert(new java.io.File(root, "data").createNewFile())
+    intercept[Exception] {
+      t.merge(batch(
+        ev(1, "insert", "r1", "a", "scala", "ok"),
+        ev(2, "insert", "r1", "b", "cobol", "violates")), "e", 0)
+    }
+    val qdir = new java.io.File(root, "quarantine")
+    assert(!qdir.exists || qdir.listFiles().isEmpty,
+      s"a failed batch left quarantine output: ${Option(qdir.listFiles()).map(_.toSeq)}")
+    assert(t.head().files.isEmpty)
+  }
+
   test("restore rolls constraints back with the rest of the state") {
     val t = new LakeTable(spark, tmpDir("check-restore"))
     t.create(LakeTable.baseSchema)
@@ -85,4 +135,23 @@ class ConstraintSpec extends SparkSuite {
     t.merge(batch(ev(2, "insert", "r1", "b", "cobol", "v2")), "e", 1)
     assert(t.read().count() === 2L)
   }
+}
+
+object ConstraintSpec {
+  @volatile private var hook: Option[() => Unit] = None
+
+  /** Run `f` once, from inside the first task that reads a [[racingBatch]]. */
+  def arm(f: () => Unit): Unit = hook = Some(f)
+  def armed: Boolean = hook.nonEmpty
+
+  private def fire(): Unit = synchronized {
+    val h = hook
+    hook = None
+    h.foreach(_())
+  }
+
+  def racingBatch(spark: org.apache.spark.sql.SparkSession, rows: Seq[Row]) =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2).mapPartitions { it => fire(); it },
+      EventLog.eventSchema)
 }

@@ -176,8 +176,12 @@ class MergeOnReadSpec extends SparkSuite {
       splits.zipWithIndex.foreach { case (rows, i) =>
         val df = spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 3), EventLog.eventSchema)
-        if (rnd.nextBoolean()) t.mergeDeferred(df, "mor", i.toLong)
-        else t.merge(df, "mor", i.toLong)
+        val deferred = rnd.nextBoolean()
+        val stats =
+          if (deferred) t.mergeDeferred(df, "mor", i.toLong)
+          else t.merge(df, "mor", i.toLong)
+        assert(CdcPropertySpec.counters(stats) === CdcPropertySpec.expected(rows),
+          s"trial=$trial batch=$i deferred=$deferred")
         if (rnd.nextInt(3) == 0) t.compact(targetRowsPerFile = 200)
       }
       val got = t.read()

@@ -23,7 +23,16 @@ class SignBucketsParitySpec extends SparkSuite {
     val vecs: Seq[Seq[java.lang.Double]] =
       (0 until 50).map(_ => Seq.fill(dim)(java.lang.Double.valueOf(rnd.nextGaussian()))) :+
         // a null element: every vecDot is NULL and every bit falls through to 0
-        (Seq.fill(dim - 1)(java.lang.Double.valueOf(0.5)) :+ (null: java.lang.Double))
+        (Seq.fill(dim - 1)(java.lang.Double.valueOf(0.5)) :+ (null: java.lang.Double)) :+
+        // non-finite elements: a NaN dot product sets the bit (Spark's
+        // NaN-safe `>=` orders NaN above every number); ±Inf decides by sign;
+        // +Inf and -Inf together sum to NaN
+        (Seq.fill(dim - 1)(java.lang.Double.valueOf(0.5)) :+ java.lang.Double.valueOf(Double.NaN)) :+
+        (java.lang.Double.valueOf(Double.PositiveInfinity) +: Seq.fill(dim - 1)(java.lang.Double.valueOf(0.0))) :+
+        (java.lang.Double.valueOf(Double.NegativeInfinity) +: Seq.fill(dim - 1)(java.lang.Double.valueOf(-0.25))) :+
+        (Seq(Double.PositiveInfinity, Double.NegativeInfinity) ++ Seq.fill(dim - 2)(1.0))
+          .map(java.lang.Double.valueOf) :+
+        Seq.fill(dim)(java.lang.Double.valueOf(Double.NaN))
     val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "__v")
 
     val planesAll = Array.tabulate(tables)(t =>
