@@ -74,6 +74,30 @@ final class LakeTable(spark: SparkSession, val root: String,
   def head(): Snapshot = log.head().getOrElse(
     throw new IllegalStateException(s"no snapshot at $root — call create() first"))
 
+  /** The one optimistic-commit loop behind every writer (Delta-style
+    * optimistic concurrency): run `attempt` against a fresh head until it
+    * returns `Some`. `None` means another writer committed first; the next
+    * attempt sees the new head and applies its own rule (recompute, rebase,
+    * or re-validate). Gives up loudly after [[maxCommitAttempts]] lost races.
+    */
+  private def commitLoop[T](name: String)(attempt: Snapshot => Option[T]): T = {
+    var attempts = 0
+    var out = attempt(head())
+    while (out.isEmpty) {
+      attempts += 1
+      if (attempts >= maxCommitAttempts) throw new IllegalStateException(
+        s"$name lost $attempts commit races; giving up " +
+          "(is another writer committing in a tight loop?)")
+      System.err.println(s"[lake] $name lost a commit race; retrying against the new head")
+      out = attempt(head())
+    }
+    out.get
+  }
+
+  /** Commit `next` for a metadata-only writer; `None` on a lost race. */
+  private def commitNext(next: Snapshot): Option[Snapshot] =
+    if (log.tryCommit(next)) Some(next) else None
+
   private def storageSchema(s: Snapshot): StructType =
     StructType(s.schema.fields.toSeq :+
       StructField("_lsn", LongType, nullable = false) :+
@@ -429,45 +453,24 @@ final class LakeTable(spark: SparkSession, val root: String,
     */
   def addConstraint(name: String, check: String): Snapshot = {
     require(name.matches("[A-Za-z0-9_-]+"), s"bad constraint name: '$name'")
-    var result: Snapshot = null
-    var attempts = 0
-    while (result == null) {
-      val snap = head()
+    commitLoop(s"addConstraint($name)") { snap =>
       require(!snap.constraints.contains(name), s"constraint '$name' already exists")
       val bad = readAt(snap).filter(expr(check) <=> lit(false)).limit(1).count()
       require(bad == 0L, s"cannot add CHECK '$name': existing rows violate ($check)")
-      val next = snap.copy(version = snap.version + 1, parent = snap.version,
+      commitNext(snap.copy(version = snap.version + 1, parent = snap.version,
         operation = s"addConstraint($name)",
-        constraints = snap.constraints + (name -> check))
-      if (log.tryCommit(next)) result = next
-      else {
-        attempts += 1
-        if (attempts >= 8) throw new IllegalStateException(
-          s"addConstraint lost $attempts commit races; giving up")
-      }
+        constraints = snap.constraints + (name -> check)))
     }
-    result
   }
 
   /** Remove a named CHECK constraint. */
-  def dropConstraint(name: String): Snapshot = {
-    var result: Snapshot = null
-    var attempts = 0
-    while (result == null) {
-      val snap = head()
+  def dropConstraint(name: String): Snapshot =
+    commitLoop(s"dropConstraint($name)") { snap =>
       require(snap.constraints.contains(name), s"no such constraint: '$name'")
-      val next = snap.copy(version = snap.version + 1, parent = snap.version,
+      commitNext(snap.copy(version = snap.version + 1, parent = snap.version,
         operation = s"dropConstraint($name)",
-        constraints = snap.constraints - name)
-      if (log.tryCommit(next)) result = next
-      else {
-        attempts += 1
-        if (attempts >= 8) throw new IllegalStateException(
-          s"dropConstraint lost $attempts commit races; giving up")
-      }
+        constraints = snap.constraints - name))
     }
-    result
-  }
 
   /** CHECK-constraint enforcement over a batch's storage-projected source
     * rows ([[addConstraint]]), under the batch's evolved snapshot `snap`:
@@ -529,30 +532,16 @@ final class LakeTable(spark: SparkSession, val root: String,
     * HEAD — the caller asked for state-as-of-`version`, so a concurrently
     * landed commit is deliberately superseded (logged loudly, bounded tries).
     */
-  def restoreTo(version: Long): Snapshot = {
-    var result: Snapshot = null
-    var attempts = 0
-    while (result == null) {
-      val snap = head()
+  def restoreTo(version: Long): Snapshot =
+    commitLoop(s"restore(v$version)") { snap =>
       require(version <= snap.version,
         s"cannot restore to v$version: head is v${snap.version}")
-      if (version == snap.version) return snap
-      val target = log.read(version)
-      val next = target.copy(
+      if (version == snap.version) Some(snap)
+      else commitNext(log.read(version).copy(
         version = snap.version + 1,
         parent = snap.version,
-        operation = s"restore(v$version)")
-      if (log.tryCommit(next)) result = next
-      else {
-        attempts += 1
-        if (attempts >= 8) throw new IllegalStateException(
-          s"restore lost $attempts commit races; giving up")
-        System.err.println(
-          s"[lake] restore to v$version lost a commit race; retrying against the new head")
-      }
+        operation = s"restore(v$version)"))
     }
-    result
-  }
 
   private def readAt(snap: Snapshot): DataFrame =
     readAt(snap, snap.files)
@@ -836,27 +825,17 @@ final class LakeTable(spark: SparkSession, val root: String,
     // preserves stored `_ver`s) takes the cheap rebase path instead — so the
     // long-running maintenance job rarely forces the ingest loop to redo work.
     val name = if (deferred) "mergeDeferred" else "merge"
-    var attempts = 0
-    var out: MergeStats = null
-    while (out == null) {
-      val snap = head()
-      if (recordInLedger && snap.ledger.contains(epoch, batchId)) {
-        return MergeStats(epoch, batchId, snap.version, 0, 0, 0, 0, 0, noOp = true)
-      }
-      mergeOnce(snap, batch, epoch, batchId, saltBuckets, recordInLedger,
-        operation, deferred) match {
-        case Some(stats) => out = stats
-        case None =>
-          attempts += 1
-          if (attempts >= 5) throw new IllegalStateException(
-            s"$name($epoch, $batchId) lost $attempts commit races; giving up " +
-              "(is another writer committing in a tight loop?)")
-          System.err.println(s"[lake] $name($epoch, $batchId) lost a commit " +
-            "race; recomputing against the new head")
-      }
+    commitLoop(s"$name($epoch, $batchId)") { snap =>
+      if (recordInLedger && snap.ledger.contains(epoch, batchId))
+        Some(noOp(epoch, batchId, snap))
+      else mergeOnce(snap, batch, epoch, batchId, saltBuckets, recordInLedger,
+        operation, deferred)
     }
-    out
   }
+
+  /** Stats of a batch the ledger already holds: a replay is a no-op. */
+  private def noOp(epoch: String, batchId: Long, snap: Snapshot): MergeStats =
+    MergeStats(epoch, batchId, snap.version, 0, 0, 0, 0, 0, noOp = true)
 
   /** One attempt of [[merge]] (copy-on-write) or, with `deferred`, of
     * [[mergeDeferred]] against `snap`; `None` when another writer committed
@@ -1300,14 +1279,7 @@ final class LakeTable(spark: SparkSession, val root: String,
                    recordInLedger: Boolean = true,
                    operation: String = "write"): MergeStats = {
     val snap = head()
-    val present = rows.columns.toSet - "__op"
-    val unknown = present -- snap.schema.fieldNames
-    require(rows.columns.contains("__op"), "applyChanges requires an __op column")
-    require(keyCols.forall(present.contains),
-      s"plain-row writes require key columns ${keyCols.mkString(", ")}; got ${rows.columns.mkString(", ")}")
-    require(unknown.isEmpty,
-      s"write with columns absent from the table schema: ${unknown.mkString(", ")} " +
-        "(evolve the schema with a schema_change event first)")
+    val present = checkRows(rows, snap)
     val lsn = math.max(snap.maxLsn, 0L) + 1
     val (evolved, base) = snap.schema.fields.toSeq.partition(f => snap.addedAtLsn.contains(f.name))
     val baseCols = base.map { f =>
@@ -1326,6 +1298,22 @@ final class LakeTable(spark: SparkSession, val root: String,
       extraCol.as("extra")): _*)
     merge(ev, epoch, batchId, recordInLedger = recordInLedger,
       operation = operation)
+  }
+
+  /** The shape checks of a plain-row write against `snap`'s schema: an
+    * `__op` column, both key columns, no column outside the schema. Returns
+    * the user columns present.
+    */
+  private def checkRows(rows: DataFrame, snap: Snapshot): Set[String] = {
+    val present = rows.columns.toSet - "__op"
+    val unknown = present -- snap.schema.fieldNames
+    require(rows.columns.contains("__op"), "applyChanges requires an __op column")
+    require(keyCols.forall(present.contains),
+      s"plain-row writes require key columns ${keyCols.mkString(", ")}; got ${rows.columns.mkString(", ")}")
+    require(unknown.isEmpty,
+      s"write with columns absent from the table schema: ${unknown.mkString(", ")} " +
+        "(evolve the schema with a schema_change event first)")
+    present
   }
 
   /** Delete every key in `keys` (columns `repo`, `path`): tombstone events
@@ -1348,24 +1336,22 @@ final class LakeTable(spark: SparkSession, val root: String,
   def overwrite(rows: DataFrame, epoch: String, batchId: Long,
                 recordInLedger: Boolean = true): MergeStats = {
     // truncate: commit an empty file set (history stays time-travelable),
-    // then run the normal append path against the emptied table; the
-    // truncate itself retries on a lost commit race
-    var attempts = 0
-    var truncated = false
-    while (!truncated) {
-      val snap = head()
+    // then run the normal append path against the emptied table. The rows
+    // are checked against the schema the truncate commits on BEFORE it
+    // commits: a bad frame must fail with the old contents still in place.
+    val inserts = rows.withColumn("__op", lit("insert"))
+    // Some(stats) = a replay the ledger already holds; None = truncated
+    val replayed = commitLoop(s"overwrite($epoch, $batchId)") { snap =>
       if (recordInLedger && snap.ledger.contains(epoch, batchId))
-        return MergeStats(epoch, batchId, snap.version, 0, 0, 0, 0, 0, noOp = true)
-      truncated = log.tryCommit(snap.copy(version = snap.version + 1,
-        files = Seq.empty, parent = snap.version, operation = "truncate"))
-      if (!truncated) {
-        attempts += 1
-        if (attempts >= 5) throw new IllegalStateException(
-          s"overwrite($epoch, $batchId) lost $attempts truncate races; giving up")
+        Some(Some(noOp(epoch, batchId, snap)))
+      else {
+        checkRows(inserts, snap)
+        commitNext(snap.copy(version = snap.version + 1,
+          files = Seq.empty, parent = snap.version, operation = "truncate")).map(_ => None)
       }
     }
-    applyChanges(rows.withColumn("__op", lit("insert")), epoch, batchId,
-      recordInLedger, operation = "overwrite")
+    replayed.getOrElse(applyChanges(inserts, epoch, batchId, recordInLedger,
+      operation = "overwrite"))
   }
 
   /** Bin-pack fragmented data files and expire old tombstones.
@@ -1405,10 +1391,9 @@ final class LakeTable(spark: SparkSession, val root: String,
               tombstoneWatermark: Option[Long] = None,
               full: Boolean = false,
               zorderBy: Seq[String] = Nil): Snapshot = {
-    var attempts = 0
-    var result: Snapshot = null
-    while (result == null) {
-      val snap = head()
+    // One pass against `snap`: the rewritten paths and the packed files
+    // that replace them, or None when there is nothing to bin-pack.
+    def pack(snap: Snapshot): Option[(Set[String], Seq[DataFileEntry])] = {
       // fragmented (undersized) files bin-pack together; JUMBO files (> 4×
       // target — e.g. one giant initial load) split so a later point read
       // is not hostage to a single huge range; tombstone files join the
@@ -1428,12 +1413,10 @@ final class LakeTable(spark: SparkSession, val root: String,
       // overlapping a rewritten delta, transitively through newly-added
       // deltas. Manifest-level work on the driver — no data I/O.
       val rewrite = deltaClosure(seed, snap.files)
-      val rewritePaths = rewrite.map(_.path).toSet
-      val carry = snap.files.filterNot(f => rewritePaths.contains(f.path))
       val onlyOneSmall = rewrite.size == 1 &&
         rewrite.head.rows < targetRowsPerFile && !rewrite.head.delta
       if (rewrite.isEmpty || (onlyOneSmall && tombstoneWatermark.isEmpty && !full))
-        return snap // nothing to bin-pack
+        return None
       // resolveStored: a plain re-pack (no deltas) passes rows through
       // unchanged; with deltas in the set the per-key window materializes
       // the resolved state (preserving stored _lsn/_ver, so the rebase rule
@@ -1469,36 +1452,24 @@ final class LakeTable(spark: SparkSession, val root: String,
       // stat the z-order columns too: their tightened per-file bounds are
       // the whole point (string columns; int64-family leaves are already
       // auto-statted)
-      val packed = LakeTable.footerStats(spark, newDir,
-        statColumns = (statColumns ++ zorderBy).distinct)
-      val removed = rewrite.map(_.path).toSet
-      assert(carry.forall(f => !removed.contains(f.path)))
+      Some((rewrite.map(_.path).toSet, LakeTable.footerStats(spark, newDir,
+        statColumns = (statColumns ++ zorderBy).distinct)))
+    }
 
-      var base = snap
-      var recompute = false
-      while (result == null && !recompute) {
-        val next = base.copy(
-          version = base.version + 1,
-          files = base.files.filterNot(f => removed.contains(f.path)) ++ packed,
-          parent = base.version, operation = "compact")
-        if (log.tryCommit(next)) result = next
-        else {
-          attempts += 1
-          if (attempts >= 8) throw new IllegalStateException(
-            s"compact lost $attempts commit races; giving up")
-          val h = head()
-          if (removed.forall(h.files.map(_.path).toSet.contains)) {
-            System.err.println(s"[lake] compact lost a commit race; rebasing onto v${h.version}")
-            base = h
-          } else {
-            System.err.println("[lake] compact lost a commit race and a rewritten " +
-              "file was replaced concurrently; recomputing")
-            recompute = true
-          }
-        }
+    // the packed files outlive a lost race: they rebase onto the new head
+    // while every file they replace is still live there
+    var packed: Option[(Set[String], Seq[DataFileEntry])] = None
+    commitLoop("compact") { snap =>
+      if (!packed.forall(_._1.subsetOf(snap.files.map(_.path).toSet))) packed = None
+      if (packed.isEmpty) packed = pack(snap)
+      packed match {
+        case None => Some(snap) // nothing to bin-pack
+        case Some((removed, files)) =>
+          commitNext(snap.copy(version = snap.version + 1,
+            files = snap.files.filterNot(f => removed.contains(f.path)) ++ files,
+            parent = snap.version, operation = "compact"))
       }
     }
-    result
   }
 
   /** Rectangle-overlap test on two manifest entries' (repo, path) bounding
@@ -1588,6 +1559,9 @@ final class LakeTable(spark: SparkSession, val root: String,
 }
 
 object LakeTable {
+
+  /** Attempts a writer makes before it gives up on losing commit races. */
+  private[lake] val maxCommitAttempts = 8
 
   /** Driver-side pool for overlapping small independent Spark actions with a
     * bigger one in the same merge (guide §2.6). A merge attempt submits at

@@ -130,6 +130,66 @@ class CompactionSpec extends SparkSuite {
     while (v > 0) { val s = t.log.read(v); assert(s.parent === v - 1); v = s.parent }
   }
 
+  /** Four one-row files on disjoint keys: an incremental compaction at
+    * target 100 rewrites all of them.
+    */
+  private def fragmented(root: String): LakeTable = {
+    val t = new LakeTable(spark, root)
+    t.create(LakeTable.baseSchema)
+    (0 until 4).foreach(i => t.merge(batch(ev(i + 1, "insert", s"r$i", "p", s"v$i")), "e", i))
+    assert(t.head().files.size === 4)
+    t
+  }
+
+  /** Compact `t` while a second handle commits `raced(head)` once, on the
+    * driver, after the compaction's data write and before its snapshot
+    * commit.
+    */
+  private def compactRacing(t: LakeTable)(raced: Snapshot => Snapshot): Snapshot = {
+    val racer = new LakeTable(spark, t.root)
+    val key = "spark.sql.sources.commitProtocolClass"
+    ConstraintSpec.arm { () =>
+      val s = racer.head()
+      assert(racer.log.tryCommit(raced(s).copy(version = s.version + 1,
+        parent = s.version, operation = "race")))
+    }
+    spark.conf.set(key, classOf[RacingCommitProtocol].getName)
+    try t.compact(targetRowsPerFile = 100)
+    finally {
+      spark.conf.unset(key)
+      ConstraintSpec.disarm()
+    }
+  }
+
+  private def compactDirs(t: LakeTable): Seq[String] =
+    new java.io.File(t.root, "data").listFiles()
+      .map(_.getName).filter(_.startsWith("compact-v")).toSeq
+
+  test("a compaction that loses a race to an unrelated commit rebases its files") {
+    val t = fragmented(tmpDir("compact-rebase"))
+    val before = t.head().version
+    val rows = t.read().collect().toSet
+    val after = compactRacing(t)(identity)
+    assert(t.log.read(before + 1).operation === "race")
+    assert(after.version === before + 2)
+    assert(after.operation === "compact" && after.files.size === 1)
+    assert(compactDirs(t).size === 1, compactDirs(t))
+    assert(t.read().collect().toSet === rows)
+  }
+
+  test("a compaction whose rewritten file was replaced concurrently recomputes") {
+    val t = fragmented(tmpDir("compact-recompute"))
+    val before = t.head().version
+    // the racer drops one of the four files the compaction is rewriting
+    val after = compactRacing(t)(s => s.copy(files = s.files.tail))
+    assert(t.log.read(before + 1).operation === "race")
+    assert(after.version === before + 2)
+    assert(compactDirs(t).size === 2, compactDirs(t))
+    val raced = t.readVersion(before + 1).collect().toSet
+    assert(raced.size === 3)
+    assert(t.read().collect().toSet === raced)
+  }
+
   test("GC never collects an in-flight writer's dir; aged orphan attempts are collected") {
     val t = new LakeTable(spark, tmpDir("gc-inflight"))
     t.create(LakeTable.baseSchema)
@@ -175,5 +235,21 @@ class CompactionSpec extends SparkSuite {
     assert(countData() < filesBefore, "expected GC to remove unreferenced files")
     assert(t.read().count() === rowsBefore) // latest snapshot intact
     assert(t.log.read(t.log.latestVersion().get).files.nonEmpty)
+  }
+}
+
+/** A file commit protocol that fires the [[ConstraintSpec.arm]] hook on the
+  * driver once a write job's files are committed — a seam to land a
+  * concurrent snapshot commit between a writer's data write and its own
+  * snapshot commit.
+  */
+class RacingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(
+      job: org.apache.hadoop.mapreduce.JobContext,
+      commits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit = {
+    super.commitJob(job, commits)
+    ConstraintSpec.fire()
   }
 }

@@ -123,6 +123,41 @@ class ConstraintSpec extends SparkSuite {
     assert(t.head().files.isEmpty)
   }
 
+  test("a merge that loses every commit race gives up after the bound") {
+    val root = tmpDir("check-giveup")
+    val t = new LakeTable(spark, root)
+    t.create(LakeTable.baseSchema)
+    t.addConstraint("lang-allowed", "lang IN ('scala', 'java')")
+    val before = t.head().version
+    // the racer commits from inside every task that reads the batch and
+    // re-arms itself, so every merge attempt finds a newer head at commit
+    val racer = new LakeTable(spark, root)
+    def race(): Unit = {
+      val s = racer.head()
+      assert(racer.log.tryCommit(s.copy(version = s.version + 1, parent = s.version,
+        operation = "race")))
+      ConstraintSpec.arm(() => race())
+    }
+    ConstraintSpec.arm(() => race())
+    val e = try intercept[IllegalStateException] {
+      t.merge(ConstraintSpec.racingBatch(spark, Seq(
+        ev(1, "insert", "r1", "a", "scala", "ok"),
+        ev(2, "insert", "r1", "b", "cobol", "violates"))), "e", 0)
+    } finally ConstraintSpec.disarm()
+    assert(e.getMessage.contains(
+      s"merge(e, 0) lost ${LakeTable.maxCommitAttempts} commit races"), e.getMessage)
+    // every attempt writes its own data dir: exactly the bound of them
+    val attemptDirs = new java.io.File(root, "data").listFiles().map(_.getName)
+      .filter(_.matches("v\\d+-b0-.*"))
+    assert(attemptDirs.length === LakeTable.maxCommitAttempts, attemptDirs.toSeq)
+    val qdir = new java.io.File(root, "quarantine")
+    assert(!qdir.exists || qdir.listFiles().isEmpty,
+      s"lost attempts left quarantine output: ${Option(qdir.listFiles()).map(_.toSeq)}")
+    val ops = (before + 1 to t.head().version).map(v => t.log.read(v).operation)
+    assert(ops.nonEmpty && ops.forall(_ == "race"), ops)
+    assert(t.head().files.isEmpty)
+  }
+
   test("restore rolls constraints back with the rest of the state") {
     val t = new LakeTable(spark, tmpDir("check-restore"))
     t.create(LakeTable.baseSchema)
@@ -140,11 +175,14 @@ class ConstraintSpec extends SparkSuite {
 object ConstraintSpec {
   @volatile private var hook: Option[() => Unit] = None
 
-  /** Run `f` once, from inside the first task that reads a [[racingBatch]]. */
+  /** Run `f` once, from inside the first task that reads a [[racingBatch]]
+    * (or the next write job committed through a [[RacingCommitProtocol]]).
+    */
   def arm(f: () => Unit): Unit = hook = Some(f)
   def armed: Boolean = hook.nonEmpty
+  def disarm(): Unit = hook = None
 
-  private def fire(): Unit = synchronized {
+  private[lake] def fire(): Unit = synchronized {
     val h = hook
     hook = None
     h.foreach(_())

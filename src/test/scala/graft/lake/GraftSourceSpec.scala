@@ -171,6 +171,33 @@ class GraftSourceSpec extends SparkSuite {
       s"ad-hoc saves leaked into the ledger: ${t.head().ledger}")
   }
 
+  test("an overwrite with a bad frame fails before it truncates the table") {
+    val root = tmpDir("gwrite-bad")
+    Seq(("r1", "a", "v1"), ("r2", "b", "v2")).toDF("repo", "path", "content")
+      .write.format("graft").option("path", root).mode("append").save()
+    val t = new LakeTable(spark, root)
+    val version = t.head().version
+    val rows = t.read().collect().toSet
+    def assertUnchanged(): Unit = {
+      assert(t.head().version === version)
+      assert(t.read().collect().toSet === rows)
+    }
+    val unknown = intercept[IllegalArgumentException] {
+      Seq(("r9", "z", "vz", 1)).toDF("repo", "path", "content", "stray")
+        .write.format("graft").option("path", root).mode("overwrite").save()
+    }
+    assert(unknown.getMessage.contains("stray"), unknown.getMessage)
+    assertUnchanged()
+    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW gow_bad USING graft OPTIONS (path '$root')")
+    try {
+      val noKey = intercept[IllegalArgumentException] {
+        spark.sql("INSERT OVERWRITE gow_bad (repo, content) VALUES ('r9', 'vz')")
+      }
+      assert(noKey.getMessage.contains("key columns"), noKey.getMessage)
+    } finally spark.catalog.dropTempView("gow_bad")
+    assertUnchanged()
+  }
+
   test("SQL INSERT INTO routes through the committing write path") {
     spark.sql(
       s"CREATE OR REPLACE TEMPORARY VIEW graft_ins USING graft OPTIONS (path '${table.root}')")

@@ -11,10 +11,11 @@ import graft.events.EventLog
 
 /** Optimistic-concurrency coverage for the PLAIN-ROW write surfaces racing
   * the CDC merge: `append`/`applyChanges` ride the merge path (recompute on
-  * a lost commit race), `overwrite` has its own truncate-retry loop. The
-  * contract under races on DISJOINT keys: no commit is ever lost, history
-  * stays a serial parent chain, and the final state equals SOME serial order
-  * of the writers ([[SnapshotLog.tryCommit]] + per-writer retry).
+  * a lost commit race), and `overwrite` commits its truncate through the
+  * same commit loop before appending through the merge path. The contract
+  * under races on DISJOINT keys: no commit is ever lost, history stays a
+  * serial parent chain, and the final state equals SOME serial order of the
+  * writers ([[SnapshotLog.tryCommit]] + the table's one commit loop).
   */
 class MultiWriterSpec extends SparkSuite {
   import spark.implicits._
