@@ -6,13 +6,15 @@ package graft
   *
   *   sbt "runMain graft.QueryRun q_ngram_jaccard [q_more ...]"
   *
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  * GRAFT_EXPLAIN=1 to print the formatted plan before executing.
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: the
+  * host's available processors), GRAFT_EXPLAIN=1 to print the formatted plan
+  * before executing.
   */
 object QueryRun {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val explain = sys.env.getOrElse("GRAFT_EXPLAIN", "0") == "1"
     val reps = sys.env.getOrElse("GRAFT_REPS", "1").toInt
     val spark = BenchUtil.session(cpus)

@@ -556,8 +556,8 @@ object SparkEntry {
 /** DuckDB-SQL twins of the portable (sha256-hex) hash pipelines. Generated
   * rather than hand-written: the chain/banding structure must track the Spark
   * expressions in TextOps.fingerprintPortable and DedupOps.minhashSignature
-  * (portable=true) exactly — same window count, same slice bounds, same
-  * "i:" / "band|" key derivations, same hex-string min.
+  * exactly — same window count, same slice bounds, same "i:" / "band|" key
+  * derivations, same hex-string min.
   */
 private[graft] object OracleGen {
 
@@ -591,7 +591,7 @@ private[graft] object OracleGen {
        |  FROM t)""".stripMargin
 
   /** signature + banded + capped + candidate-pairs CTEs (mirrors
-    * DedupOps.minhashSignature/minhashLshPairs with portable=true).
+    * DedupOps.minhashSignature/minhashLshPairs).
     */
   private def lshCtes(numHashes: Int, bands: Int, shingleK: Int, maxBucket: Int): String = {
     val rows = numHashes / bands
@@ -1379,24 +1379,23 @@ object Queries {
   /** The synthetic corpus draws from a ~30-word vocabulary, so LSH buckets
     * degenerate; the cap bounds the quadratic step (real corpora shingle far
     * more diversely — the cap is the standard guard either way).
-    */
-  /** portable=true keys every hash on sha256 so the full LSH pipeline —
-    * signatures, band buckets, bucket cap, candidate pairs, est filter —
-    * replays bit-for-bit in the DuckDB oracle. 16 hashes × 8 bands (2 rows
-    * per band): candidate hit probability at j is 1-(1-j²)^8 — HIGHER near
-    * the 0.3 threshold than 32×8's 1-(1-j⁴)^8 — at half the hashing cost.
+    *
+    * Every hash is keyed on sha256, so the full LSH pipeline — signatures,
+    * band buckets, bucket cap, candidate pairs, est filter — replays
+    * bit-for-bit in the DuckDB oracle. 16 hashes × 8 bands (2 rows per
+    * band): candidate hit probability at j is 1-(1-j²)^8 — HIGHER near the
+    * 0.3 threshold than 32×8's 1-(1-j⁴)^8 — at half the hashing cost.
     */
   def minhashPairsQ(s: SparkSession, d: String): DataFrame =
     graft.ops.DedupOps.minhashLshPairs(documents(s, d), "text", "doc_id",
       numHashes = 16, bands = 8,
-      threshold = 0.3, maxBucket = 256, portable = true)
+      threshold = 0.3, maxBucket = 256)
 
   /** 4×16-bit banding guarantees candidate recall for Hamming ≤ 3
     * (pigeonhole); the query threshold matches the guaranteed bound — no
     * silent recall gap (the op REJECTS maxHamming ≥ bands). Wider thresholds
-    * take bands=8/16 and pay proportionally coarser buckets. Portable
-    * (sha256-nibble-vote) mode so the whole pipeline replays in DuckDB; the
-    * native-expression fast path keeps its ScalaTest oracle.
+    * take bands=8/16 and pay proportionally coarser buckets. The
+    * sha256-nibble votes let the whole pipeline replay in DuckDB.
     */
   def simhashPairsQ(s: SparkSession, d: String): DataFrame =
     graft.ops.DedupOps.simhashPairsPortable(documents(s, d), "text", "doc_id",

@@ -13,8 +13,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * formulations run as interpreted HOF lambdas (sha2 → substring → min fold
   * per element, with per-row intermediate arrays); these compute the same
   * digest chains in one static call inside whole-stage codegen. Each kernel
-  * is asserted EXACTLY equal to its HOF twin in OpsSpec, and the DuckDB
-  * oracle SQL is unchanged — only the Spark-side evaluation strategy moves.
+  * is asserted EXACTLY equal to its HOF twin in MinhashParitySpec, and the
+  * DuckDB oracle SQL is unchanged — only the Spark-side evaluation strategy
+  * moves.
   */
 private[graft] object Sha256 {
   private val md = new ThreadLocal[java.security.MessageDigest] {
@@ -42,7 +43,7 @@ private[graft] object Sha256 {
 /** Portable minhash signature over a shingle array: h_i(s) = 8-hex window i
   * of sha256(s) ‖ sha256(s+"#") ‖ …; sig[i] = min over shingles (lexicographic
   * on hex = UTF8 order), init "g" (sorts above every hex char). Mirrors
-  * DedupOps.minhashSignature(portable = true) exactly, including null-shingle
+  * DedupOps.minhashSignature exactly, including null-shingle
   * skipping (least() ignores nulls in the fold).
   */
 case class MinhashSigPortable(child: Expression, numHashes: Int) extends UnaryExpression {
@@ -172,9 +173,10 @@ object FingerprintPortable {
 
 /** Portable simhash fingerprint bits over a token array: per token the first
   * 16 hex chars of sha256(token) contribute 4 MSB-first ±1 votes per nibble;
-  * bit b = (vote sum > 0). Mirrors DedupOps.simhashPairsPortable's vote fold
-  * exactly, including its null semantics (a null token nulls the whole
-  * signature — zip_with against a null votes array yields null).
+  * bit b = (vote sum > 0). Equal to the interpreted HOF vote fold
+  * DedupOps.simhashPairsPortable replaced, including its null semantics (a
+  * null token nulls the whole signature — zip_with against a null votes
+  * array yields null).
   */
 case class SimhashBitsPortable(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)

@@ -3,16 +3,19 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.SimHash64.simhash64
 
 /** Deduplication operators for web-scale corpora. Scale design:
   *
   *  - exact: one hash-shuffle on the content digest; map-side partial agg.
-  *  - MinHash+LSH / SimHash: candidate generation is a shuffle on small
-  *    (band, bucket) keys — never an O(n²) cross join; the quadratic step
-  *    runs only inside buckets, whose size is bounded w.h.p. At 100 TB the
-  *    only caveat is degenerate buckets (boilerplate shingles) → cap bucket
-  *    size and route the overflow to a lineage quarantine (see `maxBucket`).
+  *  - near-duplicates (MinHash-LSH, SimHash, bottom-k n-gram Jaccard,
+  *    embedding sign-LSH) share one candidate-pairs core
+  *    ([[candidatePairs]]): candidate generation is a shuffle on small
+  *    bucket keys — never an O(n²) cross join; the quadratic step runs only
+  *    inside buckets, whose size is bounded w.h.p. At 100 TB the only caveat
+  *    is degenerate buckets (boilerplate shingles) → cap bucket size and
+  *    route the overflow to a lineage quarantine (see `maxBucket`). Each
+  *    operator has one hash space, the one the DuckDB oracle replays
+  *    (sha256-hex for text, seeded hyperplanes for embeddings).
   *  - pair canonicalization keeps (a < b) once, and connected components are
   *    approximated by min-id propagation within buckets (keep the min doc as
   *    canonical), which is the standard one-pass policy.
@@ -34,6 +37,57 @@ object DedupOps {
     lin.recordOp(op, "buckets_capped", r.getLong(1))
   }
 
+  /** The candidate-pairs core of every banded near-duplicate operator.
+    *
+    * `docs` is the per-doc frame: `__id` plus signature columns. With
+    * `persist` (the default) it is cached for its three uses (banding and
+    * the two payload re-joins) and released before returning, even on
+    * failure — no cached blocks leak across queries in a long-lived session.
+    * A frame that is only a scan plus a cast is cheaper to read twice than
+    * to cache: under AQE the cache build runs as Spark jobs of its own, and
+    * the embedding operator measured 10 jobs per query cached against 8
+    * uncached (perfbench `corpus_dedup`, 600 vectors, local[4]).
+    *
+    * `bucketKeys` bands the frame into one row per (doc, bucket): `__id`
+    * plus the bucket-key columns. With `cap = Some((op, maxBucket))` each
+    * bucket keeps its `maxBucket` smallest ids and the dropped rows are
+    * counted into `lineage` under `op`.
+    *
+    * Pairs are formed on bare ids by one self-join on the bucket keys with
+    * id_a < id_b, then deduped; only the deduped pair set gets the `payload`
+    * columns joined back, once per side with suffix `_a` / `_b` — shipping
+    * signatures or vectors through the bucket self-join made degenerate
+    * buckets quadratically expensive. `verify` scores and filters those
+    * rows, and the small result is materialized (localCheckpoint) before any
+    * cache goes.
+    */
+  private def candidatePairs(
+      docs: DataFrame, payload: Seq[String], bucketKeys: DataFrame => DataFrame,
+      cap: Option[(String, Int)] = None,
+      lineage: Option[graft.stream.Lineage] = None, persist: Boolean = true)(
+      verify: DataFrame => DataFrame): DataFrame = {
+    val d = if (persist) docs.persist() else docs
+    try {
+      val banded = bucketKeys(d)
+      val keys = banded.columns.toSeq.filter(_ != "__id")
+      val capped = cap.fold(banded) { case (op, maxBucket) =>
+        val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__id"))
+        val numbered = banded.withColumn("__bn", row_number().over(w))
+        lineage.foreach(recordCapStats(_, op, numbered, maxBucket))
+        numbered.filter(col("__bn") <= maxBucket)
+      }
+      def ids(side: String): DataFrame =
+        capped.select(keys.map(col) :+ col("__id").as(s"id_$side"): _*)
+      val pairs = ids("a").join(ids("b"), keys).filter(col("id_a") < col("id_b"))
+        .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
+      def withPayload(side: String): DataFrame =
+        d.select(col("__id").as(s"id_$side") +:
+          payload.map(c => col(c).as(s"${c}_$side")): _*)
+      verify(pairs.join(withPayload("a"), "id_a").join(withPayload("b"), "id_b"))
+        .localCheckpoint()
+    } finally if (persist) d.unpersist()
+  }
+
   /** Exact dedup (hash-groupBy on sha2 of content): returns survivors —
     * the min-id row per digest. Window over digest; salting unnecessary
     * because identical docs are rare per digest (and bounded).
@@ -46,152 +100,71 @@ object DedupOps {
       .drop("__rn", "__digest")
   }
 
-  /** MinHash signature: `numHashes` permutations approximated by seeded
-    * xxhash64; sig[i] = min over shingles of h_i(shingle).
-    *
-    * ONE traversal of the shingle array: fold an accumulator of `numHashes`
-    * running minima, deriving h_i(s) = xxhash64(i, xxhash64(s)) so each
-    * shingle is string-hashed once. The naive formulation — numHashes
-    * separate `array_min(transform(shingles, …))` columns — re-evaluates the
-    * whole shingling expression per hash function (HOF lambdas are
-    * interpreted and Catalyst re-inlines the alias), which measured 40×
-    * slower at 5k docs.
-    *
-    * portable = a hash space DuckDB can replicate bit-for-bit: the per-
-    * permutation hashes are 8-hex-char WINDOWS of `sha256(s) ‖
+  /** MinHash signature in a hash space DuckDB can replicate bit-for-bit:
+    * the per-permutation hashes are 8-hex-char WINDOWS of `sha256(s) ‖
     * sha256(s + "#") ‖ sha256(s + "##") ‖ …` — h_i(s) = combined[i*8 ..
     * i*8+8) — so ceil(numHashes/8) sha256 calls per shingle instead of
     * numHashes+1 (the previous `sha256("i:" + base)` chain cost 17 digests
     * per shingle at numHashes=16 and measured 33× slower at sf0.1). Min is
     * over 8-hex strings: same lexicographic order in both engines, and
     * sha256's bits are independent, so distinct windows behave as
-    * independent hash functions. Default = xxhash64 (codegen'd, ~10×
-    * cheaper still) for production paths.
+    * independent hash functions.
+    *
+    * Evaluated by a native codegen kernel
+    * ([[graft.functions.MinhashSigPortable]]) in ONE traversal of the
+    * shingle array, asserted exactly equal to the interpreted HOF fold in
+    * MinhashParitySpec; the fold paid per-element lambda dispatch plus an
+    * intermediate window array per shingle.
     */
-  def minhashSignature(text: Column, shingleK: Int, numHashes: Int,
-                       portable: Boolean = false): Column = {
-    val shingles = TextOps.shingles(text, shingleK)
-    if (portable)
-      // native codegen kernel — same digest chain and 8-hex-window minima,
-      // asserted exactly equal to the HOF fold in MinhashParitySpec; the
-      // interpreted fold paid per-element lambda dispatch plus an
-      // intermediate window array per shingle
-      graft.functions.MinhashSigPortable.column(shingles, numHashes)
-    else
-      aggregate(
-        transform(shingles, s => xxhash64(s)),
-        array_repeat(lit(Long.MaxValue), numHashes),
-        (acc, h) => zip_with(
-          acc,
-          transform(sequence(lit(0), lit(numHashes - 1)), i => xxhash64(i, h)),
-          (a, b) => least(a, b)))
-  }
+  def minhashSignature(text: Column, shingleK: Int, numHashes: Int): Column =
+    graft.functions.MinhashSigPortable.column(TextOps.shingles(text, shingleK), numHashes)
 
   /** MinHash LSH candidate pairs with estimated Jaccard ≥ `threshold`.
-    * bands × rowsPerBand = numHashes; est = fraction of matching signature
-    * positions. Returns (id_a, id_b, est_jaccard) with id_a < id_b.
-    *
-    * The signature frame is cached for its three uses (banding + two payload
-    * re-joins), the small pair result is materialized eagerly
-    * (localCheckpoint), and the cache is released before returning — no
-    * cached blocks leak across queries in a long-lived session.
+    * bands × rowsPerBand = numHashes; a band's bucket is the first 16 hex
+    * chars of sha256("band|" + its signature slice); est = fraction of
+    * matching signature positions. Returns (id_a, id_b, est_jaccard) with
+    * id_a < id_b. Buckets over `maxBucket` docs are capped (see
+    * [[candidatePairs]]).
     */
   def minhashLshPairs(
       df: DataFrame, textCol: String, idCol: String,
       shingleK: Int = 3, numHashes: Int = 32, bands: Int = 8,
       threshold: Double = 0.5, maxBucket: Int = 1000,
-      portable: Boolean = false,
       lineage: Option[graft.stream.Lineage] = None): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    val sig = df.select(col(idCol).as("__id"),
-      minhashSignature(col(textCol), shingleK, numHashes, portable).as("__sig"))
-      .persist()
-    try {
-    // band buckets: hash of each signature slice
     def bucketOf(b: Column): Column =
-      if (portable)
-        substring(sha2(concat(b.cast("string"), lit("|"),
-          array_join(slice(col("__sig"), b * rows + 1, lit(rows)), ",")), 256), 1, 16)
-      else xxhash64(b, to_json(slice(col("__sig"), b * rows + 1, lit(rows))))
-    val banded = sig.select(col("__id"), col("__sig"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), bucketOf(_))))
-      .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bucket")
-    // bound degenerate buckets (boilerplate) — dropped rows are quarantined
-    // BY COUNT into the lineage sidecar when one is supplied (no silent caps)
-    val wB = Window.partitionBy(col("__band"), col("__bucket")).orderBy(col("__id"))
-    val numbered = banded.withColumn("__bn", row_number().over(wB))
-    val capped = numbered.filter(col("__bn") <= maxBucket)
-    lineage.foreach(recordCapStats(_, "minhash_lsh", numbered, maxBucket))
-    // pair on bare ids (8 bytes each), join signatures back only for the
-    // deduped pair set — shipping two 32-long signature arrays through the
-    // bucket self-join made degenerate buckets quadratically expensive
-    val a = capped.select(col("__band"), col("__bucket"), col("__id").as("id_a"))
-    val b = capped.select(col("__band"), col("__bucket"), col("__id").as("id_b"))
-    val pairs = a.join(b, Seq("__band", "__bucket")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-    val withSigs = pairs
-      .join(sig.select(col("__id").as("id_a"), col("__sig").as("__sig_a")), "id_a")
-      .join(sig.select(col("__id").as("id_b"), col("__sig").as("__sig_b")), "id_b")
+      substring(sha2(concat(b.cast("string"), lit("|"),
+        array_join(slice(col("__sig"), b * rows + 1, lit(rows)), ",")), 256), 1, 16)
     val est = size(filter(zip_with(col("__sig_a"), col("__sig_b"), (x, y) => x === y),
       m => m)).cast("double") / numHashes
-    withSigs.withColumn("est_jaccard", round(est, 4))
-      .filter(col("est_jaccard") >= threshold)
-      .select("id_a", "id_b", "est_jaccard")
-      .localCheckpoint()
-    } finally sig.unpersist() // cache must not outlive the op, even on failure
+    candidatePairs(
+      df.select(col(idCol).as("__id"),
+        minhashSignature(col(textCol), shingleK, numHashes).as("__sig")),
+      payload = Seq("__sig"),
+      bucketKeys = _.select(col("__id"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)), bucketOf(_)))
+          .as(Seq("__band", "__bucket"))),
+      cap = Some(("minhash_lsh", maxBucket)), lineage = lineage) {
+      _.withColumn("est_jaccard", round(est, 4))
+        .filter(col("est_jaccard") >= threshold)
+        .select("id_a", "id_b", "est_jaccard")
+    }
   }
 
-  /** SimHash near-dup pairs: 64-bit fingerprint (native Catalyst expression),
-    * banded into `bands` equal-width bit slices — by pigeonhole, any pair at
-    * Hamming distance ≤ bands-1 shares at least one identical band, so the
-    * candidate stage has GUARANTEED recall for `maxHamming < bands` — then
-    * exact Hamming ≤ `maxHamming` on candidates via bit_count(xor).
+  /** SimHash near-dup pairs in a hash space DuckDB can replicate: per-token
+    * bit votes come from the first 16 hex chars (64 bits) of sha256(token) —
+    * each nibble contributes 4 MSB-first ±1 votes — and fingerprint bit b =
+    * (vote sum > 0). The 64 bits are banded into `bands` equal-width slices;
+    * by pigeonhole, any pair at Hamming distance ≤ bands-1 shares at least
+    * one identical band, so the candidate stage has GUARANTEED recall for
+    * `maxHamming < bands` — then exact Hamming ≤ `maxHamming` on candidates.
+    * The ENTIRE pipeline (votes → bits → band buckets → pairs → Hamming
+    * filter) replays in the SQL oracle.
     *
     * The recall/bucket-width dial: more bands → narrower band keys (64/bands
     * bits) → coarser buckets → more candidate pairs. `require` enforces the
-    * contract instead of silently returning an incomplete pair set. Pairs are
-    * generated on bare ids; fingerprints re-join only on the deduped pair set.
-    */
-  def simhashPairs(
-      df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, bands: Int = 4): DataFrame = {
-    require(64 % bands == 0, s"bands must divide 64, got $bands")
-    require(maxHamming < bands,
-      s"banding guarantees recall only for hamming < bands: maxHamming=$maxHamming needs > $maxHamming bands")
-    val width = 64 / bands
-    val mask = if (width == 64) lit(-1L) else lit((1L << width) - 1)
-    val sig = df.select(col(idCol).as("__id"),
-      simhash64(TextOps.wordTokens(col(textCol))).as("__sim"))
-      .persist()
-    try {
-    val banded = sig.select(col("__id"),
-      posexplode(array((0 until bands).map(i =>
-        shiftrightunsigned(col("__sim"), i * width).bitwiseAND(mask)): _*)))
-      .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bucket")
-    val a = banded.select(col("__band"), col("__bucket"), col("__id").as("id_a"))
-    val b = banded.select(col("__band"), col("__bucket"), col("__id").as("id_b"))
-    val pairs = a.join(b, Seq("__band", "__bucket")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-    pairs
-      .join(sig.select(col("__id").as("id_a"), col("__sim").as("__sim_a")), "id_a")
-      .join(sig.select(col("__id").as("id_b"), col("__sim").as("__sim_b")), "id_b")
-      .withColumn("hamming", bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming").cast("int").as("hamming"))
-      .localCheckpoint()
-    } finally sig.unpersist()
-  }
-
-  /** [[simhashPairs]] in a hash space DuckDB can replicate: per-token bit
-    * votes come from the first 16 hex chars (64 bits) of sha256(token) —
-    * each nibble contributes 4 MSB-first ±1 votes via a 16-entry literal
-    * lookup map — and fingerprint bit b = (vote sum > 0). Banding and exact
-    * Hamming verify are identical to the FNV-1a fast path, with the same
-    * pigeonhole recall guarantee for maxHamming < bands, so the ENTIRE
-    * pipeline (votes → bits → band buckets → pairs → Hamming filter)
-    * replays in the SQL oracle. The fast path ([[simhashPairs]], native
-    * codegen'd expression) remains for production use.
+    * contract instead of silently returning an incomplete pair set.
     */
   def simhashPairsPortable(
       df: DataFrame, textCol: String, idCol: String,
@@ -202,34 +175,27 @@ object DedupOps {
       s"banding guarantees recall only for hamming < bands: maxHamming=$maxHamming needs > $maxHamming bands")
     val width = 64 / bands
     // native codegen kernel for the sha256-nibble ±1 vote fold → 64 bits
-    // (asserted exactly equal to the HOF formulation in OpsSpec; the
-    // interpreted fold paid a 64-element zip_with per token)
+    // (asserted exactly equal to the HOF formulation in MinhashParitySpec;
+    // the interpreted fold paid a 64-element zip_with per token)
     val bits = graft.functions.SimhashBitsPortable.column(
       TextOps.wordTokens(col(textCol)))
-    val sig = df.select(col(idCol).as("__id"), bits.as("__bits")).persist()
-    try {
     // band value = MSB-first fold of the band's bit slice (injective within
     // an engine is all a join key needs; width ≤ 32 keeps the fold in-range)
     def bandVal(b: Column): Column =
       aggregate(slice(col("__bits"), b * width + 1, lit(width)),
         lit(0L), (acc, x) => acc * 2 + x)
-    val banded = sig.select(col("__id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), bandVal(_))))
-      .withColumnRenamed("pos", "__band").withColumnRenamed("col", "__bucket")
-    val a = banded.select(col("__band"), col("__bucket"), col("__id").as("id_a"))
-    val b = banded.select(col("__band"), col("__bucket"), col("__id").as("id_b"))
-    val pairs = a.join(b, Seq("__band", "__bucket")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     val ham = size(filter(zip_with(col("__bits_a"), col("__bits_b"),
       (x, y) => x =!= y), m => m))
-    pairs
-      .join(sig.select(col("__id").as("id_a"), col("__bits").as("__bits_a")), "id_a")
-      .join(sig.select(col("__id").as("id_b"), col("__bits").as("__bits_b")), "id_b")
-      .withColumn("hamming", ham.cast("int"))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-      .localCheckpoint()
-    } finally sig.unpersist()
+    candidatePairs(
+      df.select(col(idCol).as("__id"), bits.as("__bits")),
+      payload = Seq("__bits"),
+      bucketKeys = _.select(col("__id"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)), bandVal(_)))
+          .as(Seq("__band", "__bucket")))) {
+      _.withColumn("hamming", ham.cast("int"))
+        .filter(col("hamming") <= maxHamming)
+        .select("id_a", "id_b", "hamming")
+    }
   }
 
   /** Exact n-gram Jaccard on bottom-k-sketch candidates. Candidate stage:
@@ -246,10 +212,10 @@ object DedupOps {
     * raw-shingle Jaccard unless two distinct shingles collide in 64 bits:
     * P ≈ n²/2^65 per doc (n = shingles/doc; at n = 10^6 still < 10^-7), and
     * a collision only perturbs |A∩B|/|A∪B| by ±1 element. The per-doc hash
-    * arrays are computed ONCE into a persisted frame — the naive composition
-    * re-evaluated the tokenize→shingle→hash subtree in every downstream
-    * stage (interpreted-HOF re-inlining, ~3× the whole query's cost) — and
-    * the small pair result is materialized before unpersist.
+    * arrays are computed ONCE into the persisted per-doc frame — the naive
+    * composition re-evaluated the tokenize→shingle→hash subtree in every
+    * downstream stage (interpreted-HOF re-inlining, ~3× the whole query's
+    * cost).
     */
   def ngramJaccardPairs(
       df: DataFrame, textCol: String, idCol: String,
@@ -271,17 +237,6 @@ object DedupOps {
       .select(col("__id"),
         col("__sk").getField("bottom").as("__hb"),
         col("__sk").getField("hl").as("__hl"))
-      .persist()
-    try {
-    val banded = hs.select(col("__id"), explode(col("__hb")).as("__bucket"))
-    val wB = Window.partitionBy(col("__bucket")).orderBy(col("__id"))
-    val numbered = banded.withColumn("__bn", row_number().over(wB))
-    val capped = numbered.filter(col("__bn") <= maxBucket)
-    lineage.foreach(recordCapStats(_, "ngram_jaccard", numbered, maxBucket))
-    val a = capped.select(col("__bucket"), col("__id").as("id_a"))
-    val b = capped.select(col("__bucket"), col("__id").as("id_b"))
-    val cand = a.join(b, Seq("__bucket")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     val inter = graft.functions.SortedLongIntersectSize.column(
       col("__hl_a"), col("__hl_b"))
     // size prefilter (classic set-similarity length filter): jac ≥ t implies
@@ -291,16 +246,15 @@ object DedupOps {
     val sizeOk =
       size(col("__hl_a")).cast("double") >= lit(threshold) * size(col("__hl_b")) &&
       size(col("__hl_b")).cast("double") >= lit(threshold) * size(col("__hl_a"))
-    cand
-      .join(hs.select(col("__id").as("id_a"), col("__hl").as("__hl_a")), "id_a")
-      .join(hs.select(col("__id").as("id_b"), col("__hl").as("__hl_b")), "id_b")
-      .filter(sizeOk)
-      .withColumn("jaccard", round(inter.cast("double") /
-        (size(col("__hl_a")) + size(col("__hl_b")) - inter), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-      .localCheckpoint()
-    } finally hs.unpersist()
+    candidatePairs(hs, payload = Seq("__hl"),
+      bucketKeys = _.select(col("__id"), explode(col("__hb")).as("__bucket")),
+      cap = Some(("ngram_jaccard", maxBucket)), lineage = lineage) {
+      _.filter(sizeOk)
+        .withColumn("jaccard", round(inter.cast("double") /
+          (size(col("__hl_a")) + size(col("__hl_b")) - inter), 4))
+        .filter(col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    }
   }
 
   /** Canonicalize near-duplicate clusters: every doc appearing in a pair is
@@ -473,18 +427,15 @@ object DedupOps {
       f"sign-LSH geometry (planes=$usePlanes, tables=$tables) has candidate " +
         f"recall $achieved%.3f < $minRecall%.2f for pairs at cosine $threshold%.2f; " +
         "use fewer planes / more tables (or planes=0 to derive)")
-    val vecs = df.select(col(idCol).as("__id"),
-      Similarity.asDoubleVec(col(vecCol)).as("__v"))
-    val bucketed = Similarity.signBucketsMulti(df, vecCol, idCol, usePlanes, tables, seed)
-    val a = bucketed.select(col("__bucket"), col("__id").as("id_a"))
-    val b = bucketed.select(col("__bucket"), col("__id").as("id_b"))
-    val pairs = a.join(b, Seq("__bucket")).filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-    pairs
-      .join(vecs.select(col("__id").as("id_a"), col("__v").as("__va")), "id_a")
-      .join(vecs.select(col("__id").as("id_b"), col("__v").as("__vb")), "id_b")
-      .withColumn("cosine", round(Similarity.cosine(col("__va"), col("__vb")), 6))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
+    candidatePairs(
+      df.select(col(idCol).as("__id"), Similarity.asDoubleVec(col(vecCol)).as("__v")),
+      payload = Seq("__v"),
+      bucketKeys = Similarity.signBucketsMulti(_, "__v", "__id", usePlanes, tables, seed)
+        .select("__id", "__bucket"),
+      persist = false) {
+      _.withColumn("cosine", round(Similarity.cosine(col("__v_a"), col("__v_b")), 6))
+        .filter(col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
+    }
   }
 }

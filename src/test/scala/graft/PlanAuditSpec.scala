@@ -207,8 +207,65 @@ class PlanAuditSpec extends SparkSuite {
     val df = Tables.documents(spark, sf).select(
       graft.ops.TextOps.tokenCountWs(col("text")),
       sha2(col("text"), 256),
-      graft.functions.SimHash64.simhash64(graft.ops.TextOps.wordTokens(col("text"))))
+      graft.functions.SimhashBitsPortable.column(graft.ops.TextOps.wordTokens(col("text"))))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1)"), plan) // single codegen stage over the scan
+  }
+
+  test("near-dup pair operators shuffle only bucket keys and ids below the pair dedup") {
+    // Pairs are formed on bare ids: no signature, bit, hash-set or vector
+    // payload may ride through the bucket self-join or the pair dedup. The
+    // operators return a checkpointed frame, so capture the plans they run.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import graft.ops.DedupOps
+    object Walk extends AdaptiveSparkPlanHelper
+    val keysAndIds = Set("__band", "__bucket", "__id", "id_a", "id_b")
+    def pairDedups(p: SparkPlan): Seq[SparkPlan] = Walk.collect(p) {
+      case a: HashAggregateExec if a.groupingExpressions.map(_.name) ==
+          Seq("id_a", "id_b") => a
+    }
+    val docs = Tables.documents(spark, sf)
+    val ops = Seq[(String, () => Unit)](
+      "minhashLshPairs" -> (() => DedupOps.minhashLshPairs(docs, "text", "doc_id", threshold = 0.3)),
+      "simhashPairsPortable" -> (() => DedupOps.simhashPairsPortable(docs, "text", "doc_id")),
+      "ngramJaccardPairs" -> (() => DedupOps.ngramJaccardPairs(docs, "text", "doc_id", threshold = 0.3)),
+      "embeddingNearDupPairs" -> (() => DedupOps.embeddingNearDupPairs(
+        Tables.embeddings(spark, sf), "embedding", "vec_id", threshold = 0.5)))
+    for ((name, run) <- ops) {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+          plans.add(qe.executedPlan)
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        run()
+        // listener delivery is async: wait for the pair query's plan
+        var spins = 0
+        while (!plans.asScala.exists(pairDedups(_).nonEmpty) && spins < 100) {
+          spins += 1; Thread.sleep(100)
+        }
+      } finally spark.listenerManager.unregister(listener)
+      val dedups = plans.asScala.toSeq.flatMap(pairDedups)
+      assert(dedups.nonEmpty, s"$name: no (id_a, id_b) dedup in the captured plans")
+      dedups.foreach { d =>
+        val shuffled = Walk.collect(d) {
+          case e: Exchange => e.output.map(_.name)
+          case r: ReusedExchangeExec => r.output.map(_.name)
+        }
+        assert(shuffled.nonEmpty, s"$name: no exchange below the pair dedup\n$d")
+        shuffled.foreach { cols =>
+          assert(cols.toSet.subsetOf(keysAndIds),
+            s"$name: exchange carries ${cols.mkString(", ")}\n$d")
+        }
+      }
+    }
   }
 }

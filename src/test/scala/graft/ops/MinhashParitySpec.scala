@@ -16,7 +16,7 @@ class MinhashParitySpec extends SparkSuite {
   }
 
   /** h_i(s) = 8-hex window i of sha256(s) ‖ sha256(s + "#") ‖ … — must track
-    * DedupOps.minhashSignature(portable = true) exactly.
+    * DedupOps.minhashSignature exactly.
     */
   private def windowHash(s: String, i: Int): String = {
     val digest = shaHex(if (i / 8 == 0) s else s + ("#" * (i / 8)))
@@ -35,7 +35,7 @@ class MinhashParitySpec extends SparkSuite {
     val sh = df.select(TextOps.shingles(col("text"), 3).as("s")).as[Seq[String]].head()
     assert(sh === Seq("alpha beta gamma"),
       sh.map(s => s.getBytes("UTF-8").map("%02x".format(_)).mkString).toString)
-    val sig = df.select(DedupOps.minhashSignature(col("text"), 3, 4, portable = true).as("g"))
+    val sig = df.select(DedupOps.minhashSignature(col("text"), 3, 4).as("g"))
       .as[Seq[String]].head()
     val want = (0 until 4).map(i => windowHash("alpha beta gamma", i))
     assert(sig === want, s"got $sig want $want")
@@ -97,7 +97,7 @@ class MinhashParitySpec extends SparkSuite {
         (acc, t) => zip_with(acc, tokenVotes(t), (a, b) => a + b)),
       v => when(v > 0, lit(1)).otherwise(lit(0)))
     val rows = df.select(
-      DedupOps.minhashSignature(col("text"), 3, numHashes, portable = true),
+      DedupOps.minhashSignature(col("text"), 3, numHashes),
       hofSig,
       graft.functions.SimhashBitsPortable.column(TextOps.wordTokens(col("text"))),
       hofBits)
@@ -147,7 +147,7 @@ class MinhashParitySpec extends SparkSuite {
       "a b c d e f g h i j k l m n o p q r s t u v w x y z")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val got = df.select(col("doc_id"),
-      DedupOps.minhashSignature(col("text"), 3, 32, portable = true).as("sig"))
+      DedupOps.minhashSignature(col("text"), 3, 32).as("sig"))
       .as[(Long, Seq[String])].collect().toMap
     for ((t, i) <- texts.zipWithIndex) {
       val want = expectedSig(t, 3, 32)

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.functions.SimHash64
+import graft.functions.SimhashBitsPortable
 
 class TextOpsSpec extends SparkSuite {
   import spark.implicits._
@@ -51,30 +51,32 @@ class TextOpsSpec extends SparkSuite {
 class SimHashSpec extends SparkSuite {
   import spark.implicits._
 
-  test("simhash64: identical token sets agree; near sets are close in Hamming") {
+  test("simhash bits: identical token sets agree; near sets are close in Hamming") {
     val df = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again and again today"),
       (2L, "the quick brown fox jumps over the lazy dog again and again tonight"),
       (3L, "completely unrelated legal boilerplate paragraph about insurance")
     ).toDF("id", "text")
     val sims = df.select(col("id"),
-      SimHash64.simhash64(TextOps.wordTokens(col("text"))).as("s"))
-      .as[(Long, Long)].collect().toMap
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
+      SimhashBitsPortable.column(TextOps.wordTokens(col("text"))).as("s"))
+      .as[(Long, Seq[Int])].collect().toMap
+    assert(sims.values.forall(_.size === 64))
+    def ham(a: Seq[Int], b: Seq[Int]) = a.zip(b).count { case (x, y) => x != y }
     assert(ham(sims(1L), sims(2L)) < ham(sims(1L), sims(3L)))
     assert(ham(sims(1L), sims(2L)) <= 12)
   }
 
-  test("simhash64 stays in whole-stage codegen (no fallback)") {
+  test("simhash bits stay in whole-stage codegen (no fallback)") {
     // spark.range → Project goes through WholeStageCodegen; a LocalTableScan
     // wouldn't exercise doGenCode at all
     val df = spark.range(3).select(
-      SimHash64.simhash64(split(concat(lit("a b c "), col("id")), " ")).as("s"))
+      SimhashBitsPortable.column(split(concat(lit("a b c "), col("id")), " ")).as("s"))
     val plan = df.queryExecution.executedPlan.toString
-    // "*(1) Project [simhash64(...)]" — the * marks WholeStageCodegen in the
-    // simple plan string; no fallback/interpreted Project node
-    assert(plan.contains("*(1) Project [simhash64"), plan)
-    assert(df.as[Long].collect().length === 3)
+    // "*(1) Project [simhash_bits_portable(...)]" — the * marks
+    // WholeStageCodegen in the simple plan string; no fallback/interpreted
+    // Project node
+    assert(plan.contains("*(1) Project [simhash_bits_portable"), plan)
+    assert(df.as[Seq[Int]].collect().length === 3)
   }
 }
 
@@ -133,19 +135,25 @@ class DedupOpsSpec extends SparkSuite {
   test("bucket caps are not silent: degenerate corpus lands drop counts in lineage") {
     // 40 identical docs with maxBucket=10: every bucket holds all 40 ids, so
     // each cap drops 30 rows — the counters MUST fire
-    val degenerate = (0L until 40L).map(i => (i, "all docs share this exact text"))
-      .toDF("doc_id", "text")
+    val (docCount, maxBucket) = (40, 10)
+    val text = "all docs share this exact text"
+    val degenerate = (0L until docCount).map(i => (i, text)).toDF("doc_id", "text")
     val lin = new graft.stream.Lineage(spark, tmpDir("caplin"))
     DedupOps.ngramJaccardPairs(degenerate, "text", "doc_id",
-      maxBucket = 10, lineage = Some(lin)).collect()
+      maxBucket = maxBucket, lineage = Some(lin)).collect()
     DedupOps.minhashLshPairs(degenerate, "text", "doc_id",
-      maxBucket = 10, lineage = Some(lin)).collect()
+      maxBucket = maxBucket, lineage = Some(lin)).collect()
     lin.flush()
     val rows = lin.read().as[(String, Long, String, Long)].collect()
       .map(r => (r._1, r._3) -> r._4).toMap
-    for (op <- Seq("ngram_jaccard", "minhash_lsh")) {
-      assert(rows((op, "rows_dropped_by_bucket_cap")) > 0, s"$op drop count missing")
-      assert(rows((op, "buckets_capped")) > 0, s"$op capped-bucket count missing")
+    // buckets per doc, in plain Scala: ngram keys on the bottomK = 8
+    // smallest distinct 3-shingle hashes; minhash on its 8 (default) bands
+    val shingles = text.split(" ").sliding(3).map(_.mkString(" ")).toSet
+    val bucketsPerDoc = Map("ngram_jaccard" -> math.min(8, shingles.size), "minhash_lsh" -> 8)
+    for ((op, buckets) <- bucketsPerDoc) {
+      assert(rows((op, "rows_dropped_by_bucket_cap")) === buckets * (docCount - maxBucket),
+        s"$op drop count")
+      assert(rows((op, "buckets_capped")) === buckets, s"$op capped-bucket count")
     }
     // and a clean corpus records zeros, not absence
     val lin2 = new graft.stream.Lineage(spark, tmpDir("caplin2"))
@@ -183,7 +191,7 @@ class DedupOpsSpec extends SparkSuite {
   }
 
   test("simhash pairs find near-dups, skip unrelated") {
-    val pairs = DedupOps.simhashPairs(docs, "text", "doc_id", maxHamming = 8, bands = 16)
+    val pairs = DedupOps.simhashPairsPortable(docs, "text", "doc_id", maxHamming = 8, bands = 16)
       .as[(Long, Long, Int)].collect().map(p => (p._1, p._2)).toSet
     assert(pairs.contains((0L, 1L)))
     assert(!pairs.exists { case (a, b) => Set(a, b).contains(4L) })
@@ -191,7 +199,7 @@ class DedupOpsSpec extends SparkSuite {
 
   test("simhash banding contract: maxHamming ≥ bands is rejected; mid-distance pair guaranteed at 8 bands") {
     intercept[IllegalArgumentException] {
-      DedupOps.simhashPairs(docs, "text", "doc_id", maxHamming = 10, bands = 4)
+      DedupOps.simhashPairsPortable(docs, "text", "doc_id", maxHamming = 10, bands = 4)
     }
     // adversarial fixture: deterministically search word-substituted variants
     // of a base sentence for one whose simhash lands at Hamming distance 4-7
@@ -202,16 +210,17 @@ class DedupOpsSpec extends SparkSuite {
     val variants = (0 until 200).map(i => (i + 1).toLong -> base.replace("home", s"word$i"))
     val all = (Seq(0L -> base) ++ variants).toDF("doc_id", "text")
     val sims = all.select(col("doc_id"),
-      SimHash64.simhash64(TextOps.wordTokens(col("text"))).as("s"))
-      .as[(Long, Long)].collect().toMap
+      SimhashBitsPortable.column(TextOps.wordTokens(col("text"))).as("s"))
+      .as[(Long, Seq[Int])].collect().toMap
+    def ham(a: Seq[Int], b: Seq[Int]) = a.zip(b).count { case (x, y) => x != y }
     val midId = sims.collectFirst {
-      case (id, s) if id != 0L && (4 to 7).contains(java.lang.Long.bitCount(s ^ sims(0L))) => id
+      case (id, s) if id != 0L && (4 to 7).contains(ham(s, sims(0L))) => id
     }
     assert(midId.nonEmpty, "fixture search found no distance-4..7 variant; widen the search")
     val mid = midId.get
-    val dist = java.lang.Long.bitCount(sims(mid) ^ sims(0L))
+    val dist = ham(sims(mid), sims(0L))
     val two = Seq(0L -> base, mid -> (base.replace("home", s"word${mid - 1}"))).toDF("doc_id", "text")
-    val got = DedupOps.simhashPairs(two, "text", "doc_id", maxHamming = 7, bands = 8)
+    val got = DedupOps.simhashPairsPortable(two, "text", "doc_id", maxHamming = 7, bands = 8)
       .as[(Long, Long, Int)].collect()
     assert(got.length === 1 && got(0)._3 === dist,
       s"guaranteed pair at distance $dist missing: ${got.toSeq}")
