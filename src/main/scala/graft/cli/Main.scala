@@ -6,22 +6,22 @@ import graft.events.{EventLog, ReplayOracle}
 import graft.lake.LakeTable
 import graft.stream.{CdcIngest, Lineage}
 
-/** spark-submit / sbt entrypoint for the CDC engine.
-  *
-  * Usage:
-  *   generate <eventsDir> <numEvents> <numFiles> [seed]
-  *   ingest   <eventsDir> <tableRoot> <checkpointDir> [saltBuckets] [epoch]
-  *   e2e      <workDir> [numEvents]         — generate→ingest→verify vs oracle
-  *   show     <tableRoot>                   — print snapshot + sample rows
-  *   history  <tableRoot>                   — commit audit log (DESCRIBE HISTORY analog)
-  *   restore  <tableRoot> <version>         — roll back to a retained snapshot (RESTORE analog)
-  *   feed     <tableRoot> <checkpointDir> [startingVersion] [maxVersionsPerTrigger]
-  *            — drain the committed change feed (graft-changes streaming
-  *              source) to the console; re-run with the same checkpoint to
-  *              get only NEW versions
-  *   docs                                   — markdown schema docs (cli/docs.py parity)
-  */
+/** spark-submit / sbt entrypoint for the CDC engine; commands in [[Main.usage]]. */
 object Main {
+  val usage: String =
+    """Usage:
+      |  generate <eventsDir> <numEvents> <numFiles> [seed]
+      |  ingest   <eventsDir> <tableRoot> <checkpointDir> [epoch]
+      |  e2e      <workDir> [numEvents]         — generate→ingest→verify vs oracle
+      |  show     <tableRoot>                   — print snapshot + sample rows
+      |  history  <tableRoot>                   — commit audit log (DESCRIBE HISTORY analog)
+      |  restore  <tableRoot> <version>         — roll back to a retained snapshot (RESTORE analog)
+      |  feed     <tableRoot> <checkpointDir> [startingVersion] [maxVersionsPerTrigger]
+      |           — drain the committed change feed (graft-changes streaming
+      |             source) to the console; re-run with the same checkpoint to
+      |             get only NEW versions
+      |  docs                                   — markdown schema docs (cli/docs.py parity)""".stripMargin
+
   def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -46,14 +46,13 @@ object Main {
       println(s"wrote ${cfg.numEvents} events (+dups) to $dir in $k segments")
       spark.stop()
 
-    case "ingest" :: eventsDir :: tableRoot :: cp :: rest =>
+    case "ingest" :: eventsDir :: tableRoot :: cp :: rest if rest.size <= 1 =>
       val spark = session()
-      val salt = rest.headOption.map(_.toInt).getOrElse(0)
-      val epoch = rest.drop(1).headOption.getOrElse("run0")
+      val epoch = rest.headOption.getOrElse("run0")
       val lin = new Lineage(spark, tableRoot)
       spark.streams.addListener(lin.listener(epoch))
       val ingest = new CdcIngest(spark, tableRoot, eventsDir, cp,
-        epoch = epoch, saltBuckets = salt, lineage = Some(lin))
+        epoch = epoch, lineage = Some(lin))
       val stats = ingest.runToCompletion()
       stats.foreach(s => println(
         s"batch=${s.batchId} v=${s.version} seen=${s.eventsSeen} dupDropped=${s.duplicatesDropped} " +
@@ -67,7 +66,7 @@ object Main {
       val cfg = EventLog.Config(numEvents = n, schemaChangeLsns = Seq(n / 3, 2 * n / 3))
       EventLog.write(spark, cfg, s"$work/events", 8)
       val ingest = new CdcIngest(spark, s"$work/table", s"$work/events", s"$work/cp",
-        saltBuckets = 4, lineage = Some(new Lineage(spark, s"$work/table")))
+        lineage = Some(new Lineage(spark, s"$work/table")))
       val stats = ingest.runToCompletion()
       val got = ingest.table.read()
       val want = ReplayOracle.expected(spark, EventLog.generate(spark, cfg).collect().toSeq)
@@ -135,6 +134,6 @@ object Main {
       println(Schemas.toMarkdown(graft.lake.LakeTable.baseSchema, "lake-table (north rule)"))
 
     case other =>
-      System.err.println(s"unknown command: $other"); sys.exit(2)
+      System.err.println(s"bad command line: ${other.mkString(" ")}\n$usage"); sys.exit(2)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
   *
   * Events are keyed `(repo, path)` with a globally monotonic `lsn` and an
   * `event_id` tiebreak making the order total. Repo choice follows a Zipf-ish
-  * skew so hot-key salting is actually exercised. A configurable fraction of
+  * skew so hot keys are actually exercised. A configurable fraction of
   * events is delivered twice (exactly-once test surface). `schema_change`
   * events carry `{"addColumn":{"name":...,"type":...}}`; subsequent events
   * may carry values for added columns in the `extra` JSON payload.

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * dominictarro/Borderlands) with an explicit total order `(lsn, tiebreak)`,
   * which is the only way they stay deterministic on a shuffled cluster.
   *
-  * Scale notes: each kernel is a single shuffle on the key columns; the
-  * window dedup is the hot path of the MERGE engine, so [[Salting]] provides
-  * a two-phase variant for hot keys.
+  * Scale notes: each kernel is a single shuffle on the key columns. The
+  * MERGE engine does not call them: its fused merge window applies the same
+  * last-wins rule once, inside its single range shuffle.
   */
 object ChangeOps {
 
@@ -30,23 +30,6 @@ object ChangeOps {
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-  }
-
-  /** Same semantics as [[dedupLastWins]] via hash aggregation:
-    * `max_by(struct(row), struct(ordCols))`. The winning property at scale is
-    * PARTIAL AGGREGATION — duplicates of a hot key collapse map-side before
-    * the shuffle, so a key with 10^7 events ships O(#map-partitions) rows,
-    * not 10^7. This makes explicit salting unnecessary for dedup (it remains
-    * available for the window formulation, which some callers need for
-    * rank > 1 semantics). Requires a total `ordCols` order (struct compare is
-    * lexicographic).
-    */
-  def dedupLastWinsAgg(df: DataFrame, keyCols: Seq[String], ordCols: Seq[Column]): DataFrame = {
-    val payload = struct(df.columns.map(col).toSeq: _*)
-    val ord = struct(ordCols: _*)
-    df.groupBy(keyCols.map(col): _*)
-      .agg(max_by(payload, ord).as("__w"))
-      .select(col("__w.*"))
   }
 
   /** Running ordinal per key = the reference's `calculate_case_id`

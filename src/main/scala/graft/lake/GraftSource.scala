@@ -218,7 +218,7 @@ final class GraftResolvedSnapshotRelation(
   override val schema: StructType = snap.schema
 
   override def buildScan(requiredColumns: Array[String]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val f = table.scanLive(snap, snap.files)
+    val f = table.readAt(snap)
     if (requiredColumns.isEmpty) f.select().rdd.map(_ => org.apache.spark.sql.Row())
     else f.select(requiredColumns.toSeq.map(f.col): _*).rdd
   }

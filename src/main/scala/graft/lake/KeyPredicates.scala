@@ -71,7 +71,7 @@ private[graft] object KeyPredicates {
 
   /** Bounds for string-statted and long-statted prunable columns, extracted
     * from one predicate ([[extractTyped]]); consumed by
-    * `LakeTable.pruneFiles`.
+    * `LakeTable.pruneEntries`.
     */
   final case class TypedBounds(strings: Map[String, Bound],
                                longs: Map[String, LongBound])
@@ -214,42 +214,5 @@ private[graft] object KeyPredicates {
     }
     visit(pred)
     Equalities(s, l)
-  }
-
-  /** Same extraction over data-source `Filter`s (the pre-translated predicate
-    * shapes a `PrunedFilteredScan` receives) — the conjunction of `filters`
-    * is the predicate; same fail-open contract.
-    */
-  def fromSourceFilters(filters: Seq[org.apache.spark.sql.sources.Filter],
-                        columns: Seq[String]): Map[String, Bound] = {
-    import org.apache.spark.sql.sources._
-    import LakeTable.{utf8Compare => cmp}
-    var bounds = columns.map(_ -> unbounded).toMap
-    def str(v: Any): Option[String] = v match {
-      case s: String => Some(s)
-      case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-      case _ => None
-    }
-    def visit(f: Filter): Unit = f match {
-      case And(l, r) => visit(l); visit(r)
-      case EqualTo(a, v) if bounds.contains(a) && str(v).isDefined =>
-        bounds += a -> bounds(a).tightenLower(str(v).get).tightenUpper(str(v).get)
-      case In(a, vs) if bounds.contains(a) && vs.nonEmpty && vs.forall(str(_).isDefined) =>
-        val lits = vs.toSeq.map(str(_).get)
-        bounds += a -> bounds(a)
-          .tightenLower(lits.reduce((x, y) => if (cmp(x, y) <= 0) x else y))
-          .tightenUpper(lits.reduce((x, y) => if (cmp(x, y) >= 0) x else y))
-      case GreaterThan(a, v) if bounds.contains(a) =>
-        str(v).foreach(s => bounds += a -> bounds(a).tightenLower(s))
-      case GreaterThanOrEqual(a, v) if bounds.contains(a) =>
-        str(v).foreach(s => bounds += a -> bounds(a).tightenLower(s))
-      case LessThan(a, v) if bounds.contains(a) =>
-        str(v).foreach(s => bounds += a -> bounds(a).tightenUpper(s))
-      case LessThanOrEqual(a, v) if bounds.contains(a) =>
-        str(v).foreach(s => bounds += a -> bounds(a).tightenUpper(s))
-      case _ => () // unknown shape: no constraint (fail open)
-    }
-    filters.foreach(visit)
-    bounds
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
-import graft.kernel.{ChangeOps, Salting}
 
 /** Per-merge lineage counts (SURVEY.md §7.6). */
 final case class MergeStats(
@@ -371,16 +370,6 @@ final class LakeTable(spark: SparkSession, val root: String,
     (strings, longs)
   }
 
-  /** Files of `snap` that can hold a row inside `bounds` (manifest-level
-    * pruning; shared by [[readWhere]] and the `format("graft")` relation).
-    * A column missing from a file's stats contributes no constraint for
-    * that file (fail open — e.g. manifests written before the column was
-    * statted, or before the column existed at all).
-    */
-  private[lake] def pruneFiles(
-      snap: Snapshot, bounds: KeyPredicates.TypedBounds): Seq[DataFileEntry] =
-    pruneEntries(snap.files, bounds)
-
   /** Re-key extracted bounds from LOGICAL to PHYSICAL column names for stat
     * probing (identity when nothing is renamed).
     */
@@ -391,8 +380,12 @@ final class LakeTable(spark: SparkSession, val root: String,
       b.strings.map { case (c, v) => snap.physicalOf(c) -> v },
       b.longs.map { case (c, v) => snap.physicalOf(c) -> v })
 
-  /** [[pruneFiles]] over an explicit entry list (header-only reads pass the
-    * entries of just the summary-surviving manifests).
+  /** Entries that can hold a row inside `bounds` (manifest-level pruning;
+    * shared by [[readWhere]] and the `format("graft")` file index, which
+    * pass the entries of just the summary-surviving manifests). A column
+    * missing from a file's stats contributes no constraint for that file
+    * (fail open — e.g. manifests written before the column was statted, or
+    * before the column existed at all).
     */
   private[lake] def pruneEntries(
       entries: Seq[DataFileEntry], bounds: KeyPredicates.TypedBounds)
@@ -406,15 +399,6 @@ final class LakeTable(spark: SparkSession, val root: String,
         b.overlaps(mn, mx)
       }
     }
-
-  /** String-bounds-only overload (pre-typed-stats callers). */
-  private[lake] def pruneFiles(
-      snap: Snapshot, bounds: Map[String, KeyPredicates.Bound]): Seq[DataFileEntry] =
-    pruneFiles(snap, KeyPredicates.TypedBounds(bounds, Map.empty))
-
-  /** Live rows of selected files — the `format("graft")` relation's scan. */
-  private[lake] def scanLive(snap: Snapshot, entries: Seq[DataFileEntry]): DataFrame =
-    readAt(snap, entries)
 
   /** Time travel: the table as of `version` (live rows, engine columns
     * hidden, the schema AS OF that version). Any still-unexpired snapshot is
@@ -543,7 +527,8 @@ final class LakeTable(spark: SparkSession, val root: String,
         operation = s"restore(v$version)"))
     }
 
-  private def readAt(snap: Snapshot): DataFrame =
+  /** Live rows of `snap` — also the resolved `format("graft")` relation's scan. */
+  private[lake] def readAt(snap: Snapshot): DataFrame =
     readAt(snap, snap.files)
 
   /** Live rows of `entries` under `snap`'s schema, engine columns hidden —
@@ -778,10 +763,9 @@ final class LakeTable(spark: SparkSession, val root: String,
     * NOT land). Replayable writers (streams) keep the default and get
     * ledger idempotence per (epoch, batchId).
     */
-  def merge(batch: DataFrame, epoch: String, batchId: Long, saltBuckets: Int = 0,
+  def merge(batch: DataFrame, epoch: String, batchId: Long,
             recordInLedger: Boolean = true, operation: String = "merge"): MergeStats =
-    mergeWithRetry(batch, epoch, batchId, saltBuckets, recordInLedger, operation,
-      deferred = false)
+    mergeWithRetry(batch, epoch, batchId, recordInLedger, operation, deferred = false)
 
   /** MERGE-ON-READ twin of [[merge]] (Hudi log-file / Iceberg v2
     * merge-on-read analog): apply the batch WITHOUT reading or rewriting any
@@ -807,14 +791,13 @@ final class LakeTable(spark: SparkSession, val root: String,
     * shadowed rows exist).
     */
   def mergeDeferred(batch: DataFrame, epoch: String, batchId: Long,
-                    saltBuckets: Int = 0, recordInLedger: Boolean = true,
+                    recordInLedger: Boolean = true,
                     operation: String = "merge-deferred"): MergeStats =
-    mergeWithRetry(batch, epoch, batchId, saltBuckets, recordInLedger, operation,
-      deferred = true)
+    mergeWithRetry(batch, epoch, batchId, recordInLedger, operation, deferred = true)
 
   private def mergeWithRetry(batch: DataFrame, epoch: String, batchId: Long,
-                             saltBuckets: Int, recordInLedger: Boolean,
-                             operation: String, deferred: Boolean): MergeStats = {
+                             recordInLedger: Boolean, operation: String,
+                             deferred: Boolean): MergeStats = {
     // Optimistic concurrency: on a lost commit race the merge RECOMPUTES
     // against the new head rather than rebasing its output metadata. A
     // metadata-only rebase is UNSOUND for a merge: output rows are stamped
@@ -828,8 +811,7 @@ final class LakeTable(spark: SparkSession, val root: String,
     commitLoop(s"$name($epoch, $batchId)") { snap =>
       if (recordInLedger && snap.ledger.contains(epoch, batchId))
         Some(noOp(epoch, batchId, snap))
-      else mergeOnce(snap, batch, epoch, batchId, saltBuckets, recordInLedger,
-        operation, deferred)
+      else mergeOnce(snap, batch, epoch, batchId, recordInLedger, operation, deferred)
     }
   }
 
@@ -848,8 +830,7 @@ final class LakeTable(spark: SparkSession, val root: String,
     *    deferred touches none and keeps them all.
     */
   private def mergeOnce(snap: Snapshot, batch: DataFrame, epoch: String,
-                        batchId: Long, saltBuckets: Int,
-                        recordInLedger: Boolean, operation: String,
+                        batchId: Long, recordInLedger: Boolean, operation: String,
                         deferred: Boolean): Option[MergeStats] = {
     import scala.concurrent.Await
     import scala.concurrent.duration.Duration
@@ -877,8 +858,8 @@ final class LakeTable(spark: SparkSession, val root: String,
       // hits against a broadcast interval index (an O(log files + hits) probe
       // per distinct key, not a join); only those partials return to the
       // driver. It runs only where the write cannot supply the counters:
-      // file pruning needs the job anyway, constraints keep quarantined rows
-      // out of the written output, and salting pre-dedups before the write.
+      // file pruning needs the job anyway, and constraints keep quarantined
+      // rows out of the written output.
       // (b) Everywhere else — the initial load, every constraint-free
       // deferred batch — the merge window writes EXACTLY one row per distinct
       // batch key (tombstones in their own file group), so `distinctKeys` and
@@ -889,7 +870,7 @@ final class LakeTable(spark: SparkSession, val root: String,
         if (deferred || snap.files.isEmpty) None
         else Some(spark.sparkContext.broadcast(PruneIndex(snap.files)))
       val (preAgg, touched) =
-        if (pruneIx.isEmpty && snap.constraints.isEmpty && saltBuckets == 0)
+        if (pruneIx.isEmpty && snap.constraints.isEmpty)
           (None, Set.empty[String])
         else timed("pre-agg+prune") {
           val keyAgg = batch
@@ -925,19 +906,6 @@ final class LakeTable(spark: SparkSession, val root: String,
       // ---- the change stream for this batch (all data events) ----
       val data = batch.filter(col("op") =!= "schema_change")
 
-      // optional pre-dedup for extreme duplicate storms: saltBuckets selects
-      //  0 (default) → none: the fused merge window dedups everything in the
-      //                single range shuffle below;
-      // -1           → hash-agg pre-dedup (map-side partial combine collapses
-      //                hot-key duplicates before any shuffle);
-      // -2           → adaptive salted window: probe the batch's hottest key
-      //                and size the salt buckets from it (Salting.chooseSaltBuckets);
-      // >=1          → (salted) window pre-dedup with a fixed bucket count.
-      val changes =
-        if (saltBuckets == 0) data
-        else Salting.dedupSalted(data, keyCols, Seq(col("lsn"), col("event_id")),
-          if (saltBuckets == -1) 0 else saltBuckets)
-
       // ---- project events to storage rows ([[storageProjection]]).
       // `_ver` = commit version that last modified the row: source rows carry
       // the committing version, target rows their stored one. Ties prefer the
@@ -945,7 +913,7 @@ final class LakeTable(spark: SparkSession, val root: String,
       // strictly changes the key's state — the winner's own _ver is therefore
       // exactly "version of last modification" with no extra comparison, and a
       // re-delivered duplicate keeps the old _ver (no spurious change-feed row).
-      val src0 = changes.select(
+      val src0 = data.select(
         storageProjection(evolved) ++ Seq(
           col("lsn").as("_lsn"),
           (col("op") === "delete").as("_deleted"),

@@ -30,9 +30,12 @@ object TextOps {
   def tokenCountBpe(text: Column): Column =
     size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0)))
 
-  /** Normalized lowercase word tokens. */
+  /** Normalized lowercase word tokens. `array_remove` drops the empty
+    * split edges and, unlike a `filter` lambda, keeps the projection in
+    * whole-stage codegen.
+    */
   def wordTokens(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => length(t) > 0)
+    array_remove(split(lower(text), "[^a-z0-9]+"), "")
 
   /** Quality heuristics: alpha ratio, whitespace ratio, punctuation ratio,
     * stopword ratio, mean word length — the usual cheap pre-filters.

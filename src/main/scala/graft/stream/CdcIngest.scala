@@ -18,6 +18,9 @@ import graft.lake.{LakeTable, MergeStats}
   * also the catch-up/resume mode; pass `Trigger.ProcessingTime(...)` for the
   * run-forever deployment mode (tail the log continuously) — pair it with a
   * `Lineage(flushEvery = N)` so metrics land on disk while the stream runs.
+  *
+  * `saltBuckets` is kept only for source compatibility with callers that
+  * pass it by name; it must be 0. The merge window dedups every batch.
   */
 final class CdcIngest(
     spark: SparkSession,
@@ -31,6 +34,9 @@ final class CdcIngest(
     maintenance: CdcIngest.Maintenance = CdcIngest.Maintenance(),
     trigger: Trigger = Trigger.AvailableNow(),
     deferred: Boolean = false) {
+
+  require(saltBuckets == 0,
+    s"saltBuckets = $saltBuckets: only 0 is supported; the merge window dedups every batch")
 
   val table = new LakeTable(spark, tableRoot)
 
@@ -63,8 +69,8 @@ final class CdcIngest(
         // bounded (every delta batch adds files, so the file-count trigger
         // fires naturally)
         val st =
-          if (deferred) table.mergeDeferred(batch, epoch, batchId, saltBuckets)
-          else table.merge(batch, epoch, batchId, saltBuckets)
+          if (deferred) table.mergeDeferred(batch, epoch, batchId)
+          else table.merge(batch, epoch, batchId)
         stats = if (maxRetainedStats == Int.MaxValue) st :: stats
                 else st :: stats.take(maxRetainedStats - 1)
         lineage.foreach(_.record(st))

@@ -154,21 +154,6 @@ class MediaFetchSpec extends SparkSuite {
       s"expected 2 timed-out attempts, saw ${FetchProbe.attemptsByUrl.get("http://wedge/1")}")
   }
 
-  test("chooseSaltBuckets estimates consistently across sample rates") {
-    import graft.kernel.Salting
-    // one hot key with 4000 rows + background keys
-    val hot = (0 until 4000).map(_ => ("hot", "k"))
-    val cold = (0 until 1000).map(i => (s"c$i", "k"))
-    val df = (hot ++ cold).toDF("repo", "path")
-    val at2 = Salting.chooseSaltBuckets(df, Seq("repo"), targetPerBucket = 500L, sampleRate = 0.2)
-    val at5 = Salting.chooseSaltBuckets(df, Seq("repo"), targetPerBucket = 500L, sampleRate = 0.5)
-    val full = Salting.chooseSaltBuckets(df, Seq("repo"), targetPerBucket = 500L, sampleRate = 1.0)
-    assert(full === 8, s"exact rate must give hottest/target = 4000/500 = 8, got $full")
-    // sampled estimates un-sample by their own rate → all in the same band
-    assert(math.abs(at2 - full) <= 3, s"rate 0.2 → $at2 vs exact $full")
-    assert(math.abs(at5 - full) <= 2, s"rate 0.5 → $at5 vs exact $full")
-  }
-
   test("a huge pending partition streams through the sliding window (no per-row future buildup)") {
     FetchProbe.reset()
     val gauged: MediaFetch.Handler = { t =>

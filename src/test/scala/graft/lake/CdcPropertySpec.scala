@@ -5,19 +5,24 @@ import graft.SparkSuite
 import graft.events.{EventLog, ReplayOracle}
 
 /** Property-style engine checks (SURVEY.md §5): across random generator
-  * configs and random batch splits, replay through LakeTable.merge must equal
-  * the plain-Scala oracle fold — including shuffled within-batch order and
-  * every saltBuckets strategy — and every batch's lineage counters must
-  * equal the ones derived from its raw rows ([[CdcPropertySpec.expected]]).
+  * configs and random batch splits, replay through LakeTable.merge and
+  * LakeTable.mergeDeferred must equal the plain-Scala oracle fold — including
+  * shuffled within-batch order and a duplicate storm on three keys — and every
+  * batch's lineage counters must equal the ones derived from its raw rows
+  * ([[CdcPropertySpec.expected]]).
   */
 class CdcPropertySpec extends SparkSuite {
   import CdcPropertySpec._
 
-  test("random configs × random splits × dedup strategies ≡ oracle") {
+  test("random configs × random splits × write modes ≡ oracle") {
     val rnd = new scala.util.Random(2026)
-    for (trial <- 0 until 5) {
+    // the last two trials: one fixed duplicate storm, once per write mode
+    val storm = EventLog.Config(numEvents = 2000, numRepos = 1, pathsPerRepo = 3,
+      zipfExponent = 3.0, duplicateRate = 0.5, schemaChangeLsns = Seq(700L, 1400L),
+      seed = 2026L)
+    for (trial <- 0 until 7) {
       val n = 1500 + rnd.nextInt(1500)
-      val cfg = EventLog.Config(
+      val cfg = if (trial >= 5) storm else EventLog.Config(
         numEvents = n,
         numRepos = 5 + rnd.nextInt(30),
         pathsPerRepo = 5 + rnd.nextInt(40),
@@ -29,7 +34,7 @@ class CdcPropertySpec extends SparkSuite {
         // a random widen lsn: sometimes after the stars add (metadata-only
         // int→long widening mid-replay), sometimes before it (quarantined as
         // unknown column) — both orderings must replay identically to the
-        // oracle under every batch split and dedup strategy
+        // oracle under every batch split and write mode
         widenLsns = Seq(rnd.nextInt(n).toLong),
         // random drop/rename lsns: depending on where they land relative to
         // the adds they either APPLY (metadata-only drop with re-add
@@ -49,24 +54,24 @@ class CdcPropertySpec extends SparkSuite {
       val nBatches = 1 + rnd.nextInt(4)
       val splits = sorted.grouped(math.max(1, sorted.size / nBatches)).toSeq
         .map(rnd.shuffle(_))
-      // deterministic sweep: every strategy (incl. -2 adaptive) each run
-      val salt = Seq(-2, -1, 0, 1, 4)(trial % 5)
+      val deferred = trial % 2 == 1
+      val clue = s"trial=$trial deferred=$deferred"
 
       val t = new LakeTable(spark, tmpDir(s"prop$trial"))
       t.create(LakeTable.baseSchema)
       splits.zipWithIndex.foreach { case (rows, i) =>
         val df = spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 3), EventLog.eventSchema)
-        val stats = t.merge(df, "prop", i.toLong, saltBuckets = salt)
-        assert(counters(stats) === expected(rows), s"trial=$trial salt=$salt batch=$i")
+        val stats =
+          if (deferred) t.mergeDeferred(df, "prop", i.toLong) else t.merge(df, "prop", i.toLong)
+        assert(counters(stats) === expected(rows), s"$clue batch=$i")
       }
       val got = t.read()
-      assert(got.schema.fieldNames.toSeq === want.schema.fieldNames.toSeq,
-        s"trial=$trial salt=$salt")
+      assert(got.schema.fieldNames.toSeq === want.schema.fieldNames.toSeq, clue)
       val extra = got.exceptAll(want).count()
       val missing = want.exceptAll(got).count()
       assert(extra === 0 && missing === 0,
-        s"trial=$trial salt=$salt batches=${splits.size} extra=$extra missing=$missing")
+        s"$clue batches=${splits.size} extra=$extra missing=$missing")
     }
   }
 

@@ -28,18 +28,18 @@ class CdcIngestSpec extends SparkSuite {
     assert(extra === 0 && missing === 0, s"extra=$extra missing=$missing")
   }
 
-  private def ingest(work: String, maxFiles: Int, salt: Int, segments: Int = 8): CdcIngest = {
+  private def ingest(work: String, maxFiles: Int, segments: Int = 8): CdcIngest = {
     EventLog.write(spark, cfg, s"$work/events", segments)
     val in = new CdcIngest(spark, s"$work/table", s"$work/events", s"$work/cp",
-      maxFilesPerTrigger = maxFiles, saltBuckets = salt,
+      maxFilesPerTrigger = maxFiles,
       lineage = Some(new Lineage(spark, s"$work/table")))
     in.runToCompletion()
     in
   }
 
   test("replay in one batch == replay in many batches == oracle") {
-    val one = ingest(tmpDir("cdc1"), maxFiles = 100, salt = 1)
-    val many = ingest(tmpDir("cdcN"), maxFiles = 1, salt = 4)
+    val one = ingest(tmpDir("cdc1"), maxFiles = 100)
+    val many = ingest(tmpDir("cdcN"), maxFiles = 1)
     assertSameTable(one.table.read(), oracle)
     assertSameTable(many.table.read(), oracle)
     assert(many.stats.count(!_.noOp) === 8, "expected 8 micro-batches")
@@ -147,7 +147,7 @@ class CdcIngestSpec extends SparkSuite {
 
   test("lineage sidecar records per-batch counters that sum to the log size") {
     val work = tmpDir("cdcL")
-    val in = ingest(work, maxFiles = 2, salt = 2)
+    val in = ingest(work, maxFiles = 2)
     val lin = new Lineage(spark, s"$work/table").read()
     import spark.implicits._
     val seen = lin.filter($"metric" === "eventsSeen")
