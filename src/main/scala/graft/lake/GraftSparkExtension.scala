@@ -1,12 +1,14 @@
 package graft.lake
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteAction, DeleteFromTable, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.graftbridge.{ConfBridge, PlanBridge}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Session extension wiring SQL DML onto graft tables
   * (`spark.sql.extensions=graft.lake.GraftSparkExtension`):
@@ -33,10 +35,33 @@ import org.apache.spark.sql.graftbridge.PlanBridge
   * the extension fail loudly instead ([[GraftFileIndex.rootPaths]] is
   * empty, so the fallback has no target to resolve). Same arrangement as
   * Delta's `DeltaSparkSessionExtension` + `DeltaAnalysis`.
+  *
+  * The extension also sizes Spark's generated-class cache
+  * (`spark.sql.codegen.cache.maxEntries`, a static conf, default 100) to
+  * [[GraftSparkExtension.CodegenCacheEntries]] unless the user set it; a
+  * user value wins. The cache key is (class loader, code), and each
+  * whole-stage class is compiled twice, once by the planner's compile check
+  * and once in tasks, so a warm pass over all 51 queries needs about 850
+  * entries; at 100 nearly every warm query recompiles. The default goes into
+  * the active
+  * context's conf ([[ConfBridge]]), which reaches every entry point that
+  * loads the extension. `CodeGenerator` reads the size once per JVM, at its
+  * first use, so it takes effect only when the extension loads with the
+  * JVM's first session.
   */
 final class GraftSparkExtension extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    ConfBridge.activeContextConf.foreach(GraftSparkExtension.setEngineDefaults)
     ext.injectResolutionRule(session => new GraftInsertRule(session))
+  }
+}
+
+object GraftSparkExtension {
+  /** Room for the 51-query working set (about 850 keys) and then some. */
+  val CodegenCacheEntries = 2000
+
+  private[lake] def setEngineDefaults(conf: SparkConf): Unit =
+    conf.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toString)
 }
 
 final class GraftInsertRule(spark: SparkSession) extends Rule[LogicalPlan] {
