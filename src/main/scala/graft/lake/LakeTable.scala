@@ -44,23 +44,39 @@ final class LakeTable(spark: SparkSession, val root: String,
   val log = new SnapshotLog(spark, root)
   private val keyCols = Seq("repo", "path")
 
-  /** The shared data-file writer: zstd + a parquet-native BLOOM FILTER for
-    * each configured bloom column present in the frame (adaptive sizing —
-    * parquet picks the smallest candidate covering the chunk's actual NDV).
-    * Blooms serve two layers: parquet-mr skips row groups on pushed equality
-    * predicates automatically, and [[BloomPrune]] probes the same filters at
-    * PLANNING time to skip whole files — the layer min/max stats cannot
-    * provide on high-cardinality columns (a uniform hash key spans nearly
-    * the full domain in every file, so range stats never prune it).
+  /** The shared data-file writer: writes `df` under the fresh dir `dir`,
+    * live rows and tombstones to separate `_deleted=` sub-dirs, and returns
+    * the manifest entry of every file written, with string stats on
+    * `stats`. The write tasks read each footer they just closed
+    * ([[LakeTable.statsOfFile]]) and return the entries with their commit
+    * messages, so the driver neither lists the dir nor re-reads a footer.
+    *
+    * zstd + a parquet-native BLOOM FILTER for each configured bloom column
+    * present in the frame (adaptive sizing — parquet picks the smallest
+    * candidate covering the chunk's actual NDV). Blooms serve two layers:
+    * parquet-mr skips row groups on pushed equality predicates automatically,
+    * and [[BloomPrune]] probes the same filters at PLANNING time to skip
+    * whole files — the layer min/max stats cannot provide on high-cardinality
+    * columns (a uniform hash key spans nearly the full domain in every file,
+    * so range stats never prune it).
     */
-  private def dataWriter(df: DataFrame) = {
+  private def writeData(df: DataFrame, dir: String, stats: Seq[String]): Seq[DataFileEntry] = {
     val present = df.columns.toSet
-    bloomColumns.filter(present.contains).foldLeft(
-      df.write.mode("overwrite").option("compression", "zstd")
-        .option("parquet.bloom.filter.adaptive.enabled", "true")) {
-      (w, c) => w.option(s"parquet.bloom.filter.enabled#$c", "true")
-    }.partitionBy("_deleted")
+    val options = Map("compression" -> "zstd",
+      "parquet.bloom.filter.adaptive.enabled" -> "true") ++
+      bloomColumns.filter(present.contains).map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
+    val files = org.apache.spark.sql.graftbridge.LakeWrite.parquet(
+      df, dir, Seq("_deleted"), options) {
+      (conf, file, path) => statsOfFile(conf, file, path, stats)
+    }
+    afterDataWrite()
+    files
   }
+
+  /** Test seam: runs on the driver after a write's files are committed and
+    * before its snapshot commit, to land a concurrent commit in between.
+    */
+  @volatile private[lake] var afterDataWrite: () => Unit = () => ()
 
   def create(baseSchema: StructType): Unit = {
     // tryCommit: two racing creators both succeed idempotently (the loser's
@@ -828,6 +844,15 @@ final class LakeTable(spark: SparkSession, val root: String,
     *  - the `delta` flag on the new file entries;
     *  - kept files: copy-on-write drops the touched files it rewrites,
     *    deferred touches none and keeps them all.
+    *
+    * The Spark work of an attempt is one narrow pre-pass job ([[prePass]]:
+    * the schema-change rows and the touched files), then the write (range
+    * sample, shuffle, write tasks). The write also yields the lineage
+    * counters, from an observation on the merge window, and the new files'
+    * manifest entries, from its tasks ([[writeData]]). Only a table with
+    * CHECK constraints runs one more job beside the write, the grouped
+    * counters ([[groupedCounters]]): its window never sees the quarantined
+    * rows.
     */
   private def mergeOnce(snap: Snapshot, batch: DataFrame, epoch: String,
                         batchId: Long, recordInLedger: Boolean, operation: String,
@@ -839,72 +864,22 @@ final class LakeTable(spark: SparkSession, val root: String,
       java.util.UUID.randomUUID().toString.take(8)
     var committed = false
     try {
-      // ---- schema-change events: a separate TINY pass (`op = 'schema_change'`
-      // pushes down to the scan, so it touches almost nothing; folding it into
-      // the per-key agg as a collect_list used to allocate a buffer per key and
-      // forced the agg off the codegen hash path). Submitted CONCURRENTLY with
-      // the counter job below (guide §2.6 — actions are only sequential because
-      // the driver calls them sequentially): the scheduler back-fills, so this
-      // job's fixed cost leaves the critical path.
-      val scFut = aux(timed("schema-scan")(batch
-        .filter(col("op") === "schema_change")
-        .select(col("lsn"), col("schema_change"))
-        .collect().toSeq.sortBy(_.getLong(0))))
-
-      // ---- lineage counters, from one of two places.
-      // (a) ONE narrow pre-aggregation over data events (key/lsn/op columns
-      // only — a few % of batch bytes) folds per partition into counter
-      // totals plus, on a non-empty copy-on-write target, the touched-file
-      // hits against a broadcast interval index (an O(log files + hits) probe
-      // per distinct key, not a join); only those partials return to the
-      // driver. It runs only where the write cannot supply the counters:
-      // file pruning needs the job anyway, and constraints keep quarantined
-      // rows out of the written output.
-      // (b) Everywhere else — the initial load, every constraint-free
-      // deferred batch — the merge window writes EXACTLY one row per distinct
-      // batch key (tombstones in their own file group), so `distinctKeys` and
-      // `deleteWinners` come from the footer stats the commit collects
-      // anyway, and `eventsSeen` / max lsn from an Observation on the write
-      // job itself: no per-key hash shuffle and no extra job (guide §2.4).
+      // a copy-on-write merge into a non-empty table rewrites the target
+      // files that hold a key of the batch: a broadcast interval index of
+      // the files' key boxes, probed in the pre-pass (not a join)
       val pruneIx =
         if (deferred || snap.files.isEmpty) None
         else Some(spark.sparkContext.broadcast(PruneIndex(snap.files)))
-      val (preAgg, touched) =
-        if (pruneIx.isEmpty && snap.constraints.isEmpty)
-          (None, Set.empty[String])
-        else timed("pre-agg+prune") {
-          val keyAgg = batch
-            .filter(col("op") =!= "schema_change")
-            .select(col("repo"), col("path"), col("lsn"), col("event_id"), col("op"))
-            .groupBy(col("repo"), col("path"))
-            .agg(
-              max_by(col("op"), struct(col("lsn"), col("event_id"))).as("__winOp"),
-              count(lit(1)).as("__n"),
-              max(col("lsn")).as("__maxLsn"))
-          val partials = keyAgg.rdd.mapPartitions { it =>
-            var keys = 0L; var n = 0L; var del = 0L; var mx = -1L
-            val hits = scala.collection.mutable.HashSet.empty[String]
-            it.foreach { r =>
-              keys += 1
-              n += r.getLong(3)
-              if (!r.isNullAt(2) && r.getString(2) == "delete") del += 1
-              // null-safe: an all-null-lsn group adds nothing to the max
-              val m = if (r.isNullAt(4)) -1L else r.getLong(4)
-              if (m > mx) mx = m
-              if (!r.isNullAt(0) && !r.isNullAt(1))
-                pruneIx.foreach(ix => hits ++= ix.value.lookup(r.getString(0), r.getString(1)))
-            }
-            Iterator.single((keys, n, del, mx, hits.toSeq))
-          }.collect()
-          (Some((partials.map(_._1).sum, partials.map(_._2).sum, partials.map(_._3).sum,
-            partials.foldLeft(-1L)((a, p) => math.max(a, p._4)))),
-            partials.iterator.flatMap(_._5).toSet)
-        }
-      val scRows = Await.result(scFut, Duration.Inf)
+      val (scRows, touched) = timed("pre-pass")(prePass(batch, pruneIx))
 
       val (evolved, scApplied, scQuarantined) = evolveSchema(snap, scRows)
       // ---- the change stream for this batch (all data events) ----
       val data = batch.filter(col("op") =!= "schema_change")
+      // constraints keep quarantined rows out of the merge window, so a
+      // constrained table counts the delivered events in a job of its own,
+      // beside the write; awaited before the commit
+      val groupedF =
+        if (evolved.constraints.isEmpty) None else Some(aux(groupedCounters(data)))
 
       // ---- project events to storage rows ([[storageProjection]]).
       // `_ver` = commit version that last modified the row: source rows carry
@@ -919,7 +894,8 @@ final class LakeTable(spark: SparkSession, val root: String,
           (col("op") === "delete").as("_deleted"),
           lit(snap.version + 1).as("_ver"),
           col("event_id").as("__tie"),
-          lit(-1L).as("__pref")): _*)
+          lit(-1L).as("__pref"),
+          lit(true).as("__src")): _*)
       val (src, constraintQuarantinedF) =
         enforceConstraints(evolved, src0, quarantineDir, aux)
 
@@ -934,24 +910,36 @@ final class LakeTable(spark: SparkSession, val root: String,
         if (deferred) src
         else readStoredTagged(evolved, snap.files.filter(f => touched.contains(f.path)))
           .withColumn("__tie", lit(Long.MaxValue)) // target wins LSN ties: re-applied dup is a no-op
+          .withColumn("__src", lit(false))
           .unionByName(src)
 
       // ---- the fused MERGE: ONE shuffle. repartitionByRange(key) satisfies
       // the window's ClusteredDistribution, so batch-dedup + target-merge run
       // in a single exchange, and the output files come out range-clustered by
-      // key (tight min/max → effective pruning on the next merge). Counter
-      // mode (b) observes the rows ABOVE the exchange: below it, the
-      // range-sampling job would run the observation too and count twice.
+      // key (tight min/max → effective pruning on the next merge).
+      // The lineage counters come from the same window: `__srcN`, the running
+      // count of source rows in `w`'s order, is 1 on a key's first source row,
+      // its batch winner (max `(lsn, event_id)`); on `w`'s partitioning and
+      // order it adds no sort and no exchange. The observation sits ABOVE the
+      // exchange: below it, the range-sampling job would run it too and count
+      // twice.
       import org.apache.spark.sql.expressions.Window
-      lazy val observed = org.apache.spark.sql.Observation()
-      val clustered = window.repartitionByRange(col("repo"), col("path"))
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(col("_lsn").desc, col("__tie").desc, col("__pref").asc)
-      val merged = (if (preAgg.nonEmpty) clustered else clustered.observe(observed,
-          count(lit(1)).as("n"), coalesce(max(col("_lsn")), lit(-1L)).as("maxLsn")))
-        .withColumn("__rn", row_number().over(w))
+      val ranked = window.repartitionByRange(col("repo"), col("path"))
+        .withColumns(Map(
+          "__rn" -> row_number().over(w),
+          "__srcN" -> sum(when(col("__src"), 1))
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+      lazy val observed = org.apache.spark.sql.Observation()
+      val winner = col("__src") && col("__srcN") === 1
+      val merged = (if (groupedF.nonEmpty) ranked else ranked.observe(observed,
+          count(when(col("__src"), 1)).as("events"),
+          count(when(winner, 1)).as("keys"),
+          count(when(winner && col("_deleted"), 1)).as("deletes"),
+          coalesce(max(when(col("__src"), col("_lsn"))), lit(-1L)).as("maxLsn")))
         .filter(col("__rn") === 1)
-        .drop("__rn", "__tie", "__pref")
+        .drop("__rn", "__srcN", "__src", "__tie", "__pref")
 
       // ---- write new data files: live rows and tombstones to SEPARATE files
       // (Iceberg delete-file analog) so live reads never open tombstone bytes.
@@ -961,17 +949,17 @@ final class LakeTable(spark: SparkSession, val root: String,
       // unreferenced orphan that expireSnapshots' GC removes. ----
       val newDir = s"${log.dataDir}/${if (deferred) "delta-" else ""}" +
         s"v${snap.version + 1}-b$batchId-" + java.util.UUID.randomUUID().toString.take(8)
-      timed("write")(dataWriter(toPhysicalCols(evolved.physicalName, merged)).parquet(newDir))
-      val newFiles = timed("footer-stats")(
-        LakeTable.footerStats(spark, newDir, statColumns = statColumns)
-          .map(_.copy(delta = deferred)))
+      val newFiles = timed("write")(
+        writeData(toPhysicalCols(evolved.physicalName, merged), newDir, statColumns))
+        .map(_.copy(delta = deferred))
 
-      val (distinctKeys, eventsSeen, deleteWinners, dataMaxLsn) = preAgg.getOrElse {
-        // a write the optimizer proved empty reports no metrics at all
-        val m = observed.get
-        (newFiles.map(_.rows).sum, m.getOrElse("n", 0L).asInstanceOf[Long],
-          newFiles.filter(_.tomb).map(_.rows).sum,
-          m.getOrElse("maxLsn", -1L).asInstanceOf[Long])
+      val Counters(eventsSeen, distinctKeys, deleteWinners, dataMaxLsn) = groupedF match {
+        case Some(f) => Await.result(f, Duration.Inf)
+        case None =>
+          // a write the optimizer proved empty reports no metrics at all
+          val m = observed.get
+          def n(k: String, empty: Long) = m.getOrElse(k, empty).asInstanceOf[Long]
+          Counters(n("events", 0L), n("keys", 0L), n("deletes", 0L), n("maxLsn", -1L))
       }
       val batchMaxLsn = math.max(dataMaxLsn,
         scRows.lastOption.map(_.getLong(0)).getOrElse(-1L))
@@ -1007,6 +995,62 @@ final class LakeTable(spark: SparkSession, val root: String,
       q.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(q, true)
     }
   }
+
+  /** The merge's one pre-pass: a narrow job (no shuffle) over the batch's
+    * `op, repo, path, lsn, schema_change` that returns the schema-change
+    * rows as `(lsn, payload)` in lsn order and, given the copy-on-write
+    * target's prune index, the paths of the target files that may hold a
+    * key of the batch. Each task probes the index once per distinct key it
+    * sees. Rows with a null `op` are in neither output. Without an index only
+    * the schema-change rows are read (`op` pushes down to the scan).
+    */
+  private def prePass(batch: DataFrame,
+                      pruneIx: Option[org.apache.spark.broadcast.Broadcast[PruneIndex]])
+      : (Seq[org.apache.spark.sql.Row], Set[String]) = {
+    val cols = batch.select(col("op"), col("repo"), col("path"), col("lsn"), col("schema_change"))
+    val in = if (pruneIx.isEmpty) cols.filter(col("op") === "schema_change") else cols
+    val parts = in.rdd.mapPartitions { it =>
+      val sc = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+      val seen = scala.collection.mutable.HashSet.empty[(String, String)]
+      val hits = scala.collection.mutable.HashSet.empty[String]
+      it.foreach { r =>
+        if (r.isNullAt(0)) ()
+        else if (r.getString(0) == "schema_change")
+          sc += org.apache.spark.sql.Row(r.get(3), r.get(4))
+        else if (!r.isNullAt(1) && !r.isNullAt(2) && seen.add((r.getString(1), r.getString(2))))
+          pruneIx.foreach(ix => hits ++= ix.value.lookup(r.getString(1), r.getString(2)))
+      }
+      Iterator.single((sc.toSeq, hits.toSeq))
+    }.collect()
+    (parts.toSeq.flatMap(_._1).sortBy(_.getLong(0)), parts.iterator.flatMap(_._2).toSet)
+  }
+
+  /** The lineage counters of a batch's data events from one grouped job:
+    * per key, the winning op by `(lsn, event_id)`, the event count and the
+    * max lsn, folded per partition; only the partials reach the driver.
+    */
+  private def groupedCounters(data: DataFrame): Counters =
+    data.groupBy(col("repo"), col("path"))
+      .agg(
+        max_by(col("op"), struct(col("lsn"), col("event_id"))).as("__winOp"),
+        count(lit(1)).as("__n"),
+        max(col("lsn")).as("__maxLsn"))
+      .rdd.mapPartitions { it =>
+        var keys = 0L; var n = 0L; var del = 0L; var mx = -1L
+        it.foreach { r =>
+          keys += 1
+          n += r.getLong(3)
+          if (!r.isNullAt(2) && r.getString(2) == "delete") del += 1
+          // null-safe: an all-null-lsn group adds nothing to the max
+          val m = if (r.isNullAt(4)) -1L else r.getLong(4)
+          if (m > mx) mx = m
+        }
+        Iterator.single(Counters(n, keys, del, mx))
+      }.collect()
+      .foldLeft(Counters(0L, 0L, 0L, -1L)) { (a, p) =>
+        Counters(a.events + p.events, a.keys + p.keys, a.deletes + p.deletes,
+          math.max(a.maxLsn, p.maxLsn))
+      }
 
   /** Event→storage-row projection under `snap`'s (evolved) schema: extras
     * gated by column add-LSN; the PARSE type of a widened column is gated by
@@ -1413,15 +1457,14 @@ final class LakeTable(spark: SparkSession, val root: String,
             .sortWithinPartitions(col("__z"), col("repo"), col("path"))
             .drop("__z"))
       }
-      dataWriter(toPhysicalCols(snap.physicalName, clustered.getOrElse(
-        kept.repartitionByRange(nParts, col("repo"), col("path"))
-          .sortWithinPartitions("repo", "path"))))
-        .parquet(newDir)
       // stat the z-order columns too: their tightened per-file bounds are
       // the whole point (string columns; int64-family leaves are already
       // auto-statted)
-      Some((rewrite.map(_.path).toSet, LakeTable.footerStats(spark, newDir,
-        statColumns = (statColumns ++ zorderBy).distinct)))
+      Some((rewrite.map(_.path).toSet, writeData(
+        toPhysicalCols(snap.physicalName, clustered.getOrElse(
+          kept.repartitionByRange(nParts, col("repo"), col("path"))
+            .sortWithinPartitions("repo", "path"))),
+        newDir, (statColumns ++ zorderBy).distinct)))
     }
 
     // the packed files outlive a lost race: they rebase onto the new head
@@ -1533,10 +1576,10 @@ object LakeTable {
 
   /** Driver-side pool for overlapping small independent Spark actions with a
     * bigger one in the same merge (guide §2.6). A merge attempt submits at
-    * most two ([[AuxJobs]]: schema scan, constraint quarantine), so four
-    * threads serve two concurrent writers; further writers queue rather
-    * than grow the pool. Daemon threads so an idle pool never blocks JVM
-    * exit.
+    * most two ([[AuxJobs]]: a constrained table's grouped counters and its
+    * quarantine), so four threads serve two concurrent writers; further
+    * writers queue rather than grow the pool. Daemon threads so an idle pool
+    * never blocks JVM exit.
     */
   private[lake] lazy val auxJobEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutorService(
@@ -1678,12 +1721,17 @@ object LakeTable {
     a.length < b.length
   }
 
-  private def statsOfFile(
-      conf: org.apache.hadoop.conf.Configuration, path: String,
-      tomb: Boolean, bytes: Long, statColumns: Seq[String]): Option[DataFileEntry] = {
+  /** The manifest entry of the parquet data file `file`, from its footer
+    * alone, recorded under `path` (the file's committed path; a write task
+    * reads the file at its attempt path before the commit moves it there).
+    * Files under a `_deleted=true` dir hold tombstones. `None` for a file
+    * with no rows.
+    */
+  private[lake] def statsOfFile(
+      conf: org.apache.hadoop.conf.Configuration, file: org.apache.hadoop.fs.Path,
+      path: String, statColumns: Seq[String]): Option[DataFileEntry] = {
     import scala.jdk.CollectionConverters._
-    val p = new org.apache.hadoop.fs.Path(path)
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
     try {
       val blocks = reader.getFooter.getBlocks.asScala.toSeq
@@ -1743,7 +1791,8 @@ object LakeTable {
           .filter(c => blocks.exists(_.getColumns.asScala.exists(cc =>
             cc.getPath.toDotString == c && cc.getBloomFilterOffset >= 0)))
         Some(DataFileEntry(path, rows, minR, maxR, minP, maxP,
-          longColumnMax(blocks, "_ver"), tomb = tomb, bytes = bytes,
+          longColumnMax(blocks, "_ver"), tomb = path.contains("/_deleted=true/"),
+          bytes = in.getLength,
           stats = secondary, longStats = secondaryLong, bloomCols = bloomed))
       }
     } finally reader.close()
@@ -1787,42 +1836,10 @@ object LakeTable {
     if (known && mx != Long.MinValue) Some(mx) else None
   }
 
-  /** Per-file (rows, repo/path bounding box) from Parquet FOOTERS only — no
-    * data scan. Small commits read footers on the driver (no job overhead);
-    * beyond `distributeThreshold` files the footer reads fan out to executors
-    * and only the tiny stat tuples come back — a 10^4-file commit stops being
-    * a serial driver loop.
+  /** A batch's lineage counters over its data events: events, distinct
+    * keys, keys whose winner is a delete, and the max lsn (-1 when none).
     */
-  def footerStats(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  distributeThreshold: Int = 128,
-                  statColumns: Seq[String] = defaultStatColumns): Seq[DataFileEntry] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    // recursive: partitionBy("_deleted") nests files one level down; the dir
-    // name tells live from tombstone files with no footer read needed
-    val files = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Boolean, Long)]
-      val it = fs.listFiles(d, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) {
-          val q = fs.makeQualified(st.getPath).toString
-          buf += ((q, q.contains("/_deleted=true/"), st.getLen))
-        }
-      }
-      buf.sortBy(_._1).toSeq
-    }
-    if (files.size <= distributeThreshold)
-      files.flatMap { case (p, t, len) => statsOfFile(conf, p, t, len, statColumns) }
-    else {
-      val serConf = new org.apache.spark.SerializableWritable(conf)
-      val slices = math.min(files.size, spark.sparkContext.defaultParallelism * 2)
-      spark.sparkContext.parallelize(files, slices)
-        .flatMap { case (p, t, len) => statsOfFile(serConf.value, p, t, len, statColumns) }
-        .collect().toSeq.sortBy(_.path)
-    }
-  }
+  private[lake] final case class Counters(events: Long, keys: Long, deletes: Long, maxLsn: Long)
 
   /** Default secondary stat columns (north-rule schema): small-cardinality
     * string columns a user predicates on. `content` is deliberately NOT

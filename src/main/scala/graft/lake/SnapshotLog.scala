@@ -196,10 +196,11 @@ final case class CommitInfo(
     files: Long, liveRows: Long, bytes: Long, tombstoneFiles: Long,
     maxLsn: Long)
 
-/** Manifest entry with per-file key-range stats for file pruning.
-  * Bounds are Options: None = unbounded on that side (stat missing, or
-  * non-ASCII where Parquet's unsigned-UTF-8 stat order and JVM string order
-  * could disagree — see LakeTable.footerStats). `maxVer` is the file's
+/** Manifest entry with per-file key-range stats for file pruning, built
+  * from the file's footer by the write task that wrote it
+  * (LakeTable.statsOfFile). Bounds are Options: None = unbounded on that
+  * side (stat missing, or non-ASCII where Parquet's unsigned-UTF-8 stat
+  * order and JVM string order could disagree). `maxVer` is the file's
   * largest `_ver` (commit version of last row modification, from the footer):
   * the change feed drops whole files with `maxVer <= fromVersion` at planning
   * time — the Iceberg data-sequence-number pruning analog, decisive after a

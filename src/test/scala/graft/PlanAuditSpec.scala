@@ -97,19 +97,28 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("fused MERGE plan has exactly one exchange for dedup+merge+clustering") {
-    // reproduce the merge's core plan shape on a standalone union
+    // reproduce the merge's core plan shape on a standalone union, with the
+    // running count of source rows the lineage counters read
     import spark.implicits._
-    val src = Seq(("r1", "a", 1L, 0L), ("r1", "a", 2L, 0L), ("r2", "b", 3L, 0L))
-      .toDF("repo", "path", "_lsn", "__tie")
-    val w = org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.expressions.Window
+    val src = Seq(("r1", "a", 1L, 0L, true), ("r1", "a", 2L, 0L, false), ("r2", "b", 3L, 0L, true))
+      .toDF("repo", "path", "_lsn", "__tie", "__src")
+    val w = Window
       .partitionBy(col("repo"), col("path"))
       .orderBy(col("_lsn").desc, col("__tie").desc)
     val merged = src.repartitionByRange(col("repo"), col("path"))
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      .withColumns(Map(
+        "__rn" -> row_number().over(w),
+        "__srcN" -> sum(when(col("__src"), 1))
+          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+      .filter(col("__rn") === 1)
     val plan = merged.queryExecution.executedPlan.toString
     val exchanges = "Exchange".r.findAllIn(plan).size
     assert(exchanges === 1,
       s"expected the range exchange to satisfy the window's clustering; got $exchanges:\n$plan")
+    // both window columns share one sort and one window operator
+    assert("Sort \\[".r.findAllIn(plan).size === 1, plan)
+    assert("Window \\[".r.findAllIn(plan).size === 1, plan)
   }
 
   test("change feed pushes the _ver commit-version predicate to the scan") {

@@ -83,6 +83,13 @@ class CdcPropertySpec extends SparkSuite {
     val schemaOnly = Seq(
       ev(10, "schema_change", sc = """{"addColumn":{"name":"stars","type":"int"}}"""),
       ev(11, "schema_change", sc = """{"widenColumn":{"name":"nope","type":"long"}}"""))
+    // seeded copy-on-write: an event re-delivered with the stored row's LSN
+    // (the stored row wins the window; the event still counts as its key's
+    // upsert), a key whose batch winner is a delete, a new key delivered twice
+    val mixed = Seq(
+      ev(1, "insert", "r1", "a"),
+      ev(12, "update", "r2", "c"), ev(13, "delete", "r2", "c"),
+      ev(14, "insert", "r3", "d"), ev(14, "insert", "r3", "d", eventId = 1))
     val constrained = Seq(
       ev(20, "insert", "r1", "a"),
       ev(21, "update", "r1", "a", lang = "cobol"),
@@ -106,8 +113,13 @@ class CdcPropertySpec extends SparkSuite {
       assert((sc.schemaChanges, sc.schemaQuarantined) === ((1L, 1L)), clue)
       assert(t.head().maxLsn === 11L, clue)
 
+      val m = apply(mixed, 2)
+      assert(counters(m) === expected(mixed), clue)
+      assert(counters(m) === ((5L, 2L, 2L, 1L)), clue)
+      assert(t.head().maxLsn === 14L, clue)
+
       t.addConstraint("no-cobol", "lang <> 'cobol'")
-      val c = apply(constrained, 2)
+      val c = apply(constrained, 3)
       assert(counters(c) === expected(constrained), clue)
       // enforcement runs on the delivered rows, before the per-key dedup
       assert(c.constraintQuarantined === 3L, clue)

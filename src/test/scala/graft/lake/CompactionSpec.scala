@@ -147,18 +147,14 @@ class CompactionSpec extends SparkSuite {
     */
   private def compactRacing(t: LakeTable)(raced: Snapshot => Snapshot): Snapshot = {
     val racer = new LakeTable(spark, t.root)
-    val key = "spark.sql.sources.commitProtocolClass"
     ConstraintSpec.arm { () =>
       val s = racer.head()
       assert(racer.log.tryCommit(raced(s).copy(version = s.version + 1,
         parent = s.version, operation = "race")))
     }
-    spark.conf.set(key, classOf[RacingCommitProtocol].getName)
+    t.afterDataWrite = () => ConstraintSpec.fire()
     try t.compact(targetRowsPerFile = 100)
-    finally {
-      spark.conf.unset(key)
-      ConstraintSpec.disarm()
-    }
+    finally ConstraintSpec.disarm()
   }
 
   private def compactDirs(t: LakeTable): Seq[String] =
@@ -235,21 +231,5 @@ class CompactionSpec extends SparkSuite {
     assert(countData() < filesBefore, "expected GC to remove unreferenced files")
     assert(t.read().count() === rowsBefore) // latest snapshot intact
     assert(t.log.read(t.log.latestVersion().get).files.nonEmpty)
-  }
-}
-
-/** A file commit protocol that fires the [[ConstraintSpec.arm]] hook on the
-  * driver once a write job's files are committed — a seam to land a
-  * concurrent snapshot commit between a writer's data write and its own
-  * snapshot commit.
-  */
-class RacingCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
-    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
-      jobId, path, dynamicPartitionOverwrite) {
-  override def commitJob(
-      job: org.apache.hadoop.mapreduce.JobContext,
-      commits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit = {
-    super.commitJob(job, commits)
-    ConstraintSpec.fire()
   }
 }

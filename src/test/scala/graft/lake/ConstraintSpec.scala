@@ -176,7 +176,7 @@ object ConstraintSpec {
   @volatile private var hook: Option[() => Unit] = None
 
   /** Run `f` once, from inside the first task that reads a [[racingBatch]]
-    * (or the next write job committed through a [[RacingCommitProtocol]]).
+    * (or from a `LakeTable.afterDataWrite` hook that calls [[fire]]).
     */
   def arm(f: () => Unit): Unit = hook = Some(f)
   def armed: Boolean = hook.nonEmpty
