@@ -1146,14 +1146,6 @@ object Queries {
         })
     }
 
-  /** CHECK-constraint enforcement end-to-end: the table carries a CHECK on
-    * the commit column, the mapped change log merges in two batches, and
-    * every violating UPSERT is quarantined — the final state equals
-    * last-LSN-wins over the log WITH THE VIOLATING INSERTS REMOVED (a
-    * quarantined winner exposes the key's older surviving event, exactly as
-    * the SQL oracle's filtered replay does; deletes are exempt per SQL CHECK
-    * semantics). The query hard-asserts that quarantine actually fired.
-    */
   /** dropColumn schema evolution end-to-end: add `stars`, populate it from
     * lsn-gated extras, DROP it (metadata-only logical drop with a persisted
     * tombstone), then attempt a re-add — which must QUARANTINE (stale
@@ -1243,6 +1235,14 @@ object Queries {
       col("lang"), sha2(col("content"), 256).as("content_sha"), col("rating"))
   }
 
+  /** CHECK-constraint enforcement end-to-end: the table carries a CHECK on
+    * the commit column, the mapped change log merges in two batches, and
+    * every violating UPSERT is quarantined — the final state equals
+    * last-LSN-wins over the log WITH THE VIOLATING INSERTS REMOVED (a
+    * quarantined winner exposes the key's older surviving event, exactly as
+    * the SQL oracle's filtered replay does; deletes are exempt per SQL CHECK
+    * semantics). The query hard-asserts that quarantine actually fired.
+    */
   def checkConstraintQ(s: SparkSession, d: String): DataFrame = {
     val work = scratchDir("checkq", d)
     val t = new graft.lake.LakeTable(s, s"$work/table")

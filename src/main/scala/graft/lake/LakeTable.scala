@@ -445,11 +445,15 @@ final class LakeTable(spark: SparkSession, val root: String,
     * validation scan, same contract as Delta). From then on every write path
     * (merge / append / SQL DML — they all funnel through the merge)
     * QUARANTINES violating upsert rows instead of failing the stream or
-    * storing them ([[enforceConstraints]]): SQL CHECK semantics, a row
-    * violates only when the expression evaluates to exactly FALSE (NULL
-    * passes); delete events are exempt (their value columns are null by
-    * construction). Constraints live in the snapshot, so time travel and
-    * [[restoreTo]] carry them with the rest of the state.
+    * storing them: SQL CHECK semantics, a row violates only when the
+    * expression evaluates to exactly FALSE (NULL passes); delete events are
+    * exempt (their value columns are null by construction). The merge
+    * ([[mergeOnce]]) writes the violators to the attempt's own quarantine
+    * dir for inspection, counts them into `MergeStats.constraintQuarantined`
+    * and logs them loudly — never a stream failure (the batch would
+    * redeliver forever), never a silent drop. Constraints live in the
+    * snapshot, so time travel and [[restoreTo]] carry them with the rest of
+    * the state.
     */
   def addConstraint(name: String, check: String): Snapshot = {
     require(name.matches("[A-Za-z0-9_-]+"), s"bad constraint name: '$name'")
@@ -471,42 +475,6 @@ final class LakeTable(spark: SparkSession, val root: String,
         operation = s"dropConstraint($name)",
         constraints = snap.constraints - name))
     }
-
-  /** CHECK-constraint enforcement over a batch's storage-projected source
-    * rows ([[addConstraint]]), under the batch's evolved snapshot `snap`:
-    * violating UPSERT rows are quarantined — written to `quarantineDir` (the
-    * merge attempt's own, by an `aux` job) for inspection, counted into
-    * `MergeStats.constraintQuarantined`, logged loudly — never a stream
-    * failure (the batch would redeliver forever), never a silent drop.
-    * Zero cost when the snapshot has no constraints. The delivery counters
-    * (eventsSeen/upserts/deletes) describe the batch AS DELIVERED;
-    * `constraintQuarantined` records what enforcement then removed.
-    */
-  private def enforceConstraints(snap: Snapshot, src: DataFrame,
-                                 quarantineDir: String, aux: AuxJobs)
-      : (DataFrame, scala.concurrent.Future[Long]) = {
-    if (snap.constraints.isEmpty)
-      return (src, scala.concurrent.Future.successful(0L))
-    val violates = snap.constraints.values.toSeq
-      .map(s => expr(s) <=> lit(false)).reduce(_ || _) && !col("_deleted")
-    val bad = src.filter(violates)
-    // count + quarantine-write run CONCURRENTLY with the main merge jobs
-    // (guide §2.6): the merge only needs the FILTERED frame — which is lazy —
-    // not the violator count, so the extra per-batch job leaves the critical
-    // path; the caller awaits before committing (a failed quarantine write
-    // must still fail the batch, not land a commit that lost rows silently).
-    val quarantined = aux {
-      val n = bad.count()
-      if (n > 0) {
-        bad.select((snap.schema.fieldNames.toSeq :+ "_lsn").map(col): _*)
-          .write.mode("overwrite").parquet(quarantineDir)
-        System.err.println(s"[lake] QUARANTINED $n rows violating CHECK " +
-          s"(${snap.constraints.keys.mkString(", ")}) -> $quarantineDir")
-      }
-      n
-    }
-    (src.filter(!violates), quarantined)
-  }
 
   /** Roll the table back to `version` (the Delta `RESTORE` analog): a
     * METADATA-ONLY commit that re-points HEAD at the target snapshot's entire
@@ -849,17 +817,14 @@ final class LakeTable(spark: SparkSession, val root: String,
     * the schema-change rows and the touched files), then the write (range
     * sample, shuffle, write tasks). The write also yields the lineage
     * counters, from an observation on the merge window, and the new files'
-    * manifest entries, from its tasks ([[writeData]]). Only a table with
-    * CHECK constraints runs one more job beside the write, the grouped
-    * counters ([[groupedCounters]]): its window never sees the quarantined
-    * rows.
+    * manifest entries, from its tasks ([[writeData]]). On a table with CHECK
+    * constraints the violators ride the same window, flagged: they count as
+    * delivered and never win. One more job, after the write and only when
+    * the window saw a violator, writes them to the attempt's quarantine dir.
     */
   private def mergeOnce(snap: Snapshot, batch: DataFrame, epoch: String,
                         batchId: Long, recordInLedger: Boolean, operation: String,
                         deferred: Boolean): Option[MergeStats] = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    val aux = new AuxJobs(spark.sparkContext)
     val quarantineDir = s"$root/quarantine/constraints-v${snap.version + 1}-b$batchId-" +
       java.util.UUID.randomUUID().toString.take(8)
     var committed = false
@@ -875,11 +840,6 @@ final class LakeTable(spark: SparkSession, val root: String,
       val (evolved, scApplied, scQuarantined) = evolveSchema(snap, scRows)
       // ---- the change stream for this batch (all data events) ----
       val data = batch.filter(col("op") =!= "schema_change")
-      // constraints keep quarantined rows out of the merge window, so a
-      // constrained table counts the delivered events in a job of its own,
-      // beside the write; awaited before the commit
-      val groupedF =
-        if (evolved.constraints.isEmpty) None else Some(aux(groupedCounters(data)))
 
       // ---- project events to storage rows ([[storageProjection]]).
       // `_ver` = commit version that last modified the row: source rows carry
@@ -888,7 +848,7 @@ final class LakeTable(spark: SparkSession, val root: String,
       // strictly changes the key's state — the winner's own _ver is therefore
       // exactly "version of last modification" with no extra comparison, and a
       // re-delivered duplicate keeps the old _ver (no spurious change-feed row).
-      val src0 = data.select(
+      val src = data.select(
         storageProjection(evolved) ++ Seq(
           col("lsn").as("_lsn"),
           (col("op") === "delete").as("_deleted"),
@@ -896,8 +856,12 @@ final class LakeTable(spark: SparkSession, val root: String,
           col("event_id").as("__tie"),
           lit(-1L).as("__pref"),
           lit(true).as("__src")): _*)
-      val (src, constraintQuarantinedF) =
-        enforceConstraints(evolved, src0, quarantineDir, aux)
+      // CHECK constraints ([[addConstraint]]): an upsert violates when one
+      // expression is exactly FALSE
+      val violates =
+        if (evolved.constraints.isEmpty) lit(false)
+        else evolved.constraints.values.toSeq
+          .map(c => expr(c) <=> lit(false)).reduce(_ || _) && !col("_deleted")
 
       // copy-on-write target rows, via readStoredTagged: when touched files
       // include deferred-merge deltas, the per-row `__pref` (base −1, delta
@@ -917,29 +881,36 @@ final class LakeTable(spark: SparkSession, val root: String,
       // the window's ClusteredDistribution, so batch-dedup + target-merge run
       // in a single exchange, and the output files come out range-clustered by
       // key (tight min/max → effective pruning on the next merge).
-      // The lineage counters come from the same window: `__srcN`, the running
-      // count of source rows in `w`'s order, is 1 on a key's first source row,
-      // its batch winner (max `(lsn, event_id)`); on `w`'s partitioning and
-      // order it adds no sort and no exchange. The observation sits ABOVE the
-      // exchange: below it, the range-sampling job would run it too and count
-      // twice.
+      // A constraint violator rides the window flagged (`ok` false): the key's
+      // winner is its first PASSING row in `w`'s order (`__okN`, the running
+      // count of passing rows, is 1), so a quarantined batch winner exposes
+      // the key's older passing event or its target row. `ok` is evaluated
+      // above the exchange: the flag never crosses the shuffle.
+      // The lineage counters come from the same window and count the batch
+      // AS DELIVERED: `__srcN`, the running count of source rows, is 1 on a
+      // key's first source row, its batch winner (max `(lsn, event_id)`).
+      // Both running counts share `w`'s partitioning and order, so they add
+      // no sort and no exchange. The observation sits ABOVE the exchange:
+      // below it, the range-sampling job would run it too and count twice.
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(col("_lsn").desc, col("__tie").desc, col("__pref").asc)
-      val ranked = window.repartitionByRange(col("repo"), col("path"))
-        .withColumns(Map(
-          "__rn" -> row_number().over(w),
-          "__srcN" -> sum(when(col("__src"), 1))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
-      lazy val observed = org.apache.spark.sql.Observation()
+      val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val ok = !col("__src") || !violates
+      val observed = org.apache.spark.sql.Observation()
       val winner = col("__src") && col("__srcN") === 1
-      val merged = (if (groupedF.nonEmpty) ranked else ranked.observe(observed,
+      val merged = window.repartitionByRange(col("repo"), col("path"))
+        .withColumns(Map(
+          "__okN" -> sum(when(ok, 1)).over(running),
+          "__srcN" -> sum(when(col("__src"), 1)).over(running)))
+        .observe(observed,
           count(when(col("__src"), 1)).as("events"),
           count(when(winner, 1)).as("keys"),
           count(when(winner && col("_deleted"), 1)).as("deletes"),
-          coalesce(max(when(col("__src"), col("_lsn"))), lit(-1L)).as("maxLsn")))
-        .filter(col("__rn") === 1)
-        .drop("__rn", "__srcN", "__src", "__tie", "__pref")
+          coalesce(max(when(col("__src"), col("_lsn"))), lit(-1L)).as("maxLsn"),
+          count(when(col("__src") && !ok, 1)).as("quarantined"))
+        .filter(ok && col("__okN") === 1)
+        .drop("__okN", "__srcN", "__src", "__tie", "__pref")
 
       // ---- write new data files: live rows and tombstones to SEPARATE files
       // (Iceberg delete-file analog) so live reads never open tombstone bytes.
@@ -953,15 +924,20 @@ final class LakeTable(spark: SparkSession, val root: String,
         writeData(toPhysicalCols(evolved.physicalName, merged), newDir, statColumns))
         .map(_.copy(delta = deferred))
 
-      val Counters(eventsSeen, distinctKeys, deleteWinners, dataMaxLsn) = groupedF match {
-        case Some(f) => Await.result(f, Duration.Inf)
-        case None =>
-          // a write the optimizer proved empty reports no metrics at all
-          val m = observed.get
-          def n(k: String, empty: Long) = m.getOrElse(k, empty).asInstanceOf[Long]
-          Counters(n("events", 0L), n("keys", 0L), n("deletes", 0L), n("maxLsn", -1L))
+      // a write the optimizer proved empty reports no metrics at all
+      val m = observed.get
+      def n(k: String, empty: Long) = m.getOrElse(k, empty).asInstanceOf[Long]
+      val (eventsSeen, distinctKeys, deleteWinners, constraintQuarantined) =
+        (n("events", 0L), n("keys", 0L), n("deletes", 0L), n("quarantined", 0L))
+      // the violators land in the attempt's quarantine dir BEFORE the commit
+      // (a failed quarantine write fails the batch, never a silent row loss)
+      if (constraintQuarantined > 0) {
+        src.filter(violates).select((evolved.schema.fieldNames.toSeq :+ "_lsn").map(col): _*)
+          .write.mode("overwrite").parquet(quarantineDir)
+        System.err.println(s"[lake] QUARANTINED $constraintQuarantined rows violating CHECK " +
+          s"(${evolved.constraints.keys.mkString(", ")}) -> $quarantineDir")
       }
-      val batchMaxLsn = math.max(dataMaxLsn,
+      val batchMaxLsn = math.max(n("maxLsn", -1L),
         scRows.lastOption.map(_.getLong(0)).getOrElse(-1L))
 
       val next = evolved.copy(
@@ -972,9 +948,6 @@ final class LakeTable(spark: SparkSession, val root: String,
         maxLsn = math.max(snap.maxLsn, batchMaxLsn),
         operation = operation,
         manifestSummaries = Nil) // the commit writes its own
-      // the concurrent quarantine job must have LANDED before the commit does
-      // (a failed quarantine write fails the batch, never a silent row loss)
-      val constraintQuarantined = Await.result(constraintQuarantinedF, Duration.Inf)
       committed = log.tryCommit(next)
       if (!committed) None // lost the race: the caller recomputes
       else Some(MergeStats(epoch, batchId, next.version,
@@ -987,10 +960,8 @@ final class LakeTable(spark: SparkSession, val root: String,
         constraintQuarantined = constraintQuarantined,
         noOp = false))
     } finally if (!committed) {
-      // a failed or lost attempt: none of its auxiliary jobs may outlive it,
-      // and its quarantined rows belong to a batch that never committed (a
-      // recompute quarantines them again)
-      aux.cancel()
+      // a failed or lost attempt: its quarantined rows belong to a batch that
+      // never committed (a recompute quarantines them again)
       val q = new org.apache.hadoop.fs.Path(quarantineDir)
       q.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(q, true)
     }
@@ -1024,33 +995,6 @@ final class LakeTable(spark: SparkSession, val root: String,
     }.collect()
     (parts.toSeq.flatMap(_._1).sortBy(_.getLong(0)), parts.iterator.flatMap(_._2).toSet)
   }
-
-  /** The lineage counters of a batch's data events from one grouped job:
-    * per key, the winning op by `(lsn, event_id)`, the event count and the
-    * max lsn, folded per partition; only the partials reach the driver.
-    */
-  private def groupedCounters(data: DataFrame): Counters =
-    data.groupBy(col("repo"), col("path"))
-      .agg(
-        max_by(col("op"), struct(col("lsn"), col("event_id"))).as("__winOp"),
-        count(lit(1)).as("__n"),
-        max(col("lsn")).as("__maxLsn"))
-      .rdd.mapPartitions { it =>
-        var keys = 0L; var n = 0L; var del = 0L; var mx = -1L
-        it.foreach { r =>
-          keys += 1
-          n += r.getLong(3)
-          if (!r.isNullAt(2) && r.getString(2) == "delete") del += 1
-          // null-safe: an all-null-lsn group adds nothing to the max
-          val m = if (r.isNullAt(4)) -1L else r.getLong(4)
-          if (m > mx) mx = m
-        }
-        Iterator.single(Counters(n, keys, del, mx))
-      }.collect()
-      .foldLeft(Counters(0L, 0L, 0L, -1L)) { (a, p) =>
-        Counters(a.events + p.events, a.keys + p.keys, a.deletes + p.deletes,
-          math.max(a.maxLsn, p.maxLsn))
-      }
 
   /** Event→storage-row projection under `snap`'s (evolved) schema: extras
     * gated by column add-LSN; the PARSE type of a widened column is gated by
@@ -1574,43 +1518,6 @@ object LakeTable {
   /** Attempts a writer makes before it gives up on losing commit races. */
   private[lake] val maxCommitAttempts = 8
 
-  /** Driver-side pool for overlapping small independent Spark actions with a
-    * bigger one in the same merge (guide §2.6). A merge attempt submits at
-    * most two ([[AuxJobs]]: a constrained table's grouped counters and its
-    * quarantine), so four threads serve two concurrent writers; further
-    * writers queue rather than grow the pool. Daemon threads so an idle pool
-    * never blocks JVM exit.
-    */
-  private[lake] lazy val auxJobEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-        val t = new Thread(r, "lake-aux-job"); t.setDaemon(true); t
-      }))
-
-  /** The auxiliary Spark actions of ONE merge attempt, run on [[auxJobEc]]
-    * under a job tag of their own, so an attempt that fails or loses its
-    * commit race can cancel their jobs and wait until none is left running.
-    */
-  private[lake] final class AuxJobs(sc: org.apache.spark.SparkContext) {
-    private val tag = s"graft-merge-aux-${java.util.UUID.randomUUID()}"
-    private var started = List.empty[scala.concurrent.Future[_]]
-
-    def apply[T](f: => T): scala.concurrent.Future[T] = {
-      val fut = scala.concurrent.Future {
-        sc.addJobTag(tag)
-        try f finally sc.removeJobTag(tag)
-      }(auxJobEc)
-      started ::= fut
-      fut
-    }
-
-    /** Cancel the running jobs, then wait for every action to finish. */
-    def cancel(): Unit = {
-      sc.cancelJobsWithTag(tag)
-      started.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
-    }
-  }
-
   /** UTF-8 unsigned lexicographic comparison — the order Parquet uses for
     * binary stats AND the order Spark's UTF8String sorts by. Java String
     * compareTo (UTF-16 code units) disagrees for supplementary-plane chars,
@@ -1835,11 +1742,6 @@ object LakeTable {
     }
     if (known && mx != Long.MinValue) Some(mx) else None
   }
-
-  /** A batch's lineage counters over its data events: events, distinct
-    * keys, keys whose winner is a delete, and the max lsn (-1 when none).
-    */
-  private[lake] final case class Counters(events: Long, keys: Long, deletes: Long, maxLsn: Long)
 
   /** Default secondary stat columns (north-rule schema): small-cardinality
     * string columns a user predicates on. `content` is deliberately NOT

@@ -97,28 +97,44 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("fused MERGE plan has exactly one exchange for dedup+merge+clustering") {
-    // reproduce the merge's core plan shape on a standalone union, with the
-    // running count of source rows the lineage counters read
+    // reproduce the merge's core plan shape on a standalone union: the
+    // running counts of passing rows (the winner rule) and of source rows
+    // (the lineage counters), without and with a CHECK constraint
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val src = Seq(("r1", "a", 1L, 0L, true), ("r1", "a", 2L, 0L, false), ("r2", "b", 3L, 0L, true))
-      .toDF("repo", "path", "_lsn", "__tie", "__src")
+    val src = Seq(("r1", "a", 1L, true, "scala"), ("r1", "a", 2L, false, "scala"),
+      ("r2", "b", 2L, false, "scala"), ("r2", "b", 3L, true, "cobol"))
+      .toDF("repo", "path", "_lsn", "__src", "lang")
     val w = Window
       .partitionBy(col("repo"), col("path"))
-      .orderBy(col("_lsn").desc, col("__tie").desc)
-    val merged = src.repartitionByRange(col("repo"), col("path"))
-      .withColumns(Map(
-        "__rn" -> row_number().over(w),
-        "__srcN" -> sum(when(col("__src"), 1))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))))
-      .filter(col("__rn") === 1)
-    val plan = merged.queryExecution.executedPlan.toString
-    val exchanges = "Exchange".r.findAllIn(plan).size
-    assert(exchanges === 1,
-      s"expected the range exchange to satisfy the window's clustering; got $exchanges:\n$plan")
-    // both window columns share one sort and one window operator
-    assert("Sort \\[".r.findAllIn(plan).size === 1, plan)
-    assert("Window \\[".r.findAllIn(plan).size === 1, plan)
+      .orderBy(col("_lsn").desc)
+    val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    for ((violates, winners) <- Seq(
+        lit(false) -> Set(("r1", "a", 2L), ("r2", "b", 3L)),
+        (expr("lang <> 'cobol'") <=> lit(false)) -> Set(("r1", "a", 2L), ("r2", "b", 2L)))) {
+      val ok = !col("__src") || !violates
+      val merged = src.repartitionByRange(col("repo"), col("path"))
+        .withColumns(Map(
+          "__okN" -> sum(when(ok, 1)).over(running),
+          "__srcN" -> sum(when(col("__src"), 1)).over(running)))
+        .filter(ok && col("__okN") === 1)
+      val plan = merged.queryExecution.executedPlan.toString
+      val exchanges = "Exchange".r.findAllIn(plan).size
+      assert(exchanges === 1,
+        s"expected the range exchange to satisfy the window's clustering; got $exchanges:\n$plan")
+      // both window columns share one sort and one window operator
+      assert("Sort \\[".r.findAllIn(plan).size === 1, plan)
+      assert("Window \\[".r.findAllIn(plan).size === 1, plan)
+      // the flag is computed above the exchange: only the input columns cross it
+      val shuffled = merged.queryExecution.sparkPlan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+          e.child.output.map(_.name)
+      }
+      assert(shuffled === Seq(src.columns.toSeq), plan)
+      // a violating source row never wins: the key's older row does
+      assert(merged.select("repo", "path", "_lsn").as[(String, String, Long)]
+        .collect().toSet === winners, plan)
+    }
   }
 
   test("change feed pushes the _ver commit-version predicate to the scan") {

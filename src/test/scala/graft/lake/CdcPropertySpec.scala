@@ -79,7 +79,8 @@ class CdcPropertySpec extends SparkSuite {
     def ev(lsn: Long, op: String, repo: String = null, path: String = null,
            lang: String = "scala", sc: String = null, eventId: Long = 0L): Row =
       Row(lsn, eventId, new java.sql.Timestamp(1700000000000L + lsn), op,
-        repo, path, "c", lang, "x", sc, null)
+        repo, path, s"c$lsn", lang, "x", sc, null)
+    val seed = Seq(ev(1, "insert", "r1", "a"), ev(2, "insert", "r2", "c"))
     val schemaOnly = Seq(
       ev(10, "schema_change", sc = """{"addColumn":{"name":"stars","type":"int"}}"""),
       ev(11, "schema_change", sc = """{"widenColumn":{"name":"nope","type":"long"}}"""))
@@ -106,7 +107,7 @@ class CdcPropertySpec extends SparkSuite {
           spark.sparkContext.parallelize(rows, 2), EventLog.eventSchema)
         if (deferred) t.mergeDeferred(df, "stats", batchId) else t.merge(df, "stats", batchId)
       }
-      if (seeded) apply(Seq(ev(1, "insert", "r1", "a"), ev(2, "insert", "r2", "c")), 0)
+      if (seeded) apply(seed, 0)
 
       val sc = apply(schemaOnly, 1)
       assert(counters(sc) === expected(schemaOnly), clue)
@@ -124,6 +125,21 @@ class CdcPropertySpec extends SparkSuite {
       // enforcement runs on the delivered rows, before the per-key dedup
       assert(c.constraintQuarantined === 3L, clue)
       assert(t.head().maxLsn === 24L, clue)
+      // stored rows: last-wins over the delivered data events with the
+      // violators removed, so a quarantined batch winner exposes the key's
+      // older passing row
+      val passing = (if (seeded) seed else Nil) ++ mixed ++
+        constrained.filterNot(r => r.getString(7) == "cobol" && r.getString(3) != "delete")
+      val want = passing.filter(_.getString(3) != "schema_change")
+        .groupBy(r => (r.getString(4), r.getString(5))).values
+        .map(_.maxBy(r => (r.getLong(0), r.getLong(1))))
+        .filter(_.getString(3) != "delete")
+        .map(r => (r.getString(4), r.getString(5), r.getString(6), r.getString(7))).toSet
+      val stored = t.read().select("repo", "path", "commit", "lang").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSet
+      assert(stored === want, clue)
+      // r1/a's delivered winner, the lsn-21 cobol update, is quarantined
+      assert(stored.contains(("r1", "a", "c20", "scala")), clue)
     }
   }
 }

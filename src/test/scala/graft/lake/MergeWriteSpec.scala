@@ -7,8 +7,8 @@ import graft.SparkSuite
 import graft.events.EventLog
 
 /** The lake write returns its files' manifest entries from the write tasks,
-  * and an unconstrained copy-on-write merge runs one pre-pass job plus the
-  * write.
+  * and a copy-on-write merge runs one pre-pass job plus the write, and one
+  * quarantine write when a CHECK constraint rejects a row.
   */
 class MergeWriteSpec extends SparkSuite {
 
@@ -132,5 +132,28 @@ class MergeWriteSpec extends SparkSuite {
     val jobs = jobsOf(t.merge(next, "e", 1))
     assert(jobs <= 4, s"$jobs jobs")
     assert(t.read().count() === 20L)
+  }
+
+  test("a constrained copy-on-write merge runs at most 4 jobs, 5 with a violator") {
+    val t = new LakeTable(spark, tmpDir("merge-jobs-check"))
+    t.create(LakeTable.baseSchema)
+    t.merge(batch((1 to 20).map(i => ev(i, "insert", s"r${i % 3}", s"p$i")): _*), "e", 0)
+    t.addConstraint("no-cobol", "lang <> 'cobol'")
+    // pre-pass, range sample, shuffle map stage, write
+    val clean = jobsOf(t.merge(batch(
+      ev(21, "update", "r1", "p1"), ev(22, "delete", "r2", "p2"), ev(23, "insert", "r9", "p9")),
+      "e", 1))
+    assert(clean <= 4, s"$clean jobs")
+    // the same four, then the quarantine write
+    var stats: MergeStats = null
+    val dirty = jobsOf {
+      stats = t.merge(batch(
+        ev(24, "update", "r1", "p4", lang = "cobol"), ev(25, "insert", "r8", "p8")), "e", 2)
+    }
+    assert(dirty <= 5, s"$dirty jobs")
+    assert(stats.constraintQuarantined === 1L)
+    assert(t.read().count() === 21L)
+    assert(t.read().filter("path = 'p4'").select("lang").collect().map(_.getString(0)) ===
+      Array("scala"))
   }
 }
