@@ -708,7 +708,7 @@ private[graft] object OracleGen {
        |FROM scored QUALIFY rank <= $k""".stripMargin
   }
 
-  /** IVF top-k (mirrors Ivf.ivfTopK with portable = true): the full Lloyd
+  /** IVF top-k (mirrors Ivf.ivfTopK): the full Lloyd
     * training loop UNROLLED as SQL — sha256-ordered init (c0), then per
     * iteration an argmin assignment (aN: row_number over (distance, cell))
     * and a per-(cell, dim) mean (mN) folded back into centroid lists (cN,
@@ -1522,16 +1522,15 @@ object Queries {
       "embedding", "vec_id", k = 5, planes = 6, tables = 8)
   }
 
-  /** IVF coarse-quantizer ANN. portable = true seeds k-means from sha256-hex
-    * id order so the ENTIRE iterative training loop replays in DuckDB
+  /** IVF coarse-quantizer ANN. k-means seeds from sha256-hex id order, so
+    * the ENTIRE iterative training loop replays in DuckDB
     * (OracleGen.ivfTopKSql unrolls the Lloyd iterations as CTEs); recall vs
-    * brute force is additionally asserted in SimilaritySpec on the xxhash64
-    * fast path.
+    * brute force is additionally asserted in OpsSpec (`SimilaritySpec`).
     */
   def ivfTopK(s: SparkSession, d: String): DataFrame = {
     val e = embeddings(s, d)
     graft.ops.Ivf.ivfTopK(e, e.filter(col("vec_id") < 20),
-      "embedding", "vec_id", k = 5, nlist = 16, nprobe = 4, portable = true)
+      "embedding", "vec_id", k = 5, nlist = 16, nprobe = 4)
   }
 
   /** Full standard-API lake round trip: plain rows → `df.write.format
@@ -1668,7 +1667,7 @@ object Queries {
     val e = embeddings(s, d)
     val tbl = "ivf_probe_idx_" + Integer.toHexString(d.hashCode).takeWhile(_ != '-')
     val idx = graft.ops.Ivf.buildIndex(e, "embedding", "vec_id", tbl,
-      nlist = 16, iters = 3, buckets = 16, portable = true)
+      nlist = 16, iters = 3, buckets = 16)
     graft.ops.Ivf.probeTopK(idx, e.filter(col("vec_id") < 20),
       "embedding", "vec_id", k = 5, nprobe = 4)
   }
@@ -1691,13 +1690,12 @@ object Queries {
     documents(s, d).select(col("doc_id"), col("lang"),
       graft.ops.TextOps.langId(col("text")).as("lang_pred"))
 
-  /** Portable (sha256-hex) winnowing fingerprint — oracle-checkable; the
-    * xxhash64 fast path keeps its golden test in OpsSpec. The DataFrame-level
-    * variant stages the token-hash array once per row.
+  /** Winnowing fingerprint in the sha256-hex hash space the DuckDB oracle
+    * replays (OracleGen.fingerprintSql).
     */
   def fingerprintQ(s: SparkSession, d: String): DataFrame =
     graft.ops.TextOps.fingerprintDf(documents(s, d).select("doc_id", "text"),
-      "text", "fingerprint", k = 8, portable = true)
+      "text", "fingerprint", k = 8)
       .select("doc_id", "fingerprint")
 
   // ------------------------------------------------------------------

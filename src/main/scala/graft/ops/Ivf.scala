@@ -1,39 +1,28 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbor — the coarse-quantizer
   * scale path next to sign-LSH (Similarity.lshTopK):
   *
-  *  1. TRAIN: Lloyd k-means over the corpus. Assignment joins the corpus
-  *     against a BROADCAST centroids DataFrame and takes the min-distance
-  *     cell per row with map-side partial aggregation — the pairs pipeline
-  *     through the hash-agg without materializing, and the plan stays
-  *     O(1) in nlist (the previous literal-array argmin inlined nlist × dim
-  *     doubles into the plan and paid an O(nlist) interpreted expression
-  *     per row — fine at nlist=16, catastrophic at a realistic nlist ≥ 4k).
-  *     Each iteration reduces to `nlist × dim` running means via posexplode
-  *     + groupBy; only that tiny table returns to the driver.
+  *  1. TRAIN: Lloyd k-means over the corpus with the trainer PQ shares
+  *     ([[Lloyd]], one subspace as wide as the vector): on the driver up to
+  *     `GRAFT_ANN_TRAIN_CAP` rows, one Spark job per iteration over the
+  *     whole corpus past it.
   *  2. INDEX: every corpus vector is tagged with its nearest centroid's cell
   *     id — at scale this is the partition/bucket key, so a cell's vectors
   *     co-locate and a probe touches `nprobe / nlist` of the data.
   *  3. SEARCH: each query probes its `nprobe` nearest cells only; exact
   *     cosine on the probed subset, per-query top-k window.
   *
-  * Everything is deterministic given (data, seed): init picks the `nlist`
-  * corpus rows with the smallest xxhash64(id); distance ties break on the
-  * smaller cell id.
+  * Everything is deterministic given the data: init picks the `nlist`
+  * corpus rows with the smallest (sha256(id), id), the order
+  * `OracleGen.ivfTopKSql` replays; distance ties break on the smaller cell
+  * id.
   */
 object Ivf {
-
-  /** Squared L2 distance between two vector columns — the native codegen'd
-    * [[graft.functions.SquaredDistance]] kernel (bit-identical to the
-    * previous zip_with+aggregate fold: same left-to-right summation order).
-    */
-  private def dist2(v: Column, c: Column): Column =
-    graft.functions.VecOps.vecSqDist(v, c)
 
   /** Centroids as a broadcastable two-column frame (__cell, __cv). */
   private def centroidsDf(spark: org.apache.spark.sql.SparkSession,
@@ -42,120 +31,36 @@ object Ivf {
     cents.zipWithIndex.toSeq.map { case (c, i) => (i, c.toSeq) }.toDF("__cell", "__cv")
   }
 
-  /** The (id, double-vec) projection every IVF stage consumes — computed and
-    * PERSISTED once per call ([[trainCentroids]]/[[ivfTopK]]): each Lloyd
-    * iteration plus the final index assignment otherwise re-reads and
-    * re-casts the whole corpus.
-    */
+  /** The (id, double-vec) projection every IVF stage consumes. */
   private def projected(df: DataFrame, vecCol: String, idCol: String): DataFrame =
     df.select(col(idCol).as("__id"), Similarity.asDoubleVec(col(vecCol)).as("__v"))
 
-  /** Nearest-cell assignment over a projected (__id, __v) frame:
-    * broadcast-join × centroids, min_by on (dist, cell) per row —
-    * deterministic tiebreak, one partial-aggregated shuffle on the row id,
-    * no vectors in the plan.
-    */
-  private def assignProjected(pv: DataFrame, cents: Array[Array[Double]]): DataFrame =
-    pv.crossJoin(broadcast(centroidsDf(pv.sparkSession, cents)))
-      .withColumn("__d", dist2(col("__v"), col("__cv")))
-      .groupBy(col("__id"))
-      .agg(min_by(struct(col("__cell"), col("__v")),
-        struct(col("__d"), col("__cell"))).as("__m"))
-      .select(col("__id"), col("__m.__cell").as("__cell"), col("__m.__v").as("__v"))
+  private def train(pv: DataFrame, nlist: Int, iters: Int): Array[Array[Double]] =
+    Lloyd.train(pv, None, 1, nlist, iters).head
 
-  private def trainProjected(pv: DataFrame, nlist: Int,
-                             iters: Int, portable: Boolean): Array[Array[Double]] = {
-    val h = if (portable) sha2(col("__id").cast("string"), 256) else xxhash64(col("__id"))
-    // ONE ordered top-k job serves seeding AND (when the corpus fits the
-    // driver cap) the whole training set: the previous shape re-ran
-    // (broadcast join + min_by shuffle + posexplode shuffle + collect) per
-    // Lloyd iteration to produce nlist × dim doubles (guide §1.2: the
-    // distributed algorithm first — an iteration whose working state is
-    // kilobytes belongs on the driver). Same seeding order, same
-    // assignment semantics (squared-L2, tie → smaller cell), same
-    // empty-cell rule; only float summation order differs (hash order vs
-    // partition order) — the same last-ulp tolerance the DuckDB oracle
-    // twin already carries. Corpora past the cap keep the distributed
-    // loop UNSAMPLED (the portable oracle replays full-corpus training,
-    // and honest k-means wants the full data when it cannot fit a sample).
-    val cap = math.max(nlist, Pq.trainCap)
-    val ordered = pv
-      .select(col("__v"), h.as("__h"), col("__id").as("__i"))
-      .orderBy(col("__h"), col("__i")).limit(cap + 1)
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(ordered.nonEmpty, "empty corpus")
-    if (ordered.length <= cap) driverLloyd(ordered, nlist, iters)
-    else {
-      var cents = ordered.take(nlist)
-      // the fallback loop re-reads the projected corpus once per iteration —
-      // cache it for the loop's lifetime only (the caller's final assignment
-      // reads the corpus afresh), as the pre-driver-Lloyd shape did
-      pv.persist()
-      try {
-        for (_ <- 0 until iters) {
-          val means = assignProjected(pv, cents)
-            .select(col("__cell"), posexplode(col("__v")))
-            .groupBy(col("__cell"), col("pos"))
-            .agg(avg(col("col")).as("m"))
-            .collect()
-          val next = cents.map(_.clone())
-          for (r <- means) next(r.getInt(0))(r.getInt(1)) = r.getDouble(2)
-          cents = next
-        }
-      } finally pv.unpersist()
-      cents
-    }
+  /** Each query with its `nprobe` nearest cells, `(query_id, __qv, __cell)`:
+    * a window over the broadcast centroid join — queries are small by
+    * contract, the window is per-query-local.
+    */
+  private def probeCells(queries: DataFrame, vecCol: String, idCol: String,
+                         cents: Array[Array[Double]], nprobe: Int): DataFrame = {
+    val wProbe = Window.partitionBy(col("query_id"))
+      .orderBy(col("__d").asc, col("__cell").asc)
+    queries.select(col(idCol).as("query_id"), Similarity.asDoubleVec(col(vecCol)).as("__qv"))
+      .crossJoin(broadcast(centroidsDf(queries.sparkSession, cents)))
+      .withColumn("__d", graft.functions.VecOps.vecSqDist(col("__qv"), col("__cv")))
+      .withColumn("__pr", row_number().over(wProbe))
+      .filter(col("__pr") <= nprobe)
+      .select(col("query_id"), col("__qv"), col("__cell"))
   }
 
-  /** Lloyd iterations on the driver over an in-memory corpus: argmin cell by
-    * squared L2 (left-to-right sum, tie → smaller cell — exactly
-    * [[assignProjected]]'s min_by ordering), per-cell per-position means,
-    * empty cells keep their previous centroid.
+  /** Exact top-k over the probed cells of `(nbr_id, __cv, __cell)` corpus
+    * rows. A corpus row lives in exactly one cell, so a (query, nbr) pair
+    * matches at most once; no dedup needed.
     */
-  private def driverLloyd(sample: Array[Array[Double]], nlist: Int,
-                          iters: Int): Array[Array[Double]] = {
-    var cents = sample.take(nlist).map(_.clone())
-    val dim = cents(0).length
-    val rows = sample.filter(_.length == dim)
-    for (_ <- 0 until iters) {
-      val k = cents.length
-      val sums = Array.ofDim[Double](k, dim)
-      val counts = new Array[Long](k)
-      for (v <- rows) {
-        var best = 0
-        var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < k) {
-          val cw = cents(c)
-          var d = 0.0
-          var j = 0
-          while (j < dim) { val x = v(j) - cw(j); d += x * x; j += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        val acc = sums(best)
-        var j = 0
-        while (j < dim) { acc(j) += v(j); j += 1 }
-      }
-      cents = Array.tabulate(k)(c =>
-        if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c)))
-    }
-    cents
-  }
-
-  /** Lloyd iterations; empty cells keep their previous centroid. Collects
-    * only `nlist × dim` aggregates per iteration (driver-tiny at any corpus
-    * size). `portable = true` seeds from sha256-hex order of the id (instead
-    * of xxhash64) so the whole training loop is replayable in DuckDB — the
-    * same fast-path/portable twin pattern as minhash and the fingerprint;
-    * both orders carry an id tiebreak so init is total regardless of hash
-    * collisions.
-    */
-  def trainCentroids(
-      df: DataFrame, vecCol: String, idCol: String,
-      nlist: Int, iters: Int = 3, portable: Boolean = false): Array[Array[Double]] =
-    trainProjected(projected(df, vecCol, idCol), nlist, iters, portable)
+  private def searchCells(cells: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    Similarity.topKByCosine(cells.join(broadcast(probes), Seq("__cell"))
+      .filter(col("query_id") =!= col("nbr_id")), k)
 
   /** A trained, persisted IVF index: `table` holds the assigned corpus as a
     * BUCKETED parquet table keyed by `__cell` (so probes bucket-prune), and
@@ -172,12 +77,10 @@ object Ivf {
     */
   def buildIndex(
       corpus: DataFrame, vecCol: String, idCol: String, table: String,
-      nlist: Int = 16, iters: Int = 3, buckets: Int = 0,
-      portable: Boolean = false): IvfIndex = {
+      nlist: Int = 16, iters: Int = 3, buckets: Int = 0): IvfIndex = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val pv = projected(corpus, vecCol, idCol)
-    val cents = trainProjected(pv, nlist, iters, portable)
+    val cents = train(pv, nlist, iters)
     // assignment is a codegen'd per-row argmin (AnnKernels.nearestCell) —
     // no broadcast join, no min_by shuffle; the only exchange left is the
     // bucketed write's own clustering (which the index layout needs anyway)
@@ -189,8 +92,8 @@ object Ivf {
     graft.kernel.Bucketing.writeBucketed(assigned, table, nBuckets, Seq("__cell"))
     graft.kernel.Bucketing.dropManaged(spark, s"${table}_centroids")
     graft.kernel.Bucketing.withLocation(
-      cents.zipWithIndex.toSeq.map { case (v, i) => (i, v.toSeq) }.toDF("__cell", "__cv")
-        .coalesce(1).write.mode("overwrite").format("parquet"), s"${table}_centroids")
+      centroidsDf(spark, cents).coalesce(1).write.mode("overwrite").format("parquet"),
+      s"${table}_centroids")
       .saveAsTable(s"${table}_centroids")
     IvfIndex(table, cents)
   }
@@ -214,15 +117,7 @@ object Ivf {
       index: IvfIndex, queries: DataFrame, vecCol: String, idCol: String,
       k: Int = 5, nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    val v = Similarity.asDoubleVec(col(vecCol))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d").asc, col("__cell").asc)
-    val q = queries.select(col(idCol).as("query_id"), v.as("__qv"))
-      .crossJoin(broadcast(centroidsDf(spark, index.centroids)))
-      .withColumn("__d", dist2(col("__qv"), col("__cv")))
-      .withColumn("__pr", row_number().over(wProbe))
-      .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("__qv"), col("__cell"))
+    val q = probeCells(queries, vecCol, idCol, index.centroids, nprobe)
       .persist() // feeds the distinct-cell collect AND the probe join
     // Spark's DisableUnnecessaryBucketedScan turns bucketed reads OFF when no
     // join/agg needs the distribution — it does not account for bucket
@@ -238,14 +133,7 @@ object Ivf {
       val cells = q.select(col("__cell")).distinct().collect().map(_.getInt(0))
       val c = spark.table(index.table)
         .filter(col("__cell").isin(cells.map(x => x: Any).toSeq: _*))
-      val scored = c.join(broadcast(q), Seq("__cell"))
-        .filter(col("query_id") =!= col("nbr_id"))
-        .withColumn("cosine", round(Similarity.cosine(col("__qv"), col("__cv")), 6))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("nbr_id").asc)
-      scored.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("query_id"), col("rank"), col("nbr_id"), col("cosine"))
+      searchCells(c, q, k)
         .localCheckpoint() // executes HERE, inside the forced-bucketing window
     } finally {
       q.unpersist()
@@ -264,40 +152,16 @@ object Ivf {
     */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, vecCol: String, idCol: String,
-      k: Int = 5, nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,
-      portable: Boolean = false): DataFrame = {
-    // training is now ONE bounded collect (driver Lloyd) and assignment ONE
-    // codegen'd map — the corpus is scanned exactly twice with no shuffle on
-    // either pass, so the persist that amortized the old iters+1 re-reads
-    // would only cost a materialization here.
+      k: Int = 5, nlist: Int = 16, nprobe: Int = 4, iters: Int = 3): DataFrame = {
+    // training is ONE bounded collect (driver Lloyd) below the cap and
+    // assignment ONE codegen'd map — the corpus is scanned twice with no
+    // shuffle on either pass, so a persist would only cost a materialization
     val pv = projected(corpus, vecCol, idCol)
-    val cents = trainProjected(pv, nlist, iters, portable)
+    val cents = train(pv, nlist, iters)
     val c = pv.select(col("__id").as("nbr_id"), col("__v").as("__cv"),
       graft.functions.AnnKernels.nearestCellCol(col("__v"), cents).as("__cell"))
       .filter(col("__cell").isNotNull)
-    // query side: nprobe nearest cells via a window over the (tiny) broadcast
-    // join — queries are small by contract, the window is per-query-local
-    val v = Similarity.asDoubleVec(col(vecCol))
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d").asc, col("__cell").asc)
-    val q = queries.select(col(idCol).as("query_id"), v.as("__qv"))
-      .crossJoin(broadcast(centroidsDf(queries.sparkSession, cents)))
-      .withColumn("__d", dist2(col("__qv"), col("__cv")))
-      .withColumn("__pr", row_number().over(wProbe))
-      .filter(col("__pr") <= nprobe)
-      .select(col("query_id"), col("__qv"), col("__cell"))
-    // a corpus row lives in exactly one cell → (query, nbr) matches at most
-    // once; no dedup needed
-    // rank on the ROUNDED cosine (then id): the 6-decimal value is what any
-    // two engines agree on, so near-ties cannot rank-swap vs the oracle
-    val scored = c.join(broadcast(q), Seq("__cell"))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .withColumn("cosine", round(Similarity.cosine(col("__qv"), col("__cv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("nbr_id"), col("cosine"))
+    searchCells(c, probeCells(queries, vecCol, idCol, cents, nprobe), k)
       .localCheckpoint()
   }
 }

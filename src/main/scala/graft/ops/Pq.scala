@@ -21,12 +21,12 @@ import graft.functions.VecOps.vecDot
   * codes against a BROADCAST per-query lookup table (m × ksub doubles per
   * query), no vectors move, no shuffle before the per-query top window; only
   * shortlist × queries original vectors are read back for the rerank.
-  * Training runs ALL m subspaces jointly — one Spark job per Lloyd
-  * iteration regardless of m (the per-subspace loop would pay m × iters job
-  * round-trips), and only m × ksub × subDim aggregates return to the driver.
+  * Training runs ALL m subspaces jointly in the quantizer trainer IVF
+  * shares ([[Lloyd]]): on the driver up to `GRAFT_ANN_TRAIN_CAP` rows, one
+  * Spark job per iteration over the whole corpus past it.
   *
   * Determinism: codebooks seed from the sha256 order of the row id (the
-  * same portable seeding as IVF), assignments tiebreak on the smaller code
+  * same seeding as IVF), assignments tiebreak on the smaller code
   * id, and the ADC sum folds the codes array LEFT-TO-RIGHT in one codegen'd
   * expression (a groupBy float sum would re-associate nondeterministically);
   * rerank uses the rounded-cosine + id ordering of
@@ -67,79 +67,17 @@ object Pq {
     } yield (s, c, cv.toSeq)).toSeq.toDF("__s", "__code", "__bv")
   }
 
-  /** Bounded training-sample size (rows collected to the driver for Lloyd).
-    * PQ codebooks are trained on a bounded sample at every scale — the
-    * standard practice for quantizer training (a few 10^4..10^5 vectors
-    * saturate m × ksub × subDim means; training on 10^9 rows buys nothing) —
-    * so the cap is the 100 TB design, not a shortcut. Env-tunable.
-    */
-  private[ops] def trainCap: Int =
-    sys.env.getOrElse("GRAFT_ANN_TRAIN_CAP", "65536").toInt
-
-  /** Train all m sub-codebooks jointly on a bounded DETERMINISTIC sample
-    * (the `trainCap` rows with the smallest (sha256(id), id) — the previous
-    * seeding order, extended from ksub seeds to the whole sample; one
-    * top-k job, one collect). Lloyd then runs ON THE DRIVER: the state is
-    * m × ksub × subDim means (kilobytes) and the flop count is
-    * sample × m × ksub × subDim per iteration — the distributed loop paid
-    * (broadcast join + min_by shuffle + posexplode shuffle + collect) Spark
-    * jobs PER ITERATION to compute the same kilobyte-sized result (guide
-    * §1.2: fix the algorithm before the per-task work; §5: the driver may
-    * hold bounded state). Assignment semantics are identical (squared-L2,
-    * tie → smaller code); only float summation order differs (sample order
-    * vs partition order), which the exact rerank makes unobservable.
+  /** Train all m sub-codebooks jointly with [[Lloyd.train]]: seeds are the
+    * first ksub rows in (sha256(id), id) order, and a corpus past
+    * `GRAFT_ANN_TRAIN_CAP` trains over every row, distributed, rather than
+    * on a sample. Rows that are not exactly `dim` wide or carry a NaN (a
+    * zero vector normalizes to NaN) do not train.
     */
   def train(corpus: DataFrame, vecCol: String, idCol: String, dim: Int,
             m: Int = 16, ksub: Int = 64, iters: Int = 4): PqModel = {
     require(dim % m == 0, s"dim $dim does not split into $m subspaces")
     require(ksub >= 2, "ksub must be at least 2")
-    val subDim = dim / m
-    val pv = projected(corpus, vecCol, idCol)
-    val sample = pv
-      .select(col("__v"), sha2(col("__id").cast("string"), 256).as("__h"),
-        col("__id").as("__i"))
-      .orderBy(col("__h"), col("__i")).limit(trainCap)
-      .collect().map(_.getSeq[Double](0).toArray)
-      .filter(v => v.length >= dim && !v.exists(_.isNaN))
-    require(sample.nonEmpty, "empty corpus")
-    val seeds = sample.take(ksub)
-    var books: Array[Array[Array[Double]]] =
-      Array.tabulate(m, seeds.length)((s, c) => seeds(c).slice(s * subDim, (s + 1) * subDim))
-    val ks = seeds.length
-    for (_ <- 0 until iters) {
-      val sums = Array.ofDim[Double](m, ks, subDim)
-      val counts = Array.ofDim[Long](m, ks)
-      for (v <- sample) {
-        var s = 0
-        while (s < m) {
-          val off = s * subDim
-          val book = books(s)
-          var best = 0
-          var bestD = Double.PositiveInfinity
-          var c = 0
-          while (c < ks) {
-            val cw = book(c)
-            var d = 0.0
-            var j = 0
-            while (j < subDim) { val x = v(off + j) - cw(j); d += x * x; j += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          counts(s)(best) += 1
-          val acc = sums(s)(best)
-          var j = 0
-          while (j < subDim) { acc(j) += v(off + j); j += 1 }
-          s += 1
-        }
-      }
-      books = Array.tabulate(m, ks)((s, c) =>
-        if (counts(s)(c) == 0) books(s)(c) // empty code keeps its codeword
-        else {
-          val n = counts(s)(c).toDouble
-          sums(s)(c).map(_ / n)
-        })
-    }
-    PqModel(dim, m, books)
+    PqModel(dim, m, Lloyd.train(projected(corpus, vecCol, idCol), Some(dim), m, ksub, iters))
   }
 
   /** Encode the corpus: one row per vector, `codes` = the m nearest-codeword
@@ -210,17 +148,12 @@ object Pq {
       Similarity.asDoubleVec(col(vecCol)).as("__cv"))
     val q = queries.select(col(idCol).as("query_id"),
       Similarity.asDoubleVec(col(vecCol)).as("__qv"))
-    val wRank = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nbr_id").asc)
     // the shortlist (≤ shortlist × queries id pairs) BROADCASTS into the
     // corpus-vector scan — the join must never shuffle the corpus vectors by
     // nbr_id (guide §3.1/§2.3: broadcast the provably tiny side; the rerank
     // reads exactly shortlist × queries vectors either way)
-    c.join(broadcast(short), Seq("nbr_id")).join(broadcast(q), Seq("query_id"))
-      .withColumn("cosine", round(Similarity.cosine(col("__qv"), col("__cv")), 6))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("nbr_id"), col("cosine"))
+    Similarity.topKByCosine(
+      c.join(broadcast(short), Seq("nbr_id")).join(broadcast(q), Seq("query_id")), k)
   }
 
   /** One-shot train → encode → search (the index-free convenience twin;

@@ -27,7 +27,6 @@ object Similarity {
 
   /** Cast an array<float>/array<numeric> embedding to array<double>. */
   def asDoubleVec(c: Column): Column = transform(c, x => x.cast("double"))
-  private def asDouble(c: Column): Column = asDoubleVec(c)
 
   /** Embedding width, probed from the data (schemas carry no fixed array
     * length): the MOST COMMON vector width, ties broken by the larger width —
@@ -59,14 +58,21 @@ object Similarity {
   def bruteForceTopK(
       corpus: DataFrame, queries: DataFrame, vecCol: String, idCol: String,
       k: Int = 5): DataFrame = {
-    val c = corpus.select(col(idCol).as("nbr_id"), asDouble(col(vecCol)).as("__cv"))
-    val q = queries.select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("nbr_id"))
-      .withColumn("cosine", round(cosine(col("__qv"), col("__cv")), 6))
+    val c = corpus.select(col(idCol).as("nbr_id"), asDoubleVec(col(vecCol)).as("__cv"))
+    val q = queries.select(col(idCol).as("query_id"), asDoubleVec(col(vecCol)).as("__qv"))
+    topKByCosine(c.crossJoin(broadcast(q)).filter(col("query_id") =!= col("nbr_id")), k)
+  }
+
+  /** The top-k tail every vector search ends in: over scored candidate
+    * pairs `(query_id, nbr_id, __qv, __cv)`, the `k` best per query by
+    * `round(cosine, 6)` desc then `nbr_id`, as `(query_id, rank, nbr_id,
+    * cosine)`. Brute force, sign-LSH, IVF and PQ all rank through it.
+    */
+  def topKByCosine(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
+    scored.withColumn("cosine", round(cosine(col("__qv"), col("__cv")), 6))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("nbr_id"), col("cosine"))
   }
@@ -79,26 +85,6 @@ object Similarity {
     Array.fill(planes, dim)(rnd.nextGaussian())
   }
 
-  /** Sign-LSH bucket id per row: bit i = sign(v · plane_i). Dim is probed
-    * from the data; rows of any other width are rejected (not truncated).
-    */
-  def signBuckets(df: DataFrame, vecCol: String, idCol: String,
-                  planes: Int, seed: Long, knownDim: Option[Int] = None): DataFrame = {
-    import graft.functions.VecOps.vecDot
-    val dim = knownDim.getOrElse(embeddingDim(df, vecCol))
-    val hp = hyperplanes(planes, dim, seed)
-    // stage the cast vector as a real column FIRST: it feeds every plane's
-    // dot product, and a multi-use non-cheap alias survives CollapseProject —
-    // the inline form re-evaluated the cast per plane (per table, in Multi)
-    val staged = filterDim(df, vecCol, dim)
-      .select(col(idCol).as("__id"), asDouble(col(vecCol)).as("__v"))
-    val bits = (0 until planes).map { p =>
-      when(vecDot(col("__v"), typedlit(hp(p).toSeq)) >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    staged.select(col("__id"), col("__v"),
-      bits.reduce((a: Column, b: Column) => a.bitwiseOR(b)).as("__bucket"))
-  }
-
   /** Multi-table sign-LSH (OR-amplification): `tables` independent plane sets;
     * a row lands in one bucket per table (bucket id namespaced by table).
     * Recall ≈ 1-(1-p^planes)^tables for per-plane agreement p — the standard
@@ -109,11 +95,12 @@ object Similarity {
                        planes: Int, tables: Int, seed: Long,
                        knownDim: Option[Int] = None): DataFrame = {
     val dim = knownDim.getOrElse(embeddingDim(df, vecCol))
-    // staged cast vector (see signBuckets): the inline form re-evaluated the
+    // stage the cast vector as a real column FIRST: a multi-use non-cheap
+    // alias survives CollapseProject, where the inline form re-evaluated the
     // array<float>→array<double> transform once per plane per table (48× at
     // the default 6×8 geometry) through interpreted-HOF re-inlining
     val staged = filterDim(df, vecCol, dim)
-      .select(col(idCol).as("__id"), asDouble(col(vecCol)).as("__v"))
+      .select(col(idCol).as("__id"), asDoubleVec(col(vecCol)).as("__v"))
     // ALL tables' buckets from one codegen kernel call per row
     // ([[graft.functions.AnnKernels.signBuckets]]): the previous
     // tables × planes tree of vecDot/when/bitwiseOR expressions compiled to
@@ -165,16 +152,9 @@ object Similarity {
     val bcastMax = sys.env.getOrElse("GRAFT_ANN_BCAST_CAND_MAX", "2000000").toLong
     val candSide = if (cand.count() <= bcastMax) broadcast(cand) else cand
     val cvecs = filterDim(corpus, vecCol, dim.get)
-      .select(col(idCol).as("nbr_id"), asDouble(col(vecCol)).as("__cv"))
+      .select(col(idCol).as("nbr_id"), asDoubleVec(col(vecCol)).as("__cv"))
     val qvecs = filterDim(queries, vecCol, dim.get)
-      .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("__qv"))
-    val scored = cvecs.join(candSide, Seq("nbr_id"))
-      .join(broadcast(qvecs), Seq("query_id"))
-      .withColumn("cosine", round(cosine(col("__qv"), col("__cv")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("nbr_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("nbr_id"), col("cosine"))
+      .select(col(idCol).as("query_id"), asDoubleVec(col(vecCol)).as("__qv"))
+    topKByCosine(cvecs.join(candSide, Seq("nbr_id")).join(broadcast(qvecs), Seq("query_id")), k)
   }
 }

@@ -105,65 +105,27 @@ object TextOps {
       .getField("lang")
   }
 
-  /** Rolling document fingerprint: a hash of each k-token window, winnowed to
-    * the MIN window hash (robust to small edits away from the minimizing
-    * window). Fast path: chained xxhash64 (overflow-free under ANSI mode).
-    * Column API — for hot paths prefer [[fingerprintDf]], which stages the
-    * token-hash array once per row.
-    */
-  def fingerprint(text: Column, k: Int = 8): Column = {
-    val toks = wordTokens(text)
-    winnow(transform(toks, t => xxhash64(t)), size(toks), k,
-      (a, b) => xxhash64(a, b), identity)
-  }
-
-  /** [[fingerprint]] in a hash space DuckDB can replicate: token hash = first
-    * 16 hex chars of sha256(token); window hash = first 16 hex chars of
+  /** Rolling document fingerprint in a hash space DuckDB can replicate: a
+    * hash of each k-token window, winnowed to the MIN window hash (robust to
+    * small edits away from the minimizing window). Token hash = first 16 hex
+    * chars of sha256(token); window hash = first 16 hex chars of
     * sha256(concat of the window's k token hashes) — ~2 sha256 per token
     * (the previous k-chained-digest form paid k sha256 per token and
     * measured 13× slower at sf0.1). Min is over hex STRINGS — identical
-    * lexicographic order in both engines. Evaluated by the native codegen
-    * kernel [[graft.functions.FingerprintPortable]] (same digests, same min
-    * — pinned to the plain-Scala oracle in MinhashParitySpec).
+    * lexicographic order in both engines. A doc with fewer than k tokens
+    * has no full window: null. Evaluated by the native codegen kernel
+    * [[graft.functions.FingerprintPortable]] (same digests, same min —
+    * pinned to the plain-Scala oracle in MinhashParitySpec).
     */
   def fingerprintPortable(text: Column, k: Int = 8): Column =
     graft.functions.FingerprintPortable.column(wordTokens(text), k)
 
-  /** DataFrame-level fingerprint: stages the token-hash array as a real
-    * column so the k shifted-slice passes reference a cheap attribute instead
-    * of re-evaluating the tokenize+hash subtree per pass (interpreted-HOF
-    * re-inlining, ~k× the hashing cost).
+  /** DataFrame-level [[fingerprintPortable]]: one native-kernel call per
+    * row, written to column `out`.
     */
   def fingerprintDf(df: DataFrame, textCol: String, out: String = "fingerprint",
-                    k: Int = 8, portable: Boolean = false): DataFrame = {
-    if (portable)
-      // single native-kernel call per row — no staged array needed
-      df.withColumn(out, fingerprintPortable(col(textCol), k))
-    else {
-      val hs = transform(wordTokens(col(textCol)), t => xxhash64(t))
-      df.withColumn("__fp_hs", hs) // multi-use non-cheap alias: evaluated once
-        .withColumn(out,
-          winnow(col("__fp_hs"), size(col("__fp_hs")), k, (a, b) => xxhash64(a, b), identity))
-        .drop("__fp_hs")
-    }
-  }
-
-  /** Winnowing core over a token-hash array: k zip_with passes over shifted
-    * views build each window's combined value — acc_j[i] = step(acc_(j-1)[i],
-    * hs[i+j]) — then `fin` maps each window to its hash and array_min winnows.
-    * O(n·k) with k cheap vectorized passes (the slice-per-window form paid an
-    * interpreted fold per window, 4× slower). A doc with fewer than k tokens
-    * has no full window: null, not a padded-window hash (zip_with null
-    * padding differs across engines).
-    */
-  private def winnow(hs: Column, nToks: Column, k: Int,
-                     step: (Column, Column) => Column, fin: Column => Column): Column = {
-    val nWin = greatest(size(hs) - (k - 1), lit(1))
-    val chained = (1 until k).foldLeft(slice(hs, lit(1), nWin)) { (acc, j) =>
-      zip_with(acc, slice(hs, lit(j + 1), nWin), step)
-    }
-    when(nToks >= k, array_min(transform(chained, fin)))
-  }
+                    k: Int = 8): DataFrame =
+    df.withColumn(out, fingerprintPortable(col(textCol), k))
 
   /** Shingle strings: k-token shingles joined with a single space. The
     * space keeps the join injective (tokens contain no whitespace) and
@@ -171,8 +133,7 @@ object TextOps {
     * oracle re-computing shingle hashes cannot see in rendered source.
     */
   def shingles(text: Column, k: Int): Column = {
-    // k-1 zip_with passes over shifted slices (the winnow trick): the
-    // tokenizer subtree is evaluated ~k+2 times per row, where the
+    // k-1 zip_with passes over shifted slices: the tokenizer subtree is evaluated ~k+2 times per row, where the
     // per-window-slice form — transform(sequence(…), i => array_join(
     // slice(toks, i+1, k))) — re-evaluated it once per WINDOW
     // (interpreted-HOF re-inlining: measured 26× the tokenize cost at

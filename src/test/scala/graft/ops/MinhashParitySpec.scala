@@ -59,7 +59,7 @@ class MinhashParitySpec extends SparkSuite {
     val colApi = df.select(col("doc_id"),
       TextOps.fingerprintPortable(col("text"), k).as("fp"))
       .as[(Long, Option[String])].collect().toMap
-    val dfApi = TextOps.fingerprintDf(df, "text", "fp", k, portable = true)
+    val dfApi = TextOps.fingerprintDf(df, "text", "fp", k)
       .select("doc_id", "fp").as[(Long, Option[String])].collect().toMap
     for ((t, i) <- texts.zipWithIndex) {
       assert(colApi(i.toLong) === expected(t), s"doc $i column API")

@@ -41,8 +41,8 @@ class TextOpsSpec extends SparkSuite {
       (2L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (3L, "totally different words entirely unrelated content here now")
     ).toDF("id", "text")
-    val fp = df.select(col("id"), TextOps.fingerprint(col("text"), k = 4).as("fp"))
-      .as[(Long, Long)].collect().toMap
+    val fp = df.select(col("id"), TextOps.fingerprintPortable(col("text"), k = 4).as("fp"))
+      .as[(Long, String)].collect().toMap
     assert(fp(1L) === fp(2L))
     assert(fp(1L) !== fp(3L))
   }
@@ -434,6 +434,23 @@ class SimilaritySpec extends SparkSuite {
       k = 5, nlist = 256, nprobe = 24, iters = 2)
       .select("query_id", "nbr_id").as[(Long, Long)].collect().toSet
     assert(again === ivf)
+  }
+
+  test("past the train cap, IVF centroids and cells equal full-corpus Lloyd") {
+    val c = PastCap.corpus(spark)
+    val idx = Ivf.buildIndex(c, "embedding", "vec_id", "ivf_past_cap",
+      nlist = 16, iters = 2, buckets = 4)
+    try {
+      val ordered = PastCap.inTrainingOrder(c)
+      val want = PastCap.lloyd(ordered.map(_._2), m = 1, k = 16, iters = 2).head
+      PastCap.assertClose(idx.centroids, want)
+      val cells = spark.table("ivf_past_cap").select("nbr_id", "__cell")
+        .as[(Long, Int)].collect().toMap
+      assert(cells === ordered.map { case (id, v) => id -> PastCap.nearest(want, v) }.toMap)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS ivf_past_cap")
+      spark.sql("DROP TABLE IF EXISTS ivf_past_cap_centroids")
+    }
   }
 
   test("LSH derives embedding dim from the data (non-64-dim fixture) and rejects ragged rows") {

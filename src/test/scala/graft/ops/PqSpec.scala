@@ -81,6 +81,23 @@ class PqSpec extends SparkSuite {
     assert(probe === oneShot)
   }
 
+  test("past the train cap, codebooks and codes equal full-corpus Lloyd") {
+    val c = PastCap.corpus(spark)
+    val model = Pq.train(c, "embedding", "vec_id", dim, m = 4, ksub = 8, iters = 2)
+    val unit = PastCap.inTrainingOrder(c).map { case (id, v) =>
+      val n = math.sqrt(v.foldLeft(0.0)((s, x) => s + x * x))
+      id -> v.map(_ / n)
+    }
+    val want = PastCap.lloyd(unit.map(_._2), m = 4, k = 8, iters = 2)
+    for (s <- 0 until 4) PastCap.assertClose(model.books(s), want(s))
+    val sub = dim / 4
+    val codes = Pq.encode(c, "embedding", "vec_id", model)
+      .as[(Long, Seq[Int])].collect().toMap
+    assert(codes === unit.map { case (id, v) =>
+      id -> (0 until 4).map(s => PastCap.nearest(want(s), v.slice(s * sub, (s + 1) * sub)))
+    }.toMap)
+  }
+
   test("invalid geometry is rejected loudly") {
     val c = corpus(50)
     intercept[IllegalArgumentException] {
