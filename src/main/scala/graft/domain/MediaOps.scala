@@ -44,19 +44,4 @@ object MediaOps {
     */
   def mediaKey(source: Column, urlHash: Column, fileType: Column): Column =
     concat(source, lit("/"), urlHash, coalesce(fileType, lit(".unknown")))
-
-  /** MIME/extension inference from a content-type header (io_.py:45-61, F21),
-    * as a constant-map lookup column.
-    */
-  val contentTypeToExt: Map[String, String] = Map(
-    "image/jpeg" -> ".jpg", "image/png" -> ".png", "image/gif" -> ".gif",
-    "image/webp" -> ".webp", "video/mp4" -> ".mp4", "video/webm" -> ".webm",
-    "application/pdf" -> ".pdf", "text/html" -> ".html")
-
-  def inferExtension(contentType: Column, url: Column): Column = {
-    val fromHeader = OryxOps.mapDict(contentType, contentTypeToExt)
-    val fromUrl = when(url.rlike("\\.[A-Za-z0-9]{1,5}$"),
-      regexp_extract(url, "(\\.[A-Za-z0-9]{1,5})$", 1))
-    coalesce(fromHeader, fromUrl)
-  }
 }

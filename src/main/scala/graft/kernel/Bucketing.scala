@@ -14,16 +14,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed, per-bucket-sorted parquet table in the
-    * session catalog. Both sides of a co-located join must use the same
-    * bucket count and key.
-    */
-  /** Drop `table` from the catalog AND remove an orphaned managed location a
-    * previous session may have left behind: an in-memory catalog forgets its
-    * tables across JVMs while the warehouse files persist, and a leftover
-    * location makes the next managed-table creation fail
-    * (LOCATION_ALREADY_EXISTS).
-    */
   /** Storage base for index/bucketed table artifacts. RAM-backed when
     * available (guide §6: the sandbox's single virtio disk serializes the
     * many small parquet + _SUCCESS + metadata writes a saveAsTable makes;
@@ -43,6 +33,12 @@ object Bucketing {
   def location(table: String): Option[String] =
     externalBase.map(b => s"$b/${table.toLowerCase}")
 
+  /** Drop `table` from the catalog AND remove an orphaned managed location a
+    * previous session may have left behind: an in-memory catalog forgets its
+    * tables across JVMs while the warehouse files persist, and a leftover
+    * location makes the next managed-table creation fail
+    * (LOCATION_ALREADY_EXISTS).
+    */
   def dropManaged(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -62,6 +58,10 @@ object Bucketing {
                       table: String): org.apache.spark.sql.DataFrameWriter[T] =
     location(table).fold(w)(loc => w.option("path", loc))
 
+  /** Write `df` as a bucketed, per-bucket-sorted parquet table in the
+    * session catalog. Both sides of a co-located join must use the same
+    * bucket count and key.
+    */
   def writeBucketed(df: DataFrame, table: String, buckets: Int, keys: Seq[String]): Unit = {
     require(keys.nonEmpty, "bucket keys required")
     dropManaged(df.sparkSession, table)
@@ -71,6 +71,4 @@ object Bucketing {
       .format("parquet"), table)
       .saveAsTable(table)
   }
-
-  def readTable(spark: SparkSession, table: String): DataFrame = spark.table(table)
 }

@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types.StructType
 
@@ -18,36 +18,26 @@ import org.apache.spark.sql.types.StructType
   * hand-rolled DSv2 `PartitionReader` would re-introduce row-at-a-time reads
   * unless it reimplemented the vectorized Parquet reader wholesale).
   *
-  * [[listFiles]] receives the query's pushed data filters at PLANNING time
-  * and applies the same manifest bounding-box pruning as
-  * [[LakeTable.readWhere]] — a point read through the standard
-  * `spark.read` / SQL surface plans O(1) files with no special API.
-  * Tombstone files are never listed: live reads read zero tombstone bytes
-  * (tombstones live in separate files — see [[LakeTable]]).
+  * `snapshot` is a files-UNLOADED header ([[SnapshotLog.readHeader]]) of a
+  * DELTA-FREE snapshot without renamed columns (the provider routes the
+  * others to the resolved relation). [[listFiles]] receives the query's
+  * pushed data filters at PLANNING time and plans them through
+  * [[LakeTable.planFiles]], the planner [[LakeTable.readWhere]] uses: only
+  * the manifests whose summary box overlaps the pushed bounds are parsed,
+  * then files are pruned by their stats and blooms — a point read through
+  * the standard `spark.read` / SQL surface plans O(1) files with no special
+  * API. Tombstone files are never listed: live reads read zero tombstone
+  * bytes (tombstones live in separate files — see [[LakeTable]]).
   */
 final class GraftFileIndex(
-    spark: SparkSession, table: LakeTable, val snapshot: Snapshot,
-    headerOnly: Boolean = false)
+    spark: SparkSession, table: LakeTable, val snapshot: Snapshot)
   extends FileIndex {
 
   def tableRoot: String = table.root
 
-  /** With `headerOnly = true`, `snapshot` is a files-UNLOADED header carrying
-    * manifest summaries: filtered [[listFiles]] calls parse only the
-    * manifests whose key bounding box overlaps the pushed bounds (two-level
-    * metadata pruning), and this lazy full load is forced only by unfiltered
-    * scans / [[inputFiles]]. Header indexes are built only for DELTA-FREE
-    * snapshots (the provider routes pending deltas to the resolved relation).
-    */
+  /** Every live file; forced only by [[inputFiles]] and the size fallback. */
   private lazy val live: Seq[DataFileEntry] =
-    (if (headerOnly) table.log.loadManifests(snapshot.manifestSummaries.map(_.name))
-     else snapshot.files).filterNot(_.tomb)
-
-  private def prunable: (Seq[String], Seq[String]) =
-    if (headerOnly) table.typedPrunableFrom(snapshot.schema,
-      snapshot.manifestSummaries.iterator.flatMap(_.stattedStr).toSet,
-      snapshot.manifestSummaries.iterator.flatMap(_.stattedLong).toSet)
-    else table.typedPrunable(snapshot)
+    table.log.loadManifests(snapshot.manifestSummaries.map(_.name)).filterNot(_.tomb)
 
   /** Deliberately empty: Spark's analyzer turns `INSERT INTO` over a
     * `HadoopFsRelation` into a DIRECT file write at `rootPaths.head`, which
@@ -64,23 +54,8 @@ final class GraftFileIndex(
   override def listFiles(
       partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = dataFilters.reduceOption(And) match {
-      case Some(pred) =>
-        val (strCols, longCols) = prunable
-        val bounds = KeyPredicates.extractTyped(pred, strCols, longCols)
-        // manifest level first (header indexes: skip whole manifests by key
-        // box before parsing any), then file bounds, then the bloom probe
-        // layer (same layers as readWhere; this index only ever serves
-        // DELTA-FREE snapshots — the provider falls back to the resolved
-        // relation otherwise — so non-key stat pruning is sound here)
-        val candidates =
-          if (headerOnly) table.log.loadManifests(
-            snapshot.manifestSummaries.filter(_.overlapsKeys(bounds)).map(_.name))
-          else snapshot.files
-        val afterBounds = table.pruneEntries(candidates, bounds).filterNot(_.tomb)
-        table.bloomPruneFiles(snapshot, pred, afterBounds, strCols, longCols)
-      case None => live
-    }
+    val kept = table.planFiles(snapshot,
+      dataFilters.reduceOption(And).getOrElse(Literal(true))).filterNot(_.tomb)
     if (kept.isEmpty) Seq.empty
     else Seq(PartitionDirectory(InternalRow.empty, kept.map(status).toArray))
   }
@@ -105,21 +80,17 @@ final class GraftFileIndex(
     */
   override def refresh(): Unit = ()
 
-  /** Drives broadcast decisions; unknown legacy lengths fall back to a
-    * row-count heuristic that deliberately over-estimates (a missed
-    * broadcast is slow, a wrong broadcast of a huge table is an OOM).
-    * Header indexes answer from the commit's audit aggregate (stored at
-    * commit time; includes tombstone bytes — an over-estimate, safe) so
-    * estimation does not force the full manifest load; a pre-audit-header
-    * snapshot (bytes < 0) falls back to forcing it.
+  /** Drives broadcast decisions. Answers from the commit's audit aggregate
+    * (stored at commit time; includes tombstone bytes — an over-estimate,
+    * safe) so estimation does not force the full manifest load. Trusts only
+    * a POSITIVE aggregate: a pre-audit-header snapshot (-1), or legacy
+    * entries with no recorded bytes summing to 0, fall back to the per-file
+    * heuristic, which deliberately over-estimates unknown lengths by row
+    * count (a missed broadcast is slow, a wrong broadcast of a huge table is
+    * an OOM).
     */
-  override lazy val sizeInBytes: Long =
-    if (headerOnly) {
-      val b = table.log.describe(snapshot.version).bytes
-      // trust only a POSITIVE aggregate: 0 can mean "legacy entries with no
-      // recorded bytes summed to nothing", and under-estimating here turns
-      // into a broadcast of a possibly huge table (OOM) — fall back to the
-      // per-file heuristic, which over-estimates by design
-      if (b > 0) b else live.map(e => if (e.bytes > 0) e.bytes else e.rows * 1024L).sum
-    } else live.map(e => if (e.bytes > 0) e.bytes else e.rows * 1024L).sum
+  override lazy val sizeInBytes: Long = {
+    val b = table.log.describe(snapshot.version).bytes
+    if (b > 0) b else live.map(e => if (e.bytes > 0) e.bytes else e.rows * 1024L).sum
+  }
 }

@@ -73,48 +73,32 @@ final class GraftSourceProvider extends RelationProvider
             "(time travel reads a snapshot; startingVersion reads a change feed)")
         val to = parameters.get("endingVersion").map(_.toLong)
           .getOrElse(table.log.latestVersion().getOrElse(0L))
-        new GraftChangesRelation(sqlContext, table, from.toLong, to)
+        new GraftFrameRelation(sqlContext, table.changesBetween(from.toLong, to))
       case None =>
         // snapshot resolved once per relation instance: one query plans
         // against one immutable snapshot even if writers commit concurrently.
-        // Resolve the HEADER first (two-level metadata pruning): when the
-        // snapshot carries manifest summaries and no deltas are pending, the
-        // relation plans from the header and GraftFileIndex loads only the
-        // manifests a query's pushed filters overlap — a fresh process's SQL
-        // point read parses O(overlapping) manifests, not O(table).
-        val versionOpt = parameters.get("versionAsOf").map(_.toLong)
-        val headerOpt = versionOpt.orElse(table.log.latestVersion())
-          .flatMap(table.log.readHeader)
-          .filterNot(_.manifestSummaries.exists(_.hasDeltas))
-          // renamed columns: files store the ORIGINAL physical names; a bare
-          // file-scan relation reads by the CURRENT name and would null the
-          // column — route through the aliased row-based fallback below
-          .filterNot(_.physicalName.nonEmpty)
-        headerOpt match {
-          case Some(h) =>
-            return HadoopFsRelation(
-              location = new GraftFileIndex(spark, table, h, headerOnly = true),
-              partitionSchema = StructType(Nil),
-              dataSchema = h.schema,
-              bucketSpec = None,
-              fileFormat = new ParquetFileFormat,
-              options = Map.empty)(spark)
-          case None => () // pre-summary snapshot or pending deltas: full read
-        }
-        val snap = versionOpt.map(table.log.read).getOrElse(table.head())
-        if (snap.files.exists(_.delta) || snap.physicalName.nonEmpty)
+        // The HEADER alone decides the route (two-level metadata pruning):
+        // GraftFileIndex loads only the manifests a query's pushed filters
+        // overlap — a fresh process's SQL point read parses O(overlapping)
+        // manifests, not O(table).
+        val v = parameters.get("versionAsOf").map(_.toLong).getOrElse(table.headVersion())
+        val h = table.log.readHeader(v)
+        if (h.manifestSummaries.exists(_.hasDeltas) || h.physicalName.nonEmpty)
           // deferred-merge deltas pending: correct results need the per-key
           // resolution window, which a bare file-scan relation cannot carry —
-          // serve the RESOLVED live state through the row-based fallback
+          // serve the RESOLVED live state through the row-based relation
           // (Hudi's read-optimized vs real-time split, with the real-time
           // view the only one we ever serve: correctness is not optional).
-          // The native vectorized path below returns as soon as a compaction
-          // (or the in-loop Maintenance) materializes the deltas.
-          new GraftResolvedSnapshotRelation(sqlContext, table, snap)
+          // Renamed columns take the same route: files store the ORIGINAL
+          // physical names, and a bare file scan reads by the CURRENT name
+          // and would null the column. The native vectorized path returns as
+          // soon as a compaction (or the in-loop Maintenance) materializes
+          // the deltas.
+          new GraftFrameRelation(sqlContext, table.readAt(table.log.read(v)))
         else HadoopFsRelation(
-          location = new GraftFileIndex(spark, table, snap),
+          location = new GraftFileIndex(spark, table, h),
           partitionSchema = StructType(Nil),
-          dataSchema = snap.schema,
+          dataSchema = h.schema,
           bucketSpec = None,
           fileFormat = new ParquetFileFormat,
           options = Map.empty)(spark)
@@ -149,17 +133,7 @@ final class GraftSourceProvider extends RelationProvider
   }
 
   private def ensureCreated(table: LakeTable, data: DataFrame, exists: Boolean): Unit =
-    if (!exists) {
-      val names = data.columns.toSet
-      require(Seq("repo", "path").forall(names.contains),
-        s"a graft table is keyed by (repo, path); got ${data.columns.mkString(", ")}")
-      // keys first (non-null), everything else in frame order, nullable
-      val keyed = data.schema.fields.filter(f => f.name == "repo" || f.name == "path")
-        .map(_.copy(nullable = false))
-      val rest = data.schema.fields.filterNot(f => f.name == "repo" || f.name == "path")
-        .map(_.copy(nullable = true))
-      table.create(StructType((keyed ++ rest).toSeq))
-    }
+    if (!exists) table.create(GraftSourceProvider.keyedSchema(data))
 
   /** `writeStream.format("graft")` — exactly-once upsert sink. */
   override def createSink(
@@ -175,53 +149,45 @@ final class GraftSourceProvider extends RelationProvider
   }
 }
 
-/** Batch change-feed relation: `option("startingVersion", v)` [+
-  * `endingVersion`] surfaces [[LakeTable.changesBetween]] through
-  * `spark.read.format("graft")` / SQL `USING graft OPTIONS (…)`. The feed's
-  * semantics need a residual `_ver` filter a bare file-scan relation cannot
-  * carry, so this relation materializes through the DataFrame plan instead
-  * of a `HadoopFsRelation`; the row-conversion it pays is bounded by the
-  * DELTA between the two snapshots (manifest-diff + maxVer pruning keep the
-  * underlying scan incremental), not by table size. Column pruning is
-  * honored ([[PrunedScan]]); row filters stay Spark-side (exact, fail-safe).
-  */
-final class GraftChangesRelation(
-    override val sqlContext: SQLContext, table: LakeTable,
-    fromVersion: Long, toVersion: Long)
-  extends BaseRelation with PrunedScan {
-
-  private def feed: DataFrame = table.changesBetween(fromVersion, toVersion)
-
-  override val schema: StructType = feed.schema
-
-  override def buildScan(requiredColumns: Array[String]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val f = feed
-    // empty projection (e.g. COUNT(*)) still needs the row cardinality
-    if (requiredColumns.isEmpty) f.select().rdd.map(_ => org.apache.spark.sql.Row())
-    else f.select(requiredColumns.toSeq.map(f.col): _*).rdd
+object GraftSourceProvider {
+  /** Schema of a table created from a plain-row frame: keys first
+    * (non-null), everything else in frame order, nullable.
+    */
+  private[lake] def keyedSchema(data: DataFrame): StructType = {
+    val isKey = Set("repo", "path")
+    val (keys, rest) = data.schema.fields.toSeq.partition(f => isKey(f.name))
+    require(keys.length == 2,
+      s"a graft table is keyed by (repo, path); got ${data.columns.mkString(", ")}")
+    StructType(keys.map(_.copy(nullable = false)) ++ rest.map(_.copy(nullable = true)))
   }
 }
 
-/** Live-snapshot relation for tables with PENDING deferred-merge deltas:
-  * the per-key merge-on-read resolution ([[LakeTable]]'s window over base +
-  * delta files) runs inside the served DataFrame plan, so any query through
-  * `format("graft")` stays exact while deltas exist. Row-conversion cost is
-  * the price of pending deltas, paid only until compaction materializes them
-  * — the provider switches back to the native `HadoopFsRelation` scan on a
-  * delta-free snapshot. Column pruning is honored after resolution
-  * ([[PrunedScan]]); row filters stay Spark-side (exact for any shape).
+/** A relation served from a DataFrame plan instead of a `HadoopFsRelation`,
+  * for the two reads a bare file scan cannot carry:
+  *  - the batch change feed (`option("startingVersion", v)` [+
+  *    `endingVersion`], [[LakeTable.changesBetween]] through
+  *    `spark.read.format("graft")` / SQL `USING graft OPTIONS (…)`), whose
+  *    semantics need a residual `_ver` filter; its row conversion is bounded
+  *    by the DELTA between the two snapshots (manifest-diff + maxVer pruning
+  *    keep the underlying scan incremental), not by table size;
+  *  - the live state of a snapshot with PENDING deferred-merge deltas or
+  *    renamed columns: the per-key merge-on-read resolution ([[LakeTable]]'s
+  *    window over base + delta files) and the physical-to-logical aliasing run
+  *    inside the served plan, so any query through `format("graft")` stays
+  *    exact. That row conversion is paid only until compaction materializes
+  *    the deltas.
+  * Column pruning is honored ([[PrunedScan]]); row filters stay Spark-side
+  * (exact for any shape).
   */
-final class GraftResolvedSnapshotRelation(
-    override val sqlContext: SQLContext, table: LakeTable, snap: Snapshot)
+final class GraftFrameRelation(override val sqlContext: SQLContext, frame: DataFrame)
   extends BaseRelation with PrunedScan {
 
-  override val schema: StructType = snap.schema
+  override val schema: StructType = frame.schema
 
-  override def buildScan(requiredColumns: Array[String]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    val f = table.readAt(snap)
-    if (requiredColumns.isEmpty) f.select().rdd.map(_ => org.apache.spark.sql.Row())
-    else f.select(requiredColumns.toSeq.map(f.col): _*).rdd
-  }
+  override def buildScan(requiredColumns: Array[String]): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] =
+    // empty projection (e.g. COUNT(*)) still needs the row cardinality
+    if (requiredColumns.isEmpty) frame.select().rdd.map(_ => org.apache.spark.sql.Row())
+    else frame.select(requiredColumns.toSeq.map(frame.col): _*).rdd
 }
 
 /** Streaming sink: each micro-batch upserts through [[LakeTable.merge]]
@@ -244,16 +210,8 @@ final class GraftSink(spark: SparkSession, root: String, epoch: String)
     if (table.log.latestVersion().isEmpty) {
       // first batch bootstraps the table: event streams start from the north
       // rule's base schema, plain-row streams from the stream's own schema
-      if (eventShaped) table.create(LakeTable.baseSchema)
-      else {
-        val keyed = batch.schema.fields.filter(f => f.name == "repo" || f.name == "path")
-          .map(_.copy(nullable = false))
-        val rest = batch.schema.fields.filterNot(f => f.name == "repo" || f.name == "path")
-          .map(_.copy(nullable = true))
-        require(keyed.length == 2,
-          s"a graft table is keyed by (repo, path); got ${batch.columns.mkString(", ")}")
-        table.create(StructType((keyed ++ rest).toSeq))
-      }
+      table.create(
+        if (eventShaped) LakeTable.baseSchema else GraftSourceProvider.keyedSchema(batch))
     }
     if (eventShaped) table.merge(batch, epoch, batchId)
     else table.append(batch, epoch, batchId)

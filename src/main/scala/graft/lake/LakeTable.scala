@@ -86,7 +86,9 @@ final class LakeTable(spark: SparkSession, val root: String,
         BatchLedger.empty, -1L, operation = "create"))
   }
 
-  def head(): Snapshot = log.head().getOrElse(
+  def head(): Snapshot = log.read(headVersion())
+
+  private[lake] def headVersion(): Long = log.latestVersion().getOrElse(
     throw new IllegalStateException(s"no snapshot at $root — call create() first"))
 
   /** The one optimistic-commit loop behind every writer (Delta-style
@@ -129,7 +131,7 @@ final class LakeTable(spark: SparkSession, val root: String,
 
   /** Alias a LOGICAL-named frame to PHYSICAL column names for a parquet
     * write — the single write-side half of the rename boundary (reads alias
-    * back inside readStored/readStoredTagged/readAt). No-op Project when the
+    * back inside readStoredTagged/readAt). No-op Project when the
     * mapping is empty.
     */
   private def toPhysicalCols(mapping: Map[String, String], df: DataFrame): DataFrame =
@@ -146,29 +148,11 @@ final class LakeTable(spark: SparkSession, val root: String,
     * as a literal. Live-only readers ([[readAt]]) never open tombstone files
     * at all — at the 100 TB design point a full-table scan reads zero
     * tombstone bytes instead of scanning and filtering them row by row.
-    */
-  private def readStored(snap: Snapshot, entries: Seq[DataFileEntry]): DataFrame = {
-    val st = storageSchema(snap)
-    // files store PHYSICAL names (a renamed column keeps its add-time name in
-    // every file); read physical, alias back to logical in the final select —
-    // a plain Project over the vectorized scan, no-op when nothing is renamed
-    val noDel = toPhysicalSchema(snap.physicalName,
-      StructType(st.fields.filterNot(_.name == "_deleted")))
-    val (tombs, live) = entries.partition(_.tomb)
-    def side(fs: Seq[DataFileEntry], deleted: Boolean): Option[DataFrame] =
-      if (fs.isEmpty) None
-      else Some(spark.read.schema(noDel).parquet(fs.map(_.path): _*)
-        .withColumn("_deleted", lit(deleted)))
-    (side(live, deleted = false) ++ side(tombs, deleted = true))
-      .reduceOption(_.unionByName(_))
-      .map(_.select(st.fieldNames.toSeq.map(n => col(snap.physicalOf(n)).as(n)): _*))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st))
-  }
-
-  /** [[readStored]] plus a per-row resolution-preference column `__pref`:
-    * `-1` for rows from base (copy-on-write) files, the row's `_ver` for rows
-    * from delta (deferred-merge) files. With the window ordering
+    *
+    * Each row also carries a resolution-preference column `__pref`: `-1` for
+    * rows from base (copy-on-write) files, the row's `_ver` for rows from
+    * delta (deferred-merge) files. Callers that do not resolve drop it, and
+    * column pruning removes it from the scan. With the window ordering
     * `(_lsn DESC, __pref ASC)` this encodes the engine's tie rules at read
     * time: on equal LSN a base row beats any delta (a re-delivered duplicate
     * keeps the originally-stamped `_ver`, exactly like the copy-on-write
@@ -179,6 +163,9 @@ final class LakeTable(spark: SparkSession, val root: String,
     */
   private def readStoredTagged(snap: Snapshot, entries: Seq[DataFileEntry]): DataFrame = {
     val st = storageSchema(snap)
+    // files store PHYSICAL names (a renamed column keeps its add-time name in
+    // every file); read physical, alias back to logical in the final select —
+    // a plain Project over the vectorized scan, no-op when nothing is renamed
     val noDel = toPhysicalSchema(snap.physicalName,
       StructType(st.fields.filterNot(_.name == "_deleted")))
     val grouped = entries.groupBy(e => (e.tomb, e.delta)).toSeq.sortBy(_._1)
@@ -199,18 +186,19 @@ final class LakeTable(spark: SparkSession, val root: String,
     * one winner row per key, picked by the same last-LSN-wins /
     * base-beats-delta-on-ties rule the copy-on-write merge applies at write
     * time ([[readStoredTagged]]). When no delta files are present this is
-    * exactly [[readStored]] — zero added plan nodes on a compacted table.
+    * the plain stored read — zero added plan nodes on a compacted table.
     * This is the merge-on-read trade: deferred merges make the WRITE O(batch)
     * (no target read, no rewrite) and shift the per-key window here, until a
     * compaction materializes the deltas back into base files.
     */
   private def resolveStored(snap: Snapshot, entries: Seq[DataFileEntry]): DataFrame = {
-    if (!entries.exists(_.delta)) readStored(snap, entries)
+    val tagged = readStoredTagged(snap, entries)
+    if (!entries.exists(_.delta)) tagged.drop("__pref")
     else {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(col("_lsn").desc, col("__pref").asc)
-      readStoredTagged(snap, entries)
+      tagged
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
         .drop("__rn", "__pref")
@@ -220,57 +208,55 @@ final class LakeTable(spark: SparkSession, val root: String,
   /** User-visible table state: live rows only, engine columns hidden. */
   def read(): DataFrame = readAt(head())
 
-  /** [[read]] with MANIFEST-LEVEL file pruning driven by the predicate:
-    * conjuncts that provably bound any PRUNABLE column — the keys
-    * (`repo`/`path`) plus the configured secondary stat columns — via `=`,
-    * `IN`, range comparisons against string literals ([[KeyPredicates]]) skip
-    * every data file whose footer-stat bounding box cannot hold a matching
-    * row, BEFORE any Spark job is planned; the full predicate then runs on
-    * the pruned scan (and pushes to Parquet row groups as usual), so results
-    * are identical to `read().filter(predicate)` for a deterministic
-    * predicate. On a compacted range-clustered table a point read touches
-    * O(1) files instead of scanning every live file — the 100×-scale
-    * difference between a key lookup and a full-table scan. Unknown
-    * predicate shapes and missing stats fail OPEN (file kept).
+  /** [[read]] with file pruning driven by the predicate: conjuncts that
+    * provably bound any PRUNABLE column — the keys (`repo`/`path`) plus every
+    * statted secondary column — via `=`, `IN`, range comparisons against
+    * literals ([[KeyPredicates]]) skip every manifest and data file whose
+    * stat bounding box cannot hold a matching row, and equality literals on
+    * bloom'd columns skip files their blooms rule out, BEFORE any Spark job
+    * is planned ([[planFiles]], the planner the `format("graft")` scan shares).
+    * The full predicate then runs on the pruned scan (and pushes to Parquet
+    * row groups as usual), so results are identical to
+    * `read().filter(predicate)` for a deterministic predicate. On a compacted
+    * range-clustered table a point read touches O(1) files instead of
+    * scanning every live file — the 100×-scale difference between a key
+    * lookup and a full-table scan. Unknown predicate shapes and missing stats
+    * fail OPEN (file kept).
     */
-  def readWhere(predicate: org.apache.spark.sql.Column): DataFrame =
-    // TWO-LEVEL metadata pruning (the Iceberg manifest-list analog): when the
-    // head snapshot carries manifest summaries, plan from the HEADER alone —
-    // prune whole manifests by their key bounding box BEFORE parsing any of
-    // them, then prune files within the survivors. A fresh process doing a
-    // point read on a 10^6-file table parses O(overlapping) manifests, not
-    // O(table). Pre-summary snapshots fall back to the full parse (readHeader
-    // returns None), producing identical rows.
-    log.latestVersion().flatMap(log.readHeader) match {
-      case Some(h) => readWhereFrom(h, predicate, headerOnly = true)
-      case None    => readWhereFrom(head(), predicate, headerOnly = false)
-    }
-
-  private def readWhereFrom(
-      snap: Snapshot, predicate: org.apache.spark.sql.Column,
-      headerOnly: Boolean): DataFrame = {
+  def readWhere(predicate: org.apache.spark.sql.Column): DataFrame = {
+    val header = log.readHeader(headVersion())
     // resolve the predicate against the table schema first: a raw Column in
     // Spark 4 is a ColumnNode tree (UnresolvedFunction("=",…)), not Catalyst
     // EqualTo/And — analyzing a Filter over an empty LocalRelation yields the
     // resolved conjuncts KeyPredicates understands, at zero execution cost
     val cond = {
       val empty = spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), snap.schema)
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), header.schema)
       empty.filter(predicate).queryExecution.analyzed.collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }.getOrElse(org.apache.spark.sql.catalyst.expressions.Literal(true))
     }
-    // statted/bloom column sets and the delta flag come from summaries on the
-    // header path (unions over manifests ≡ unions over their entries) and
-    // from loaded entries on the legacy path
-    val (strCols, longCols) =
-      if (headerOnly) typedPrunableFrom(snap.schema,
-        snap.manifestSummaries.iterator.flatMap(_.stattedStr).toSet,
-        snap.manifestSummaries.iterator.flatMap(_.stattedLong).toSet)
-      else typedPrunable(snap)
-    val hasDeltas =
-      if (headerOnly) snap.manifestSummaries.exists(_.hasDeltas)
-      else snap.files.exists(_.delta)
+    readAt(header, planFiles(header, cond)).filter(predicate)
+  }
+
+  /** The one read planner, shared by [[readWhere]] and the native
+    * `format("graft")` FileIndex: the data files (tombstones included) of
+    * `header` that can hold a row matching `cond`. TWO-LEVEL metadata pruning
+    * (the Iceberg manifest-list analog) plans from the snapshot HEADER alone:
+    * whole manifests are pruned by their summary boxes BEFORE any of them is
+    * parsed, then files within the survivors by their footer stats, then by
+    * their blooms. A fresh process doing a point read on a 10^6-file table
+    * parses O(overlapping) manifests, not O(table).
+    */
+  private[lake] def planFiles(
+      header: Snapshot,
+      cond: org.apache.spark.sql.catalyst.expressions.Expression): Seq[DataFileEntry] = {
+    val sums = header.manifestSummaries
+    // a summary's statted lists are the union over its manifest's entries
+    val (strCols, longCols) = typedPrunableFrom(header.schema,
+      sums.iterator.flatMap(_.stattedStr).toSet,
+      sums.iterator.flatMap(_.stattedLong).toSet,
+      header.physicalName)
     // NON-KEY bounds are unsound while deferred-merge deltas are pending: a
     // non-key value can differ between a stale delta row and the newer base
     // row shadowing it, so dropping the base file on a stat bound flips the
@@ -282,37 +268,30 @@ final class LakeTable(spark: SparkSession, val root: String,
     // every key of every file it lists). Restrict to key bounds until
     // compaction materializes the deltas.
     val (ps, pl) =
-      if (hasDeltas) (strCols.filter(keyCols.contains), Seq.empty[String])
+      if (sums.exists(_.hasDeltas)) (strCols.filter(keyCols.contains), Seq.empty[String])
       else (strCols, longCols)
     // extract bounds under LOGICAL names, probe file/manifest stats under
     // PHYSICAL names (stats come from parquet footers; key columns never
     // rename, so this is identity for the manifest key boxes)
-    val bounds = toPhysicalBounds(snap, KeyPredicates.extractTyped(cond, ps, pl))
-    val candidates =
-      if (headerOnly)
-        log.loadManifests(
-          snap.manifestSummaries.filter(_.overlapsKeys(bounds)).map(_.name))
-      else snap.files
-    val pruned = bloomPruneFiles(snap, cond, pruneEntries(candidates, bounds), ps, pl)
-    readAt(snap, pruned).filter(predicate)
+    val bounds = toPhysicalBounds(header, KeyPredicates.extractTyped(cond, ps, pl))
+    val candidates = log.loadManifests(sums.filter(_.overlapsKeys(bounds)).map(_.name))
+    bloomPruneFiles(header, cond, pruneEntries(candidates, bounds), ps, pl)
   }
 
-  /** Second pruning layer, shared by [[readWhere]] and the native
-    * `format("graft")` FileIndex: equality literals on columns whose files
+  /** Bloom layer of [[planFiles]]: equality literals on columns whose files
     * ADVERTISE a parquet bloom probe the embedded filters and drop definite
     * negatives — the high-cardinality point lookups range stats can never
-    * prune. `strCols`/`longCols` carry the caller's (already delta-safe)
+    * prune. `strCols`/`longCols` carry the planner's (already delta-safe)
     * prunable column sets.
     */
-  private[lake] def bloomPruneFiles(
+  private def bloomPruneFiles(
       snap: Snapshot, cond: org.apache.spark.sql.catalyst.expressions.Expression,
       candidates: Seq[DataFileEntry],
       strCols: Seq[String], longCols: Seq[String]): Seq[DataFileEntry] = {
     val byName = snap.schema.fields.map(f => f.name -> f.dataType).toMap
     // advertised blooms from the CANDIDATES, not snap.files: only candidate
     // files get probed, and a file without the bloom fails open anyway —
-    // equivalent pruning, and it keeps this callable from header-only reads
-    // (snap.files unloaded) where candidates came via manifest summaries.
+    // equivalent pruning, and the header's `files` are never loaded.
     // Advertised names are PHYSICAL (footers); extraction runs on LOGICAL
     // names and the probe re-keys to physical (renamed columns keep blooms).
     val advertised = candidates.iterator.flatMap(_.bloomCols).toSet
@@ -335,43 +314,26 @@ final class LakeTable(spark: SparkSession, val root: String,
     }
   }
 
-  /** Columns with manifest-level min/max stats usable for file pruning: the
-    * key columns plus the configured secondary stat columns — so a point
-    * query on e.g. `lang` skips files at PLANNING time instead of scanning
-    * every file for a predicate the key ranges know nothing about.
-    */
-  private[lake] def prunableColumns: Seq[String] = keyCols ++ statColumns
-
-  /** Prunable columns under `snap`, split by stat representation: string
+  /** Prunable columns of a header, split by stat representation: string
     * columns prune via UTF-8 string bounds, long / int / timestamp columns
-    * via int64 bounds ([[DataFileEntry.longStats]]). Derived from what the
-    * MANIFESTS actually carry (union of statted columns across files), not
-    * from this instance's writer-side `statColumns` — so a reader opened
-    * with different stat configuration (e.g. the `format("graft")` relation,
-    * which always opens with defaults) still prunes on every statted column.
-    * The snapshot-schema type cross-check drops any column whose current
-    * Catalyst type no longer matches its stat representation (fail open).
-    * Columns of other types (float/double/boolean — NaN ordering and
-    * near-zero selectivity make stats useless) are never statted.
+    * via int64 bounds ([[DataFileEntry.longStats]]). `statted`/`lstatted`
+    * are what the MANIFESTS actually carry (the summaries' unions of statted
+    * columns), not this instance's writer-side `statColumns` — so a reader
+    * opened with different stat configuration (e.g. the `format("graft")`
+    * relation, which always opens with defaults) still prunes on every
+    * statted column. Manifest stats are keyed by PHYSICAL column names (that
+    * is what parquet footers carry, and renamed columns keep writing under
+    * their original name), so the sets are translated to logical names
+    * through `physical` before the schema type cross-check — a renamed
+    * column stays first-class prunable. The cross-check drops any column
+    * whose current Catalyst type no longer matches its stat representation
+    * (fail open). Columns of other types (float/double/boolean — NaN
+    * ordering and near-zero selectivity make stats useless) are never
+    * statted.
     */
-  private[lake] def typedPrunable(snap: Snapshot): (Seq[String], Seq[String]) =
-    typedPrunableFrom(snap.schema,
-      snap.files.iterator.flatMap(_.stats.keysIterator).toSet,
-      snap.files.iterator.flatMap(_.longStats.keysIterator).toSet,
-      snap.physicalName)
-
-  /** [[typedPrunable]] core over explicit statted-column sets — the
-    * header-only read path derives them from [[ManifestSummary]] unions
-    * instead of loaded file entries (equal by construction: a summary's
-    * statted lists are the union over its manifest's entries). Manifest
-    * stats are keyed by PHYSICAL column names (that is what parquet footers
-    * carry, and renamed columns keep writing under their original name), so
-    * the sets are translated to logical names before the schema type
-    * cross-check — a renamed column stays first-class prunable.
-    */
-  private[lake] def typedPrunableFrom(
+  private def typedPrunableFrom(
       schema: StructType, statted: Set[String], lstatted: Set[String],
-      physical: Map[String, String] = Map.empty)
+      physical: Map[String, String])
       : (Seq[String], Seq[String]) = {
     val toLogical: String => String =
       if (physical.isEmpty) identity
@@ -396,14 +358,13 @@ final class LakeTable(spark: SparkSession, val root: String,
       b.strings.map { case (c, v) => snap.physicalOf(c) -> v },
       b.longs.map { case (c, v) => snap.physicalOf(c) -> v })
 
-  /** Entries that can hold a row inside `bounds` (manifest-level pruning;
-    * shared by [[readWhere]] and the `format("graft")` file index, which
-    * pass the entries of just the summary-surviving manifests). A column
-    * missing from a file's stats contributes no constraint for that file
-    * (fail open — e.g. manifests written before the column was statted, or
-    * before the column existed at all).
+  /** Entries that can hold a row inside `bounds` (file-level pruning in
+    * [[planFiles]], over the entries of the summary-surviving manifests). A
+    * column missing from a file's stats contributes no constraint for that
+    * file (fail open — e.g. manifests written before the column was statted,
+    * or before the column existed at all).
     */
-  private[lake] def pruneEntries(
+  private def pruneEntries(
       entries: Seq[DataFileEntry], bounds: KeyPredicates.TypedBounds)
       : Seq[DataFileEntry] =
     entries.filter { f =>
@@ -559,7 +520,7 @@ final class LakeTable(spark: SparkSession, val root: String,
   /** Stored state incl. tombstones and `_lsn` — for tests and compaction. */
   def readRaw(): DataFrame = {
     val snap = head()
-    readStored(snap, snap.files)
+    readStoredTagged(snap, snap.files).drop("__pref")
   }
 
   /** Incremental change feed (Iceberg-style incremental scan): the NET row
@@ -587,9 +548,9 @@ final class LakeTable(spark: SparkSession, val root: String,
     require(fromVersion <= toVersion, s"$fromVersion > $toVersion")
     // expired/over-head window ends fail here with the rich retention error
     // (describe() on an expired mid-window version would otherwise leak a
-    // raw missing-file exception) — two tiny JSON reads, no manifest loads
-    log.requireRetained(fromVersion)
-    log.requireRetained(toVersion)
+    // raw missing-file exception) — two snapshot-header reads
+    val fh = log.readHeader(fromVersion)
+    val th = log.readHeader(toVersion)
     // A restore commit inside the window invalidates the `_ver` fast path:
     // the rows it (re)exposed carry their ORIGINAL commit versions, so the
     // manifest-diff + `_ver > from` scan below would silently miss them (and
@@ -601,38 +562,27 @@ final class LakeTable(spark: SparkSession, val root: String,
       .exists(v => log.describe(v).operation.startsWith("restore"))
     if (crossesRestore)
       return stateDiff(log.read(fromVersion), log.read(toVersion), toVersion)
-    // MANIFEST-level diff from the snapshot headers when both carry manifest
-    // summaries: a manifest referenced by BOTH versions is carried unchanged
-    // (manifests are immutable and names are unique per write), so it can
-    // contribute no added file — only manifests new in `to` are parsed, plus
-    // the manifests `from` dropped (a rewritten manifest's kept entries are
-    // OLD files whose originals lived exactly in those dropped manifests —
-    // every other `from` path sits in a carried manifest `to` still
-    // references, which the name diff already excluded). Cost per feed
-    // window: O(changed manifests), not O(table) — the metadata analog of
-    // the `_ver` file pruning below. Summary-level maxVer skips a new-in-`to`
-    // manifest whose files ALL predate the window (post-compaction rewrites
-    // of cold ranges). Pre-summary snapshots fall back to full parses.
-    (log.readHeader(fromVersion), log.readHeader(toVersion)) match {
-      case (Some(fh), Some(th)) =>
-        val fromNames = fh.manifestSummaries.map(_.name).toSet
-        val toNames = th.manifestSummaries.map(_.name).toSet
-        val toOnly = th.manifestSummaries.filterNot(s => fromNames.contains(s.name))
-        val fromOnly = fh.manifestSummaries.map(_.name).filterNot(toNames.contains)
-        val candidates = log.loadManifests(
-          toOnly.filter(_.maxVer.forall(_ > fromVersion)).map(_.name))
-        val oldPaths = log.loadManifests(fromOnly).map(_.path).toSet
-        val added = candidates
-          .filter(f => !oldPaths.contains(f.path) && f.maxVer.forall(_ > fromVersion))
-        changesFrom(th, added, fromVersion, toVersion)
-      case _ =>
-        val from = log.read(fromVersion)
-        val to = log.read(toVersion)
-        val old = from.files.map(_.path).toSet
-        val added = to.files
-          .filter(f => !old.contains(f.path) && f.maxVer.forall(_ > fromVersion))
-        changesFrom(to, added, fromVersion, toVersion)
-    }
+    // MANIFEST-level diff from the snapshot headers' manifest summaries: a
+    // manifest referenced by BOTH versions is carried unchanged (manifests
+    // are immutable and names are unique per write), so it can contribute no
+    // added file — only manifests new in `to` are parsed, plus the manifests
+    // `from` dropped (a rewritten manifest's kept entries are OLD files whose
+    // originals lived exactly in those dropped manifests — every other `from`
+    // path sits in a carried manifest `to` still references, which the name
+    // diff already excluded). Cost per feed window: O(changed manifests), not
+    // O(table) — the metadata analog of the `_ver` file pruning below.
+    // Summary-level maxVer skips a new-in-`to` manifest whose files ALL
+    // predate the window (post-compaction rewrites of cold ranges).
+    val fromNames = fh.manifestSummaries.map(_.name).toSet
+    val toNames = th.manifestSummaries.map(_.name).toSet
+    val toOnly = th.manifestSummaries.filterNot(s => fromNames.contains(s.name))
+    val fromOnly = fh.manifestSummaries.map(_.name).filterNot(toNames.contains)
+    val candidates = log.loadManifests(
+      toOnly.filter(_.maxVer.forall(_ > fromVersion)).map(_.name))
+    val oldPaths = log.loadManifests(fromOnly).map(_.path).toSet
+    val added = candidates
+      .filter(f => !oldPaths.contains(f.path) && f.maxVer.forall(_ > fromVersion))
+    changesFrom(th, added, fromVersion, toVersion)
   }
 
   /** Shared tail of [[changesBetween]]: scan the added files, resolve
@@ -666,7 +616,8 @@ final class LakeTable(spark: SparkSession, val root: String,
     // feed's version-by-version drain of a deferred ingest cheap).
     val oneDeferredCommit = toVersion - fromVersion == 1 && added.forall(_.delta)
     val stored =
-      if (oneDeferredCommit) readStored(to, added) else resolveStored(to, added)
+      if (oneDeferredCommit) readStoredTagged(to, added).drop("__pref")
+      else resolveStored(to, added)
     stored.filter(col("_ver").isNull || col("_ver") > fromVersion)
   }
 

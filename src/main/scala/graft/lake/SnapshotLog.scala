@@ -296,12 +296,6 @@ final class SnapshotLog(spark: SparkSession, root: String) {
 
   def read(version: Long): Snapshot = parseSnapshot(snapshotText(version))
 
-  /** Fail with the rich retention/over-head error when `version` is not
-    * retained — one tiny JSON read, no manifest loads. Callers that go on to
-    * read headers use this to surface the SAME error a full read would.
-    */
-  def requireRetained(version: Long): Unit = { snapshotText(version); () }
-
   private def snapshotText(version: Long): String =
       try readText(new Path(metaDir, s"v$version.json"))
       catch {
@@ -816,27 +810,24 @@ final class SnapshotLog(spark: SparkSession, root: String) {
               case _ => Map.empty
             })
         }
-        case _ => Nil // pre-summary snapshots: no manifest-level pruning
+        case _ => Nil // pre-summary snapshots: readHeader rebuilds them
       })
   }
 
   /** Snapshot HEADER of `version`: all metadata, `files` UNLOADED (empty),
-    * manifest summaries attached — or None when this snapshot predates
-    * manifest summaries (callers fall back to the full [[read]]). The
-    * completeness check (one summary per manifest ref) guards against a
-    * half-written older format ever silently dropping manifests from a
-    * pruned read.
+    * one manifest summary per manifest ref. A missing version fails with the
+    * same rich retention error as [[read]]. A pre-summary snapshot (no
+    * `manifestList`, or one that does not match the refs) gets its summaries
+    * rebuilt from the manifests themselves — the loads a full read makes —
+    * so a pruned read never silently drops a manifest.
     */
-  def readHeader(version: Long): Option[Snapshot] = {
+  def readHeader(version: Long): Snapshot = {
     implicit val fmt: Formats = DefaultFormats
-    val txt =
-      try readText(new Path(metaDir, s"v$version.json"))
-      catch { case _: java.io.FileNotFoundException =>
-        return None // let callers route through read() for the rich error
-      }
+    val txt = snapshotText(version)
     val snap = parseSnapshot(txt, loadFiles = false)
     val names = (JsonMethods.parse(txt) \ "manifests").extract[Seq[String]]
-    if (snap.manifestSummaries.map(_.name) == names) Some(snap) else None
+    if (snap.manifestSummaries.map(_.name) == names) snap
+    else snap.copy(manifestSummaries = names.map(n => ManifestSummary.of(n, readManifest(n))))
   }
 
   /** A commit's audit header from its snapshot JSON alone (no manifest

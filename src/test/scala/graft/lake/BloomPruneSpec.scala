@@ -41,13 +41,6 @@ class BloomPruneSpec extends SparkSuite {
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(s"commit-$i".getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  private def scannedFiles(df: DataFrame): Long = {
-    df.collect()
-    df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.metrics("numFiles").value).sum
-  }
-
   test("manifest advertises blooms; point lookup on a hash column prunes files") {
     val t = bloomedTable()
     val files = t.head().files

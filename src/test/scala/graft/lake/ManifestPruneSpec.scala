@@ -10,7 +10,8 @@ import graft.events.EventLog
   * point read parses O(overlapping) manifests instead of O(table), and a
   * change-feed window parses O(changed) manifests. Every case asserts row
   * parity with the unpruned path AND on [[SnapshotLog.manifestLoads]] (the
-  * cache-miss counter of the fresh instance), plus the pre-summary fallback.
+  * cache-miss counter of the fresh instance), plus pre-summary snapshots,
+  * whose summaries are rebuilt on read.
   */
 class ManifestPruneSpec extends SparkSuite {
   import spark.implicits._
@@ -41,9 +42,7 @@ class ManifestPruneSpec extends SparkSuite {
   test("summaries in the head snapshot cover every manifest with tight key boxes") {
     val (t, _) = multiManifestTable()
     val full = t.head()
-    val hdr = t.log.readHeader(full.version)
-    assert(hdr.isDefined, "post-summary snapshot must yield a header")
-    val sums = hdr.get.manifestSummaries
+    val sums = t.log.readHeader(full.version).manifestSummaries
     assert(sums.size >= 12, s"expected one manifest per disjoint commit, got ${sums.size}")
     assert(sums.map(_.fileCount).sum === full.files.size)
     assert(!sums.exists(_.hasDeltas))
@@ -109,7 +108,10 @@ class ManifestPruneSpec extends SparkSuite {
     val pred = col("repo") >= "r05" && col("repo") <= "r06"
     val expected = t.readWhere(pred).collect().toSeq.sortBy(_.toString)
     val head = t.head().version
+    val stripped = t.log.readHeader(head).manifestSummaries
     val expectedFeed = t.changesBetween(head - 1, head).collect().toSeq.sortBy(_.toString)
+    val point = col("repo") === "r07" && col("path") === "p03"
+    val expectedPoint = t.read().filter(point).collect().toSeq
     // doctor the head snapshot into the pre-summary format
     val headPath = java.nio.file.Paths.get(root, "meta", s"v$head.json")
     val txt = new String(java.nio.file.Files.readAllBytes(headPath), "UTF-8")
@@ -119,10 +121,17 @@ class ManifestPruneSpec extends SparkSuite {
       org.json4s.jackson.JsonMethods.compact(
         org.json4s.jackson.JsonMethods.render(j)).getBytes("UTF-8"))
     val fresh = new LakeTable(spark, root)
-    assert(fresh.log.readHeader(head).isEmpty, "doctored snapshot must refuse a header")
+    assert(fresh.log.readHeader(head).manifestSummaries === stripped,
+      "the rebuilt summaries must equal the stripped ones")
     assert(fresh.readWhere(pred).collect().toSeq.sortBy(_.toString) === expected)
     assert(fresh.changesBetween(head - 1, head).collect().toSeq.sortBy(_.toString)
       === expectedFeed)
+    // the native format("graft") scan plans from the rebuilt header too
+    val viaSource = spark.read.format("graft").load(root).filter(point)
+    val scanned = scannedFiles(viaSource)
+    assert(scanned >= 1 && scanned <= 2,
+      s"point read should scan O(1) of ${t.head().files.size} files, scanned $scanned")
+    assert(viaSource.collect().toSeq === expectedPoint)
   }
 
   test("pending deltas: header path restricts to key bounds and resolves winners") {
@@ -137,8 +146,7 @@ class ManifestPruneSpec extends SparkSuite {
     t.mergeDeferred(batch(upd), "e", 1)
     assert(t.head().files.exists(_.delta), "delta files must be pending")
     val fresh = new LakeTable(spark, root)
-    val hdr = fresh.log.readHeader(t.head().version)
-    assert(hdr.exists(_.manifestSummaries.exists(_.hasDeltas)))
+    assert(fresh.log.readHeader(t.head().version).manifestSummaries.exists(_.hasDeltas))
     val pred = col("repo") === "r02"
     val got = fresh.readWhere(pred).select("content").as[String].collect().toSet
     val want = fresh.read().filter(pred).select("content").as[String].collect().toSet
@@ -156,17 +164,14 @@ class ManifestPruneSpec extends SparkSuite {
     // checking the relation plans without loading every manifest through a
     // side-channel instance doing the same header read
     val df = spark.read.format("graft").load(root).filter(col("repo") === "r04")
-    assert(df.collect().toSeq.sortBy(_.toString) === expected)
-    val scanned = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.metrics("numFiles").value).sum
+    val scanned = scannedFiles(df)
     val total = t.head().files.size
     assert(scanned <= 2, s"point read should scan O(1) of $total files, scanned $scanned")
+    assert(df.collect().toSeq.sortBy(_.toString) === expected)
     // header route: the provider builds a header index for delta-free
-    // snapshots with summaries — verify the header exists and is delta-free
+    // snapshots — verify the header is delta-free
     val hdr = t.log.readHeader(t.head().version)
-    assert(hdr.exists(h => h.manifestSummaries.nonEmpty &&
-      !h.manifestSummaries.exists(_.hasDeltas)))
+    assert(hdr.manifestSummaries.nonEmpty && !hdr.manifestSummaries.exists(_.hasDeltas))
   }
 
   test("format(\"graft\") unfiltered scan and pending-delta reads stay correct") {

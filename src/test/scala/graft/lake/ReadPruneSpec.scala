@@ -31,13 +31,6 @@ class ReadPruneSpec extends SparkSuite {
     t
   }
 
-  private def scannedFiles(df: DataFrame): Long = {
-    df.collect()
-    df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.metrics("numFiles").value).sum
-  }
-
   test("point read on (repo, path) touches O(1) files of a compacted table") {
     val t = compactedTable()
     val total = t.head().files.size

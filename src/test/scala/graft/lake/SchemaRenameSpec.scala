@@ -162,13 +162,10 @@ class SchemaRenameSpec extends SparkSuite {
     assert(total >= 8, s"expected many files, got $total")
     val pred = col("rating") === 7L
     val pruned = t.readWhere(pred)
-    assert(pruned.collect().toSet === t.read().filter(pred).collect().toSet)
-    pruned.collect()
-    val scanned = pruned.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.metrics("numFiles").value).sum
+    val scanned = scannedFiles(pruned)
     assert(scanned < total / 2,
       s"rating bounds should prune via the physical stars stats: $scanned of $total")
+    assert(pruned.collect().toSet === t.read().filter(pred).collect().toSet)
   }
 
   test("deferred-merge path renames identically") {

@@ -32,13 +32,6 @@ class ZOrderSpec extends SparkSuite {
     t
   }
 
-  private def scannedFiles(df: DataFrame): Long = {
-    df.collect()
-    df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.map(_.metrics("numFiles").value).sum
-  }
-
   test("zorder compact: identical table state, multi-dimension file pruning") {
     val t = seededTable("zorder")
     t.compact(targetRowsPerFile = 30, full = true)
