@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -765,8 +766,11 @@ final class LakeTable(spark: SparkSession, val root: String,
     *    deferred touches none and keeps them all.
     *
     * The Spark work of an attempt is one narrow pre-pass job ([[prePass]]:
-    * the schema-change rows and the touched files), then the write (range
-    * sample, shuffle, write tasks). The write also yields the lineage
+    * the schema-change rows, the touched files and a key sample), then the
+    * write: the shuffle map stage and the write tasks. The driver picks the
+    * shuffle's range bounds from the pre-pass sample and the touched files'
+    * manifest stats ([[mergeBounds]]), so no job samples the plan below the
+    * exchange. The write also yields the lineage
     * counters, from an observation on the merge window, and the new files'
     * manifest entries, from its tasks ([[writeData]]). On a table with CHECK
     * constraints the violators ride the same window, flagged: they count as
@@ -786,7 +790,9 @@ final class LakeTable(spark: SparkSession, val root: String,
       val pruneIx =
         if (deferred || snap.files.isEmpty) None
         else Some(spark.sparkContext.broadcast(PruneIndex(snap.files)))
-      val (scRows, touched) = timed("pre-pass")(prePass(batch, pruneIx))
+      val pre = timed("pre-pass")(prePass(batch, pruneIx))
+      val scRows = pre.scRows
+      val touched = snap.files.filter(f => pre.touched.contains(f.path))
 
       val (evolved, scApplied, scQuarantined) = evolveSchema(snap, scRows)
       // ---- the change stream for this batch (all data events) ----
@@ -823,15 +829,19 @@ final class LakeTable(spark: SparkSession, val root: String,
       // merge also MATERIALIZES the deltas it touches.
       val window =
         if (deferred) src
-        else readStoredTagged(evolved, snap.files.filter(f => touched.contains(f.path)))
+        else readStoredTagged(evolved, touched)
           .withColumn("__tie", lit(Long.MaxValue)) // target wins LSN ties: re-applied dup is a no-op
           .withColumn("__src", lit(false))
           .unionByName(src)
 
-      // ---- the fused MERGE: ONE shuffle. repartitionByRange(key) satisfies
-      // the window's ClusteredDistribution, so batch-dedup + target-merge run
-      // in a single exchange, and the output files come out range-clustered by
-      // key (tight min/max → effective pruning on the next merge).
+      // ---- the fused MERGE: ONE shuffle. Each row's `__pid` is the index of
+      // the driver's key range that holds it ([[mergeBounds]], [[partitionId]]);
+      // `repartitionById` sends it there, and since `__pid` leads the window's
+      // partition keys, that exchange satisfies the window's
+      // ClusteredDistribution: batch-dedup + target-merge run in a single
+      // exchange, and the output files come out range-clustered by key (tight
+      // min/max → effective pruning on the next merge). `__pid` is a function
+      // of the key, so it changes no group, winner or counter.
       // A constraint violator rides the window flagged (`ok` false): the key's
       // winner is its first PASSING row in `w`'s order (`__okN`, the running
       // count of passing rows, is 1), so a quarantined batch winner exposes
@@ -841,16 +851,18 @@ final class LakeTable(spark: SparkSession, val root: String,
       // AS DELIVERED: `__srcN`, the running count of source rows, is 1 on a
       // key's first source row, its batch winner (max `(lsn, event_id)`).
       // Both running counts share `w`'s partitioning and order, so they add
-      // no sort and no exchange. The observation sits ABOVE the exchange:
-      // below it, the range-sampling job would run it too and count twice.
+      // no sort and no exchange. The observation reads them, so it sits above
+      // the exchange, where each row passes exactly once.
       import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(keyCols.map(col): _*)
+      val w = Window.partitionBy((col("__pid") +: keyCols.map(col)): _*)
         .orderBy(col("_lsn").desc, col("__tie").desc, col("__pref").asc)
       val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val ok = !col("__src") || !violates
       val observed = org.apache.spark.sql.Observation()
       val winner = col("__src") && col("__srcN") === 1
-      val merged = window.repartitionByRange(col("repo"), col("path"))
+      val bounds = mergeBounds(evolved, pre, touched)
+      val merged = window.withColumn("__pid", partitionId(bounds))
+        .repartitionById(bounds.length + 1, col("__pid"))
         .withColumns(Map(
           "__okN" -> sum(when(ok, 1)).over(running),
           "__srcN" -> sum(when(col("__src"), 1)).over(running)))
@@ -861,7 +873,7 @@ final class LakeTable(spark: SparkSession, val root: String,
           coalesce(max(when(col("__src"), col("_lsn"))), lit(-1L)).as("maxLsn"),
           count(when(col("__src") && !ok, 1)).as("quarantined"))
         .filter(ok && col("__okN") === 1)
-        .drop("__okN", "__srcN", "__src", "__tie", "__pref")
+        .drop("__okN", "__srcN", "__src", "__tie", "__pref", "__pid")
 
       // ---- write new data files: live rows and tombstones to SEPARATE files
       // (Iceberg delete-file analog) so live reads never open tombstone bytes.
@@ -893,7 +905,7 @@ final class LakeTable(spark: SparkSession, val root: String,
 
       val next = evolved.copy(
         version = snap.version + 1,
-        files = snap.files.filterNot(f => touched.contains(f.path)) ++ newFiles,
+        files = snap.files.filterNot(f => pre.touched.contains(f.path)) ++ newFiles,
         ledger = if (recordInLedger) snap.ledger.add(epoch, batchId) else snap.ledger,
         parent = snap.version,
         maxLsn = math.max(snap.maxLsn, batchMaxLsn),
@@ -919,32 +931,88 @@ final class LakeTable(spark: SparkSession, val root: String,
   }
 
   /** The merge's one pre-pass: a narrow job (no shuffle) over the batch's
-    * `op, repo, path, lsn, schema_change` that returns the schema-change
-    * rows as `(lsn, payload)` in lsn order and, given the copy-on-write
-    * target's prune index, the paths of the target files that may hold a
-    * key of the batch. Each task probes the index once per distinct key it
-    * sees. Rows with a null `op` are in neither output. Without an index only
-    * the schema-change rows are read (`op` pushes down to the scan).
+    * `op, repo, path, lsn, schema_change`, never `content`. Given the
+    * copy-on-write target's prune index, each task probes it once per
+    * distinct key it sees. Each task also keeps a reservoir sample of its
+    * non-null keys, seeded by its partition index and sized by
+    * `spark.sql.execution.rangeExchange.sampleSizePerPartition` (the size
+    * Spark's range exchange samples per partition), so the sample is
+    * deterministic for a given batch. Rows with a null `op` are in no output.
     */
   private def prePass(batch: DataFrame,
-                      pruneIx: Option[org.apache.spark.broadcast.Broadcast[PruneIndex]])
-      : (Seq[org.apache.spark.sql.Row], Set[String]) = {
-    val cols = batch.select(col("op"), col("repo"), col("path"), col("lsn"), col("schema_change"))
-    val in = if (pruneIx.isEmpty) cols.filter(col("op") === "schema_change") else cols
-    val parts = in.rdd.mapPartitions { it =>
-      val sc = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      val seen = scala.collection.mutable.HashSet.empty[(String, String)]
-      val hits = scala.collection.mutable.HashSet.empty[String]
-      it.foreach { r =>
-        if (r.isNullAt(0)) ()
-        else if (r.getString(0) == "schema_change")
-          sc += org.apache.spark.sql.Row(r.get(3), r.get(4))
-        else if (!r.isNullAt(1) && !r.isNullAt(2) && seen.add((r.getString(1), r.getString(2))))
-          pruneIx.foreach(ix => hits ++= ix.value.lookup(r.getString(1), r.getString(2)))
-      }
-      Iterator.single((sc.toSeq, hits.toSeq))
-    }.collect()
-    (parts.toSeq.flatMap(_._1).sortBy(_.getLong(0)), parts.iterator.flatMap(_._2).toSet)
+                      pruneIx: Option[org.apache.spark.broadcast.Broadcast[PruneIndex]]): PrePass = {
+    val size = spark.sessionState.conf.getConf(SQLConf.RANGE_EXCHANGE_SAMPLE_SIZE_PER_PARTITION)
+    val parts = batch.select(col("op"), col("repo"), col("path"), col("lsn"), col("schema_change"))
+      .rdd.mapPartitionsWithIndex { (i, it) =>
+        val sc = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
+        val seen = scala.collection.mutable.HashSet.empty[(String, String)]
+        val hits = scala.collection.mutable.HashSet.empty[String]
+        val sample = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+        val rnd = new java.util.Random(i)
+        var rows, keyed = 0L
+        it.foreach { r =>
+          if (r.isNullAt(0)) ()
+          else if (r.getString(0) == "schema_change")
+            sc += org.apache.spark.sql.Row(r.get(3), r.get(4))
+          else {
+            rows += 1
+            if (!r.isNullAt(1) && !r.isNullAt(2)) {
+              val key = (r.getString(1), r.getString(2))
+              keyed += 1
+              // reservoir sampling: the key-th key replaces a random slot
+              // with probability size / keyed
+              if (sample.length < size) sample += key
+              else { val j = rnd.nextLong(keyed); if (j < size) sample(j.toInt) = key }
+              if (seen.add(key)) pruneIx.foreach(ix => hits ++= ix.value.lookup(key._1, key._2))
+            }
+          }
+        }
+        val weight = keyed.toDouble / math.max(1, sample.length)
+        Iterator.single((sc.toSeq, hits.toSeq, rows, sample.toSeq.map(_ -> weight)))
+      }.collect()
+    PrePass(parts.toSeq.flatMap(_._1).sortBy(_.getLong(0)), parts.iterator.flatMap(_._2).toSet,
+      parts.iterator.map(_._3).sum, parts.toSeq.flatMap(_._4))
+  }
+
+  /** The merge shuffle's range bounds, sorted: n − 1 keys at most, fewer
+    * when the weight piles up on a few keys ([[rangeBounds]]). The inputs
+    * are all on the driver: the pre-pass's weighted key sample and, on
+    * copy-on-write, the `touched` files' key-box corners, each weighted by
+    * half the file's rows (the manifest shows no finer distribution). n
+    * follows the rule AQE's coalescer applies to a shuffle
+    * ([[shufflePartitions]]), over an estimate of the bytes that cross it:
+    * the touched files' bytes plus the batch rows at the bytes per row that
+    * the table's files imply (the storage schema's default row size while
+    * the table holds no row). The bounds only balance the partitions: every
+    * choice of bounds merges correctly.
+    */
+  private def mergeBounds(snap: Snapshot, pre: PrePass,
+                          touched: Seq[DataFileEntry]): IndexedSeq[(String, String)] = {
+    val allRows = snap.files.map(_.rows).sum
+    val rowBytes =
+      if (allRows > 0) snap.files.map(_.bytes).sum.toDouble / allRows
+      else storageSchema(snap).defaultSize.toDouble
+    val corners = touched.flatMap { f =>
+      val ends = Seq(f.minRepo.zip(f.minPath), f.maxRepo.zip(f.maxPath)).flatten
+      ends.map(_ -> f.rows.toDouble / ends.size)
+    }
+    rangeBounds(pre.sample ++ corners,
+      shufflePartitions(touched.map(_.bytes).sum + pre.rows * rowBytes))
+  }
+
+  /** Partitions for a shuffle of `bytes`, by the rule AQE's coalescer
+    * (`ShufflePartitionsUtil.coalescePartitions`) applies: a target size of
+    * the bytes over the default parallelism, at least
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` and at most
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`; at most the session's
+    * shuffle partitions, at least 1.
+    */
+  private def shufflePartitions(bytes: Double): Int = {
+    val conf = spark.sessionState.conf
+    val target = math.max(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE).toDouble,
+      math.min(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES).toDouble,
+        bytes / spark.sparkContext.defaultParallelism))
+    math.max(1.0, math.min(conf.numShufflePartitions.toDouble, math.ceil(bytes / target))).toInt
   }
 
   /** Event→storage-row projection under `snap`'s (evolved) schema: extras
@@ -1484,6 +1552,65 @@ object LakeTable {
       i += 1
     }
     x.length - y.length
+  }
+
+  /** What the merge's pre-pass learns of a batch: the schema-change rows
+    * as `(lsn, payload)` in lsn order, the paths of the target files that may
+    * hold a key of the batch, the number of data rows (`op` neither null nor
+    * `schema_change`) and a key sample of them, each key weighted by the
+    * rows it stands for.
+    */
+  private final case class PrePass(
+      scRows: Seq[org.apache.spark.sql.Row], touched: Set[String],
+      rows: Long, sample: Seq[((String, String), Double)])
+
+  /** [[utf8Compare]] on `(repo, path)` keys, repo first. */
+  private[lake] def keyCompare(a: (String, String), b: (String, String)): Int = {
+    val c = utf8Compare(a._1, b._1)
+    if (c != 0) c else utf8Compare(a._2, b._2)
+  }
+
+  /** Up to n − 1 strictly increasing keys that cut the weighted `points`
+    * into n ranges of about equal weight, by the rule of Spark's
+    * `RangePartitioner.determineBounds`: walk the points in key order and
+    * take a key once the running weight reaches the next multiple of
+    * total ÷ n. A key equal to the last bound is skipped, so a hot key
+    * yields fewer bounds, never an empty range between two equal ones.
+    */
+  private def rangeBounds(points: Seq[((String, String), Double)],
+                          n: Int): IndexedSeq[(String, String)] = {
+    val sorted = points.sortWith((a, b) => keyCompare(a._1, b._1) < 0)
+    val step = sorted.iterator.map(_._2).sum / n
+    val bounds = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    var weight = 0.0
+    sorted.foreach { case (key, w) =>
+      weight += w
+      if (bounds.length < n - 1 && weight >= step * (bounds.length + 1) &&
+          bounds.lastOption.forall(keyCompare(key, _) > 0))
+        bounds += key
+    }
+    bounds.toIndexedSeq
+  }
+
+  /** A row's partition id under `bounds` (sorted by [[keyCompare]]): the
+    * number of bounds strictly below its `(repo, path)`, as a binary search
+    * written in nested CASE WHENs (a Catalyst expression, no UDF). Spark
+    * compares strings in the order of [[utf8Compare]], so the id is monotone
+    * in the key order: the files of one range hold no key that lies between
+    * two keys of another range's files. A null sorts first, as in an
+    * ascending range exchange: a null repo gets id 0, a null path ranks by
+    * its repo.
+    */
+  private[graft] def partitionId(bounds: IndexedSeq[(String, String)]): org.apache.spark.sql.Column = {
+    def above(b: (String, String)) =
+      col("repo") > b._1 || (col("repo") === b._1 && col("path") > b._2)
+    def search(lo: Int, hi: Int): org.apache.spark.sql.Column =
+      if (lo == hi) lit(lo)
+      else {
+        val mid = (lo + hi) >>> 1
+        when(above(bounds(mid)), search(mid + 1, hi)).otherwise(search(lo, mid))
+      }
+    search(0, bounds.length)
   }
 
   private def isAscii(bytes: Array[Byte]): Boolean = bytes.forall(b => b >= 0)

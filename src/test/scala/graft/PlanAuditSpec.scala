@@ -105,15 +105,17 @@ class PlanAuditSpec extends SparkSuite {
     val src = Seq(("r1", "a", 1L, true, "scala"), ("r1", "a", 2L, false, "scala"),
       ("r2", "b", 2L, false, "scala"), ("r2", "b", 3L, true, "cobol"))
       .toDF("repo", "path", "_lsn", "__src", "lang")
+    // the merge's driver-chosen key ranges: ("r1", "a") goes to 0, ("r2", "b") to 1
+    val pid = graft.lake.LakeTable.partitionId(IndexedSeq(("r1", "z")))
     val w = Window
-      .partitionBy(col("repo"), col("path"))
+      .partitionBy(col("__pid"), col("repo"), col("path"))
       .orderBy(col("_lsn").desc)
     val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     for ((violates, winners) <- Seq(
         lit(false) -> Set(("r1", "a", 2L), ("r2", "b", 3L)),
         (expr("lang <> 'cobol'") <=> lit(false)) -> Set(("r1", "a", 2L), ("r2", "b", 2L)))) {
       val ok = !col("__src") || !violates
-      val merged = src.repartitionByRange(col("repo"), col("path"))
+      val merged = src.withColumn("__pid", pid).repartitionById(2, col("__pid"))
         .withColumns(Map(
           "__okN" -> sum(when(ok, 1)).over(running),
           "__srcN" -> sum(when(col("__src"), 1)).over(running)))
@@ -121,16 +123,19 @@ class PlanAuditSpec extends SparkSuite {
       val plan = merged.queryExecution.executedPlan.toString
       val exchanges = "Exchange".r.findAllIn(plan).size
       assert(exchanges === 1,
-        s"expected the range exchange to satisfy the window's clustering; got $exchanges:\n$plan")
+        s"expected the partition-id exchange to satisfy the window's clustering; got $exchanges:\n$plan")
+      // the driver picked the ranges: no exchange samples its input
+      assert(!plan.toLowerCase.contains("rangepartitioning"), plan)
       // both window columns share one sort and one window operator
       assert("Sort \\[".r.findAllIn(plan).size === 1, plan)
       assert("Window \\[".r.findAllIn(plan).size === 1, plan)
-      // the flag is computed above the exchange: only the input columns cross it
+      // the flag is computed above the exchange: only the input columns and
+      // the partition id cross it
       val shuffled = merged.queryExecution.sparkPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
           e.child.output.map(_.name)
       }
-      assert(shuffled === Seq(src.columns.toSeq), plan)
+      assert(shuffled === Seq(src.columns.toSeq :+ "__pid"), plan)
       // a violating source row never wins: the key's older row does
       assert(merged.select("repo", "path", "_lsn").as[(String, String, Long)]
         .collect().toSet === winners, plan)

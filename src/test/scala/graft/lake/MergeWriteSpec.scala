@@ -7,8 +7,9 @@ import graft.SparkSuite
 import graft.events.EventLog
 
 /** The lake write returns its files' manifest entries from the write tasks,
-  * and a copy-on-write merge runs one pre-pass job plus the write, and one
-  * quarantine write when a CHECK constraint rejects a row.
+  * and a merge runs one pre-pass job plus the write (shuffle map stage and
+  * write tasks), and one quarantine write when a CHECK constraint rejects a
+  * row.
   */
 class MergeWriteSpec extends SparkSuite {
 
@@ -122,35 +123,52 @@ class MergeWriteSpec extends SparkSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("an unconstrained copy-on-write merge into a non-empty table runs at most 4 jobs") {
+  private val nextBatch = Seq(
+    ev(21, "update", "r1", "p1"), ev(22, "delete", "r2", "p2"), ev(23, "insert", "r9", "p9"))
+
+  test("an unconstrained copy-on-write merge into a non-empty table runs at most 3 jobs") {
     val t = new LakeTable(spark, tmpDir("merge-jobs"))
     t.create(LakeTable.baseSchema)
     t.merge(batch((1 to 20).map(i => ev(i, "insert", s"r${i % 3}", s"p$i")): _*), "e", 0)
-    val next = batch(
-      ev(21, "update", "r1", "p1"), ev(22, "delete", "r2", "p2"), ev(23, "insert", "r9", "p9"))
-    // pre-pass, range sample, shuffle map stage, write
-    val jobs = jobsOf(t.merge(next, "e", 1))
-    assert(jobs <= 4, s"$jobs jobs")
+    // pre-pass, shuffle map stage, write: the driver picks the range bounds,
+    // so no job samples the plan below the exchange
+    val jobs = jobsOf(t.merge(batch(nextBatch: _*), "e", 1))
+    assert(jobs <= 3, s"$jobs jobs")
     assert(t.read().count() === 20L)
   }
 
-  test("a constrained copy-on-write merge runs at most 4 jobs, 5 with a violator") {
+  test("a copy-on-write merge into an empty table runs at most 3 jobs") {
+    val t = new LakeTable(spark, tmpDir("merge-jobs-empty"))
+    t.create(LakeTable.baseSchema)
+    val jobs = jobsOf(t.merge(batch(nextBatch: _*), "e", 0))
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(t.read().count() === 2L)
+  }
+
+  test("a deferred merge runs at most 3 jobs") {
+    val t = new LakeTable(spark, tmpDir("merge-jobs-deferred"))
+    t.create(LakeTable.baseSchema)
+    t.merge(batch((1 to 20).map(i => ev(i, "insert", s"r${i % 3}", s"p$i")): _*), "e", 0)
+    val jobs = jobsOf(t.mergeDeferred(batch(nextBatch: _*), "e", 1))
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(t.read().count() === 20L)
+  }
+
+  test("a constrained copy-on-write merge runs at most 3 jobs, 4 with a violator") {
     val t = new LakeTable(spark, tmpDir("merge-jobs-check"))
     t.create(LakeTable.baseSchema)
     t.merge(batch((1 to 20).map(i => ev(i, "insert", s"r${i % 3}", s"p$i")): _*), "e", 0)
     t.addConstraint("no-cobol", "lang <> 'cobol'")
-    // pre-pass, range sample, shuffle map stage, write
-    val clean = jobsOf(t.merge(batch(
-      ev(21, "update", "r1", "p1"), ev(22, "delete", "r2", "p2"), ev(23, "insert", "r9", "p9")),
-      "e", 1))
-    assert(clean <= 4, s"$clean jobs")
-    // the same four, then the quarantine write
+    // pre-pass, shuffle map stage, write
+    val clean = jobsOf(t.merge(batch(nextBatch: _*), "e", 1))
+    assert(clean <= 3, s"$clean jobs")
+    // the same three, then the quarantine write
     var stats: MergeStats = null
     val dirty = jobsOf {
       stats = t.merge(batch(
         ev(24, "update", "r1", "p4", lang = "cobol"), ev(25, "insert", "r8", "p8")), "e", 2)
     }
-    assert(dirty <= 5, s"$dirty jobs")
+    assert(dirty <= 4, s"$dirty jobs")
     assert(stats.constraintQuarantined === 1L)
     assert(t.read().count() === 21L)
     assert(t.read().filter("path = 'p4'").select("lang").collect().map(_.getString(0)) ===
