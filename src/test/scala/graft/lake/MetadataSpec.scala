@@ -161,6 +161,70 @@ class SnapshotMetadataSpec extends SparkSuite {
     assert(head.ledger.hwm.keySet.size === 1)
   }
 
+  /** Golden manifest and manifest-list JSON: string stats (`lang`, `commit`),
+    * int64 stats of an evolved column, an absent bound (non-ASCII max key),
+    * advertised blooms. Old and new builds must write these bytes exactly.
+    */
+  private val goldenManifests = Seq(
+    """{"files":[{"path":"<root>/data/v1-b0-<id>/_deleted=false/part-00000-<uuid>.c000.zstd.parquet","rows":3,"minRepo":"a0","maxRepo":"a2","minPath":"p","maxPath":"p","maxVer":1,"tomb":false,"delta":false,"bytes":67933,"stats":[{"col":"commit","min":"c10","max":"c12"},{"col":"lang","min":"go","max":"go"}],"longStats":[{"col":"stars","min":0,"max":2}],"bloomCols":["commit"]}]}""",
+    """{"files":[{"path":"<root>/data/v2-b1-<id>/_deleted=false/part-00000-<uuid>.c000.zstd.parquet","rows":3,"minRepo":"z0","minPath":"p","maxPath":"p","maxVer":2,"tomb":false,"delta":false,"bytes":67952,"stats":[{"col":"commit","min":"c20","max":"c22"},{"col":"lang","min":"rust","max":"rust"}],"longStats":[{"col":"stars","min":100,"max":102}],"bloomCols":["commit"]}]}""")
+
+  private val goldenManifestList =
+    """"manifestList":[{"name":"m1-a-<id>.json","files":1,"minRepo":"a0","maxRepo":"a2","minPath":"p","maxPath":"p","maxVer":1,"hasDeltas":false,"stattedStr":["commit","lang"],"stattedLong":["stars"],"bloomCols":["commit"],"stats":[{"col":"commit","min":"c10","max":"c12"},{"col":"lang","min":"go","max":"go"}],"longStats":[{"col":"stars","min":0,"max":2}]},""" +
+    """{"name":"m2-a-<id>.json","files":1,"minRepo":"z0","minPath":"p","maxPath":"p","maxVer":2,"hasDeltas":false,"stattedStr":["commit","lang"],"stattedLong":["stars"],"bloomCols":["commit"],"stats":[{"col":"commit","min":"c20","max":"c22"},{"col":"lang","min":"rust","max":"rust"}],"longStats":[{"col":"stars","min":100,"max":102}]}]}"""
+
+  test("manifest and manifest-list JSON are byte-identical to the golden format") {
+    val root = tmpDir("meta-golden")
+    val t = new LakeTable(spark, root, bloomColumns = Seq("commit"))
+    t.create(LakeTable.baseSchema)
+    def ev(lsn: Long, repo: String, lang: String, stars: Long) =
+      org.apache.spark.sql.Row(lsn, 0L, new java.sql.Timestamp(1700000000000L + lsn),
+        "insert", repo, "p", s"c$lsn", lang, s"v$lsn", null, s"""{"stars": $stars}""")
+    val ddl = org.apache.spark.sql.Row(1L, 0L, new java.sql.Timestamp(1700000000000L),
+      "schema_change", null, null, null, null, null,
+      """{"addColumn":{"name":"stars","type":"long"}}""", null)
+    def batch(rows: Seq[org.apache.spark.sql.Row]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), graft.events.EventLog.eventSchema)
+    t.merge(batch(ddl +: (0 until 3).map(i => ev(10L + i, s"a$i", "go", i.toLong))), "e", 0)
+    t.merge(batch(Seq(ev(20L, "z0", "rust", 100L), ev(21L, "z1", "rust", 101L),
+      ev(22L, "zé", "rust", 102L))), "e", 1)
+
+    val meta = new java.io.File(s"$root/meta")
+    def manifests = meta.listFiles().filter(_.getName.startsWith("m")).sortBy(_.getName)
+    val normal: String => String = _
+      .replace(new java.io.File(root).toURI.getPath.stripSuffix("/"), "<root>")
+      .replaceAll("file:", "")
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+      .replaceAll("-[0-9a-f]{8}(?=/|\\.json)", "-<id>")
+    val head = slurp(s"$root/meta/v2.json")
+    assert(manifests.map(f => normal(slurp(f.getPath))).toSeq === goldenManifests)
+    assert(normal(head.substring(head.indexOf("\"manifestList\":"))) === goldenManifestList)
+
+    // a table written before int64 stats existed: strip every longStats array
+    // (manifests and manifest list); a fresh reader returns the same rows and
+    // prunes on the string stats alone
+    val stars = col("stars") >= 100L
+    assert(scannedFiles(t.readWhere(stars)) === 1)
+    val json = meta.listFiles().filter(_.getName.endsWith(".json"))
+    for (f <- json) {
+      val txt = slurp(f.getPath)
+      val stripped = txt.replaceAll(",\"longStats\":\\[[^\\]]*\\]", "")
+      if (stripped != txt) {
+        java.nio.file.Files.write(f.toPath, stripped.getBytes("UTF-8"))
+        new java.io.File(meta, s".${f.getName}.crc").delete() // stale checksum
+      }
+    }
+    assert(!json.exists(f => slurp(f.getPath).contains("longStats")))
+    val fresh = new LakeTable(spark, root, bloomColumns = Seq("commit"))
+    assert(fresh.head().files.forall(_.longStats.isEmpty))
+    assert(fresh.read().collect().toSet === t.read().collect().toSet)
+    assert(fresh.readWhere(stars).collect().toSet === t.read().filter(stars).collect().toSet)
+    assert(scannedFiles(fresh.readWhere(stars)) === 2, "no int64 stats left to prune on")
+    val rust = col("lang") === "rust"
+    assert(fresh.readWhere(rust).collect().toSet === t.read().filter(rust).collect().toSet)
+    assert(scannedFiles(fresh.readWhere(rust)) === 1, "string stats still prune")
+  }
+
   test("expireSnapshots GCs unreferenced manifests") {
     val root = tmpDir("meta-gc")
     val t = new LakeTable(spark, root)
