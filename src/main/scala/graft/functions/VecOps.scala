@@ -2,9 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native vector kernels for the similarity/ANN family, as codegen'd Catalyst
@@ -69,6 +69,33 @@ case class SquaredDistance(left: Expression, right: Expression) extends VecBinar
     copy(left = l, right = r)
 }
 
+/** v / ‖v‖₂ with the norm computed ONCE per row. The values are exactly
+  * those of `transform(v, x -> x / sqrt(vec_dot(v, v)))`, whose lambda
+  * evaluates the norm again for every element: a null element makes the
+  * norm, and so every element, null; a zero norm divides each element by
+  * zero, which is null, or the DIVIDE_BY_ZERO error when `failOnError`
+  * (ANSI mode, fixed when the column is built, as Spark's `/` fixes it).
+  */
+case class VecNormalize(child: Expression, failOnError: Boolean) extends UnaryExpression {
+  override def prettyName: String = "vec_normalize"
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs array<double>, got ${t.catalogString}")
+  }
+
+  override def nullSafeEval(v: Any): Any =
+    VecOps.normalize(v.asInstanceOf[ArrayData], failOnError)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, v => s"graft.functions.VecOps.normalize($v, $failOnError)")
+
+  override protected def withNewChildInternal(c: Expression): VecNormalize =
+    copy(child = c)
+}
+
 object VecOps {
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
@@ -99,7 +126,25 @@ object VecOps {
     s
   }
 
+  def normalize(v: ArrayData, failOnError: Boolean): ArrayData = {
+    val n = v.numElements()
+    val out = new Array[Any](n)
+    val dot = this.dot(v, v)
+    if (dot != null) {
+      val norm = math.sqrt(dot)
+      if (norm == 0.0 && n > 0 && failOnError)
+        throw org.apache.spark.sql.graftbridge.ColumnBridge.divideByZero()
+      if (norm != 0.0) {
+        var i = 0
+        while (i < n) { out(i) = v.getDouble(i) / norm; i += 1 }
+      }
+    }
+    new GenericArrayData(out)
+  }
+
   /** Column API. */
   def vecDot(a: Column, b: Column): Column = column(DotProduct(expression(a), expression(b)))
   def vecSqDist(a: Column, b: Column): Column = column(SquaredDistance(expression(a), expression(b)))
+  def vecNormalize(v: Column): Column = column(VecNormalize(expression(v),
+    org.apache.spark.sql.internal.SQLConf.get.ansiEnabled))
 }

@@ -39,26 +39,19 @@ private[graft] object BloomPrune {
     val conf = spark.sparkContext.hadoopConfiguration
     val survivors: Set[String] =
       if (probeable.size <= distributeThreshold)
-        probeable.filter(f => mightMatch(conf, f, eqs)).map(_.path).toSet
+        probeable.filter(f => mightMatchFile(conf, f.path, f.bloomCols, eqs))
+          .map(_.path).toSet
       else {
         val serConf = new org.apache.spark.SerializableWritable(conf)
-        val strEq = eqs.strings; val longEq = eqs.longs
         val slices = math.min(probeable.size, spark.sparkContext.defaultParallelism * 2)
         spark.sparkContext
           .parallelize(probeable.map(f => (f.path, f.bloomCols)), slices)
-          .filter { case (p, cols) =>
-            mightMatchFile(serConf.value, p, cols,
-              KeyPredicates.Equalities(strEq, longEq))
-          }
+          .filter { case (p, cols) => mightMatchFile(serConf.value, p, cols, eqs) }
           .map(_._1).collect().toSet
       }
     candidates.filter(f =>
       !f.bloomCols.exists(probed.contains) || survivors.contains(f.path))
   }
-
-  private def mightMatch(conf: Configuration, f: DataFileEntry,
-                         eqs: KeyPredicates.Equalities): Boolean =
-    mightMatchFile(conf, f.path, f.bloomCols, eqs)
 
   /** True unless every probed-and-bloomed column is definitely absent from
     * every row group of the file. Per column: any row group whose bloom is

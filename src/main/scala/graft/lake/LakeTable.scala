@@ -274,9 +274,13 @@ final class LakeTable(spark: SparkSession, val root: String,
     // extract bounds under LOGICAL names, probe file/manifest stats under
     // PHYSICAL names (stats come from parquet footers; key columns never
     // rename, so this is identity for the manifest key boxes)
-    val bounds = toPhysicalBounds(header, KeyPredicates.extractTyped(cond, ps, pl))
+    val bounds = KeyPredicates.extractTyped(cond, ps, pl).rekey(header.physicalOf)
     val candidates = log.loadManifests(sums.filter(_.overlapsKeys(bounds)).map(_.name))
-    bloomPruneFiles(header, cond, pruneEntries(candidates, bounds), ps, pl)
+    // file level: a column missing from a file's stats contributes no
+    // constraint for that file (fail open — e.g. manifests written before the
+    // column was statted, or before the column existed at all)
+    bloomPruneFiles(header, cond,
+      candidates.filter(f => KeyPredicates.admits(bounds, f.boundsOf, f.longBoundsOf)), ps, pl)
   }
 
   /** Bloom layer of [[planFiles]]: equality literals on columns whose files
@@ -296,23 +300,13 @@ final class LakeTable(spark: SparkSession, val root: String,
     // Advertised names are PHYSICAL (footers); extraction runs on LOGICAL
     // names and the probe re-keys to physical (renamed columns keep blooms).
     val advertised = candidates.iterator.flatMap(_.bloomCols).toSet
-    val bloomStr = strCols.filter(c => advertised.contains(snap.physicalOf(c)) &&
-      byName.get(c).contains(StringType))
-    val bloomLong = longCols.filter(c => advertised.contains(snap.physicalOf(c)) &&
-      (byName.get(c) match {
-        case Some(LongType) | Some(IntegerType) | Some(TimestampType) => true
-        case _ => false
-      }))
+    def bloomed(cols: Seq[String], kind: StatKind[_]) = cols.filter(c =>
+      advertised.contains(snap.physicalOf(c)) && byName.get(c).exists(kind.accepts))
+    val bloomStr = bloomed(strCols, StatKind.utf8)
+    val bloomLong = bloomed(longCols, StatKind.int64)
     if (bloomStr.isEmpty && bloomLong.isEmpty) candidates
-    else {
-      val eqs = KeyPredicates.extractEqualities(cond, bloomStr, bloomLong)
-      val phys =
-        if (snap.physicalName.isEmpty) eqs
-        else KeyPredicates.Equalities(
-          eqs.strings.map { case (c, v) => snap.physicalOf(c) -> v },
-          eqs.longs.map { case (c, v) => snap.physicalOf(c) -> v })
-      BloomPrune.prune(spark, candidates, phys)
-    }
+    else BloomPrune.prune(spark, candidates,
+      KeyPredicates.extractEqualities(cond, bloomStr, bloomLong).rekey(snap.physicalOf))
   }
 
   /** Prunable columns of a header, split by stat representation: string
@@ -340,43 +334,11 @@ final class LakeTable(spark: SparkSession, val root: String,
       if (physical.isEmpty) identity
       else { val inv = physical.map(_.swap); p => inv.getOrElse(p, p) }
     val byName = schema.fields.map(f => f.name -> f.dataType).toMap
-    val strings = (keyCols ++ (statted.map(toLogical) -- keyCols).toSeq.sorted)
-      .filter(c => byName.get(c).contains(StringType))
-    val longs = lstatted.map(toLogical).toSeq.sorted.filter(c => byName.get(c) match {
-      case Some(LongType) | Some(IntegerType) | Some(TimestampType) => true
-      case _ => false
-    })
-    (strings, longs)
+    def typed(lead: Seq[String], statted: Set[String], kind: StatKind[_]) =
+      (lead ++ (statted.map(toLogical) -- lead).toSeq.sorted)
+        .filter(c => byName.get(c).exists(kind.accepts))
+    (typed(keyCols, statted, StatKind.utf8), typed(Nil, lstatted, StatKind.int64))
   }
-
-  /** Re-key extracted bounds from LOGICAL to PHYSICAL column names for stat
-    * probing (identity when nothing is renamed).
-    */
-  private def toPhysicalBounds(
-      snap: Snapshot, b: KeyPredicates.TypedBounds): KeyPredicates.TypedBounds =
-    if (snap.physicalName.isEmpty) b
-    else KeyPredicates.TypedBounds(
-      b.strings.map { case (c, v) => snap.physicalOf(c) -> v },
-      b.longs.map { case (c, v) => snap.physicalOf(c) -> v })
-
-  /** Entries that can hold a row inside `bounds` (file-level pruning in
-    * [[planFiles]], over the entries of the summary-surviving manifests). A
-    * column missing from a file's stats contributes no constraint for that
-    * file (fail open — e.g. manifests written before the column was statted,
-    * or before the column existed at all).
-    */
-  private def pruneEntries(
-      entries: Seq[DataFileEntry], bounds: KeyPredicates.TypedBounds)
-      : Seq[DataFileEntry] =
-    entries.filter { f =>
-      bounds.strings.forall { case (c, b) =>
-        val (mn, mx) = f.boundsOf(c)
-        b.overlaps(mn, mx)
-      } && bounds.longs.forall { case (c, b) =>
-        val (mn, mx) = f.longBoundsOf(c)
-        b.overlaps(mn, mx)
-      }
-    }
 
   /** Time travel: the table as of `version` (live rows, engine columns
     * hidden, the schema AS OF that version). Any still-unexpired snapshot is
@@ -1446,37 +1408,26 @@ final class LakeTable(spark: SparkSession, val root: String,
     }
   }
 
-  /** Rectangle-overlap test on two manifest entries' (repo, path) bounding
-    * boxes. Every row of a file lies inside its box, so two files sharing a
-    * key MUST have overlapping boxes — box overlap is a sound (conservative)
-    * superset of key overlap. Unknown bounds count as overlapping (fail
-    * closed here: the file is INCLUDED in the rewrite).
-    */
-  private def boxesOverlap(a: DataFileEntry, b: DataFileEntry): Boolean = {
-    def dimOverlaps(aMin: Option[String], aMax: Option[String],
-                    bMin: Option[String], bMax: Option[String]): Boolean = {
-      val disjoint =
-        (for (x <- aMax; y <- bMin) yield utf8Compare(x, y) < 0).getOrElse(false) ||
-          (for (x <- bMax; y <- aMin) yield utf8Compare(x, y) < 0).getOrElse(false)
-      !disjoint
-    }
-    dimOverlaps(a.minRepo, a.maxRepo, b.minRepo, b.maxRepo) &&
-      dimOverlaps(a.minPath, a.maxPath, b.minPath, b.maxPath)
-  }
-
   /** Close `seed` under "overlaps a delta file in the set": every file whose
     * key box overlaps a to-be-rewritten delta joins the rewrite, transitively
     * through newly-added deltas (a base file never extends the frontier —
     * base rows cannot shadow anything). Returns the closed set in
     * `all`-order.
+    *
+    * Overlap is of the (repo, path) bounding boxes. Every row of a file lies
+    * inside its box, so two files sharing a key MUST have overlapping boxes —
+    * box overlap is a sound (conservative) superset of key overlap. Unknown
+    * bounds count as overlapping (fail closed here: the file is INCLUDED in
+    * the rewrite).
     */
   private def deltaClosure(
       seed: Seq[DataFileEntry], all: Seq[DataFileEntry]): Seq[DataFileEntry] = {
     var in = seed.map(_.path).toSet
     var frontier = seed.filter(_.delta)
     while (frontier.nonEmpty) {
-      val added = all.filter(f =>
-        !in.contains(f.path) && frontier.exists(d => boxesOverlap(d, f)))
+      val added = all.filter(f => !in.contains(f.path) && frontier.exists(d =>
+        Bound(d.minRepo, d.maxRepo).overlaps(f.minRepo, f.maxRepo) &&
+          Bound(d.minPath, d.maxPath).overlaps(f.minPath, f.maxPath)))
       in ++= added.map(_.path)
       frontier = added.filter(_.delta)
     }
@@ -1542,17 +1493,13 @@ object LakeTable {
     * compareTo (UTF-16 code units) disagrees for supplementary-plane chars,
     * which is why all pruning comparisons run through here.
     */
-  private[lake] def utf8Compare(a: String, b: String): Int = {
-    val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val d = (x(i) & 0xff) - (y(i) & 0xff)
-      if (d != 0) return d
-      i += 1
-    }
-    x.length - y.length
-  }
+  private[lake] def utf8Compare(a: String, b: String): Int =
+    unsignedBytes.compare(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+
+  /** Unsigned lexicographic byte order: [[utf8Compare]] on encoded strings,
+    * and the order of Parquet's binary min/max stats.
+    */
+  private val unsignedBytes: Ordering[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
 
   /** What the merge's pre-pass learns of a batch: the schema-change rows
     * as `(lsn, payload)` in lsn order, the paths of the target files that may
@@ -1613,35 +1560,47 @@ object LakeTable {
     search(0, bounds.length)
   }
 
-  private def isAscii(bytes: Array[Byte]): Boolean = bytes.forall(b => b >= 0)
+  /** Min/max of `column` across a footer's blocks under `ord`, each chunk's
+    * stats decoded by `decode` (None: unusable). None (unbounded) when the
+    * column is absent, or any chunk lacks stats, holds no non-null value or
+    * does not decode. Min/max cover only NON-null values, which is sound for
+    * pruning because every bound shape [[KeyPredicates]] extracts is
+    * null-rejecting (`null > 5` is null → row filtered anyway), so a file
+    * whose non-null range misses the bound cannot contribute a matching row
+    * through its nulls either.
+    */
+  private def footerBounds[T](
+      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
+      column: String, ord: Ordering[T])(
+      decode: org.apache.parquet.column.statistics.Statistics[_] => Option[(T, T)])
+      : Option[(T, T)] = {
+    import scala.jdk.CollectionConverters._
+    var box: Option[(T, T)] = None
+    var unbounded = false
+    for (b <- blocks; c <- b.getColumns.asScala if c.getPath.toDotString == column) {
+      val st: org.apache.parquet.column.statistics.Statistics[_] = c.getStatistics
+      (if (st == null || !st.hasNonNullValue) None else decode(st)) match {
+        case None => unbounded = true
+        case Some((lo, hi)) => box = Some(box.fold((lo, hi)) { case (mn, mx) =>
+          (ord.min(mn, lo), ord.max(mx, hi)) })
+      }
+    }
+    if (unbounded) None else box
+  }
 
-  /** Min/max of one string column across a footer's blocks, as unsigned-byte
-    * bounds. Returns None (unbounded) when stats are missing or non-ASCII:
-    * for ASCII, UTF-8 byte order and JVM string order coincide, so the
-    * downstream comparisons are exact; a non-ASCII (or truncation-incremented,
-    * possibly invalid-UTF-8) stat is treated as no-bound rather than risking
-    * an inverted range that silently skips a file holding the key.
+  /** Bounds of one string column: [[footerBounds]] under unsigned byte
+    * order, then each side None (unbounded) unless ASCII: for ASCII, UTF-8
+    * byte order and JVM string order coincide, so the downstream comparisons
+    * are exact; a non-ASCII (or truncation-incremented, possibly
+    * invalid-UTF-8) stat is treated as no-bound rather than risking an
+    * inverted range that silently skips a file holding the key.
     */
   private def columnBounds(
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       column: String): (Option[String], Option[String]) = {
-    import scala.jdk.CollectionConverters._
-    var minB: Array[Byte] = null
-    var maxB: Array[Byte] = null
-    var unbounded = false
-    for (b <- blocks; c <- b.getColumns.asScala if c.getPath.toDotString == column) {
-      val st = c.getStatistics
-      if (st == null || !st.hasNonNullValue) unbounded = true
-      else {
-        val mn = st.getMinBytes; val mx = st.getMaxBytes
-        if (minB == null || unsignedLt(mn, minB)) minB = mn
-        if (maxB == null || unsignedLt(maxB, mx)) maxB = mx
-      }
-    }
-    if (unbounded || minB == null) (None, None)
-    else (
-      if (isAscii(minB)) Some(new String(minB, "UTF-8")) else None,
-      if (isAscii(maxB)) Some(new String(maxB, "UTF-8")) else None)
+    def ascii(b: Array[Byte]) = Option.when(b.forall(_ >= 0))(new String(b, "UTF-8"))
+    footerBounds(blocks, column, unsignedBytes)(st => Some((st.getMinBytes, st.getMaxBytes)))
+      .map { case (mn, mx) => (ascii(mn), ascii(mx)) }.getOrElse((None, None))
   }
 
   /** Is this physical column's stat order the int64 order Catalyst literals
@@ -1665,46 +1624,6 @@ object LakeTable {
     })
   }
 
-  /** Min/max of an int64-comparable column (INT64 or INT32 physical) across
-    * a footer's blocks. Any block with missing stats or no non-null value →
-    * (None, None), mirroring [[columnBounds]]' fail-open contract. Min/max
-    * cover only NON-null values, which is sound for pruning because every
-    * bound shape [[KeyPredicates]] extracts is null-rejecting (`null > 5` is
-    * null → row filtered anyway), so a file whose non-null range misses the
-    * bound cannot contribute a matching row through its nulls either.
-    */
-  private def longColumnBounds(
-      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
-      column: String): (Option[Long], Option[Long]) = {
-    import scala.jdk.CollectionConverters._
-    var mn = Long.MaxValue
-    var mx = Long.MinValue
-    var seen = false
-    var unbounded = false
-    for (b <- blocks; c <- b.getColumns.asScala if c.getPath.toDotString == column) {
-      val st = c.getStatistics
-      if (st == null || !st.hasNonNullValue) unbounded = true
-      else (st.genericGetMin, st.genericGetMax) match {
-        case (lo: java.lang.Number, hi: java.lang.Number) =>
-          mn = math.min(mn, lo.longValue)
-          mx = math.max(mx, hi.longValue)
-          seen = true
-        case _ => unbounded = true // non-numeric stats object: fail open
-      }
-    }
-    if (unbounded || !seen) (None, None) else (Some(mn), Some(mx))
-  }
-
-  private def unsignedLt(a: Array[Byte], b: Array[Byte]): Boolean = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d < 0
-      i += 1
-    }
-    a.length < b.length
-  }
 
   /** The manifest entry of the parquet data file `file`, from its footer
     * alone, recorded under `path` (the file's committed path; a write task
@@ -1762,10 +1681,10 @@ object LakeTable {
         val longCols = (statColumns.filter(longEligible.contains) ++
           longEligible.sorted).distinct.take(maxLongStatColumns)
         val secondaryLong = longCols.flatMap { c =>
-          longColumnBounds(blocks, c) match {
-            case (None, None) => None
-            case b => Some(c -> b)
-          }
+          footerBounds(blocks, c, Ordering.Long)(st => (st.genericGetMin, st.genericGetMax) match {
+            case (lo: java.lang.Number, hi: java.lang.Number) => Some((lo.longValue, hi.longValue))
+            case _ => None // non-numeric stats object: fail open
+          }).map { case (mn, mx) => c -> ((Some(mn), Some(mx))) }
         }.toMap
         // bloom ADVERTISEMENT: columns with a parquet bloom filter in at
         // least one row group, recorded in the manifest so readers probe

@@ -118,15 +118,12 @@ final case class ManifestSummary(
     * are always present; secondary columns prune only when summarized
     * (missing column → no constraint → fail open).
     */
-  def overlapsKeys(bounds: KeyPredicates.TypedBounds): Boolean = {
-    def side(c: String, mn: Option[String], mx: Option[String]): Boolean =
-      bounds.strings.get(c).forall(_.overlaps(mn, mx))
-    side("repo", minRepo, maxRepo) && side("path", minPath, maxPath) &&
-      bounds.strings.forall { case (c, b) =>
-        stats.get(c).forall { case (mn, mx) => b.overlaps(mn, mx) } } &&
-      bounds.longs.forall { case (c, b) =>
-        longStats.get(c).forall { case (mn, mx) => b.overlaps(mn, mx) } }
-  }
+  def overlapsKeys(bounds: KeyPredicates.TypedBounds): Boolean =
+    KeyPredicates.admits(bounds, {
+      case "repo" => (minRepo, maxRepo)
+      case "path" => (minPath, maxPath)
+      case c => stats.getOrElse(c, (None, None))
+    }, longStats.getOrElse(_, (None, None)))
 }
 
 object ManifestSummary {
@@ -138,49 +135,37 @@ object ManifestSummary {
   val maxStatBoxCols = 8
 
   def of(name: String, entries: Seq[DataFileEntry]): ManifestSummary = {
-    // combine per-file bounds under the SAME unsigned-UTF-8 order the file
-    // stats were written in (LakeTable.utf8Compare) — JVM string order
+    // combine per-file bounds under the SAME order the file stats were
+    // written in (Bound.hull; unsigned UTF-8 for strings) — JVM string order
     // disagrees above the BMP and would widen/shrink the box incorrectly
-    def mn(f: DataFileEntry => Option[String]): Option[String] =
-      if (entries.isEmpty || entries.exists(e => f(e).isEmpty)) None
-      else Some(entries.flatMap(e => f(e))
-        .reduce((a, b) => if (LakeTable.utf8Compare(a, b) <= 0) a else b))
-    def mx(f: DataFileEntry => Option[String]): Option[String] =
-      if (entries.isEmpty || entries.exists(e => f(e).isEmpty)) None
-      else Some(entries.flatMap(e => f(e))
-        .reduce((a, b) => if (LakeTable.utf8Compare(a, b) >= 0) a else b))
+    val repo = Bound.hull(entries.map(e => (e.minRepo, e.maxRepo)))
+    val path = Bound.hull(entries.map(e => (e.minPath, e.maxPath)))
     val stattedStr = entries.iterator.flatMap(_.stats.keysIterator).toSeq.distinct.sorted
     val stattedLong = entries.iterator.flatMap(_.longStats.keysIterator).toSeq.distinct.sorted
     // union box per secondary column: include ONLY when every file stats the
     // column with both sides bounded (a missing/unbounded file would make
     // the box a lie — leave the column out and fail open at manifest level)
-    def strBox(c: String): Option[(Option[String], Option[String])] = {
-      val per = entries.map(_.stats.get(c))
-      if (per.exists(p => p.isEmpty || p.get._1.isEmpty || p.get._2.isEmpty)) None
-      else Some((
-        Some(per.map(_.get._1.get).reduce((a, b) => if (LakeTable.utf8Compare(a, b) <= 0) a else b)),
-        Some(per.map(_.get._2.get).reduce((a, b) => if (LakeTable.utf8Compare(a, b) >= 0) a else b))))
-    }
-    def longBox(c: String): Option[(Option[Long], Option[Long])] = {
-      val per = entries.map(_.longStats.get(c))
-      if (per.exists(p => p.isEmpty || p.get._1.isEmpty || p.get._2.isEmpty)) None
-      else Some((Some(per.map(_.get._1.get).min), Some(per.map(_.get._2.get).max)))
-    }
+    def boxes[T: StatKind](statted: Seq[String],
+                           stat: DataFileEntry => Map[String, (Option[T], Option[T])]) =
+      statted.take(maxStatBoxCols).flatMap { c =>
+        val per = entries.flatMap(stat(_).get(c))
+        val box = Bound.hull(per)
+        if (per.size < entries.size || box.lower.isEmpty || box.upper.isEmpty) None
+        else Some(c -> ((box.lower, box.upper)))
+      }.toMap
     ManifestSummary(
       name = name,
       fileCount = entries.size.toLong,
-      minRepo = mn(_.minRepo), maxRepo = mx(_.maxRepo),
-      minPath = mn(_.minPath), maxPath = mx(_.maxPath),
+      minRepo = repo.lower, maxRepo = repo.upper,
+      minPath = path.lower, maxPath = path.upper,
       maxVer = if (entries.isEmpty || entries.exists(_.maxVer.isEmpty)) None
                else Some(entries.flatMap(_.maxVer).max),
       hasDeltas = entries.exists(_.delta),
       stattedStr = stattedStr,
       stattedLong = stattedLong,
       bloomCols = entries.iterator.flatMap(_.bloomCols).toSeq.distinct.sorted,
-      stats = stattedStr.take(maxStatBoxCols)
-        .flatMap(c => strBox(c).map(c -> _)).toMap,
-      longStats = stattedLong.take(maxStatBoxCols)
-        .flatMap(c => longBox(c).map(c -> _)).toMap)
+      stats = boxes(stattedStr, _.stats),
+      longStats = boxes(stattedLong, _.longStats))
   }
 }
 
@@ -539,53 +524,44 @@ final class SnapshotLog(spark: SparkSession, root: String) {
     ("minPath" -> f.minPath) ~ ("maxPath" -> f.maxPath) ~
     ("maxVer" -> f.maxVer) ~ ("tomb" -> f.tomb) ~ ("delta" -> f.delta) ~
     ("bytes" -> f.bytes) ~
-    ("stats" -> f.stats.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      ("col" -> c) ~ ("min" -> mn) ~ ("max" -> mx) }) ~
-    ("longStats" -> f.longStats.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      ("col" -> c) ~ ("min" -> mn) ~ ("max" -> mx) }) ~
+    ("stats" -> renderStats(f.stats)) ~ ("longStats" -> renderStats(f.longStats)) ~
     ("bloomCols" -> f.bloomCols.toList)
+
+  /** A stat map as JSON, the one form of `stats` and `longStats` in manifest
+    * entries and manifest-list summaries alike: `[{"col","min","max"}]`
+    * sorted by column, a None side absent (unbounded).
+    */
+  private def renderStats[T](m: Map[String, (Option[T], Option[T])])(
+      implicit kind: StatKind[T]): JValue =
+    m.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
+      ("col" -> c) ~ ("min" -> mn.map(kind.toJson)) ~ ("max" -> mx.map(kind.toJson)) }
+
+  /** Inverse of [[renderStats]]; a missing array (manifests written before
+    * the stat existed) is an empty map: unknown, fail open.
+    */
+  private def parseStats[T](j: JValue)(
+      implicit kind: StatKind[T]): Map[String, (Option[T], Option[T])] = {
+    implicit val fmt: Formats = DefaultFormats
+    j match {
+      case JArray(ss) => ss.map { s =>
+        (s \ "col").extract[String] -> ((kind.fromJson(s \ "min"), kind.fromJson(s \ "max")))
+      }.toMap
+      case _ => Map.empty
+    }
+  }
 
   private def parseEntry(f: JValue): DataFileEntry = {
     implicit val fmt: Formats = DefaultFormats
-    def opt(field: String): Option[String] = (f \ field) match {
-      case JString(s) => Some(s)
-      case _ => None
-    }
-    val maxVer = (f \ "maxVer") match {
-      case JInt(v) => Some(v.toLong)
-      case JLong(v) => Some(v)
-      case _ => None // older manifests: unknown, fail open
-    }
+    def opt(field: String): Option[String] = StatKind.utf8.fromJson(f \ field)
+    // older manifests: no maxVer, unknown, fail open
+    val maxVer = StatKind.int64.fromJson(f \ "maxVer")
     DataFileEntry((f \ "path").extract[String], (f \ "rows").extract[Long],
       opt("minRepo"), opt("maxRepo"), opt("minPath"), opt("maxPath"), maxVer,
       tomb = (f \ "tomb") match { case JBool(b) => b; case _ => false },
       delta = (f \ "delta") match { case JBool(b) => b; case _ => false },
-      bytes = (f \ "bytes") match {
-        case JInt(v) => v.toLong
-        case JLong(v) => v
-        case _ => 0L
-      },
-      stats = (f \ "stats") match {
-        case JArray(ss) => ss.map { s =>
-          def side(n: String): Option[String] = (s \ n) match {
-            case JString(v) => Some(v)
-            case _ => None
-          }
-          (s \ "col").extract[String] -> ((side("min"), side("max")))
-        }.toMap
-        case _ => Map.empty
-      },
-      longStats = (f \ "longStats") match {
-        case JArray(ss) => ss.map { s =>
-          def side(n: String): Option[Long] = (s \ n) match {
-            case JInt(v) => Some(v.toLong)
-            case JLong(v) => Some(v)
-            case _ => None
-          }
-          (s \ "col").extract[String] -> ((side("min"), side("max")))
-        }.toMap
-        case _ => Map.empty // pre-longStats manifests: unknown, fail open
-      },
+      bytes = StatKind.int64.fromJson(f \ "bytes").getOrElse(0L),
+      stats = parseStats[String](f \ "stats"),
+      longStats = parseStats[Long](f \ "longStats"),
       bloomCols = (f \ "bloomCols") match {
         case JArray(cs) => cs.collect { case JString(c) => c }
         case _ => Nil // pre-bloom manifests: no blooms advertised
@@ -663,10 +639,8 @@ final class SnapshotLog(spark: SparkSession, root: String) {
         ("stattedStr" -> m.stattedStr) ~
         ("stattedLong" -> m.stattedLong) ~
         ("bloomCols" -> m.bloomCols) ~
-        ("stats" -> m.stats.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-          ("col" -> c) ~ ("min" -> mn) ~ ("max" -> mx) }) ~
-        ("longStats" -> m.longStats.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-          ("col" -> c) ~ ("min" -> mn) ~ ("max" -> mx) })
+        ("stats" -> renderStats(m.stats)) ~
+        ("longStats" -> renderStats(m.longStats))
       })
     JsonMethods.compact(JsonMethods.render(json))
   }
@@ -721,11 +695,7 @@ final class SnapshotLog(spark: SparkSession, root: String) {
               else Nil,
       ledger = ledger,
       parent = (j \ "parent").extract[Long],
-      maxLsn = (j \ "maxLsn") match {
-        case JInt(v) => v.toLong
-        case JLong(v) => v
-        case _ => -1L
-      },
+      maxLsn = StatKind.int64.fromJson(j \ "maxLsn").getOrElse(-1L),
       widenedAt = (j \ "widenedAt") match {
         case JArray(ws) => ws.map { w =>
           (w \ "name").extract[String] ->
@@ -761,10 +731,7 @@ final class SnapshotLog(spark: SparkSession, root: String) {
       },
       manifestSummaries = (j \ "manifestList") match {
         case JArray(ms) => ms.map { m =>
-          def os(n: String): Option[String] = (m \ n) match {
-            case JString(v) => Some(v)
-            case _ => None
-          }
+          def os(n: String): Option[String] = StatKind.utf8.fromJson(m \ n)
           def strs(n: String): Seq[String] = (m \ n) match {
             case JArray(vs) => vs.collect { case JString(v) => v }
             case _ => Nil
@@ -774,11 +741,7 @@ final class SnapshotLog(spark: SparkSession, root: String) {
             fileCount = (m \ "files").extract[Long],
             minRepo = os("minRepo"), maxRepo = os("maxRepo"),
             minPath = os("minPath"), maxPath = os("maxPath"),
-            maxVer = (m \ "maxVer") match {
-              case JInt(v) => Some(v.toLong)
-              case JLong(v) => Some(v)
-              case _ => None
-            },
+            maxVer = StatKind.int64.fromJson(m \ "maxVer"),
             hasDeltas = (m \ "hasDeltas") match {
               case JBool(b) => b
               case _ => true // unknown → fail open (assume deltas possible)
@@ -786,29 +749,8 @@ final class SnapshotLog(spark: SparkSession, root: String) {
             stattedStr = strs("stattedStr"),
             stattedLong = strs("stattedLong"),
             bloomCols = strs("bloomCols"),
-            stats = (m \ "stats") match {
-              case JArray(bs) => bs.map { b =>
-                (b \ "col").extract[String] -> ((b \ "min") match {
-                  case JString(v) => Some(v)
-                  case _ => None
-                }, (b \ "max") match {
-                  case JString(v) => Some(v)
-                  case _ => None
-                })
-              }.toMap
-              case _ => Map.empty
-            },
-            longStats = (m \ "longStats") match {
-              case JArray(bs) => bs.map { b =>
-                def l(n: String): Option[Long] = (b \ n) match {
-                  case JInt(v) => Some(v.toLong)
-                  case JLong(v) => Some(v)
-                  case _ => None
-                }
-                (b \ "col").extract[String] -> (l("min"), l("max"))
-              }.toMap
-              case _ => Map.empty
-            })
+            stats = parseStats[String](m \ "stats"),
+            longStats = parseStats[Long](m \ "longStats"))
         }
         case _ => Nil // pre-summary snapshots: readHeader rebuilds them
       })
@@ -835,11 +777,7 @@ final class SnapshotLog(spark: SparkSession, root: String) {
     */
   def describe(version: Long): CommitInfo = {
     val j = JsonMethods.parse(readText(new Path(metaDir, s"v$version.json")))
-    def long(field: String): Long = (j \ field) match {
-      case JInt(v) => v.toLong
-      case JLong(v) => v
-      case _ => -1L
-    }
+    def long(field: String): Long = StatKind.int64.fromJson(j \ field).getOrElse(-1L)
     CommitInfo(
       version = long("version"), parent = long("parent"),
       operation = (j \ "operation") match { case JString(s) => s; case _ => "" },

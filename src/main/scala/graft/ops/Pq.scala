@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.VecOps.vecDot
+import graft.functions.VecOps.vecNormalize
 
 /** Product quantization (PQ) approximate nearest neighbor — the
   * compressed-domain scale path next to IVF ([[Ivf]]) and sign-LSH
@@ -47,15 +47,10 @@ object Pq {
     def ksub: Int = books.head.length
   }
 
-  private def unit(v: Column): Column = {
-    val n = sqrt(vecDot(v, v))
-    transform(v, x => x / n)
-  }
-
   /** (id, unit-normalized double vec) projection shared by train/encode. */
   private def projected(df: DataFrame, vecCol: String, idCol: String): DataFrame =
     df.select(col(idCol).as("__id"),
-      unit(Similarity.asDoubleVec(col(vecCol))).as("__v"))
+      vecNormalize(Similarity.asDoubleVec(col(vecCol))).as("__v"))
 
   /** Codebooks as a broadcastable (subspace, code, centroid) frame. */
   private def booksDf(spark: org.apache.spark.sql.SparkSession,
