@@ -96,8 +96,6 @@ private[graft] final case class Bound[T](lower: Option[T], upper: Option[T])(
 }
 
 private[graft] object Bound {
-  def unbounded[T: StatKind]: Bound[T] = Bound[T](None, None)
-
   /** The smallest bound holding every one of `bs`: a side is None (fail
     * open) when any bound lacks it, or when `bs` is empty.
     */
@@ -171,7 +169,7 @@ private[graft] object KeyPredicates {
 
   private def ranges[T](pred: Expression, cols: Seq[String])(
       implicit kind: StatKind[T]): Map[String, Bound[T]] = {
-    var bounds = cols.map(_ -> Bound.unbounded[T]).toMap
+    var bounds = cols.map(_ -> Bound[T](None, None)).toMap
     def want(e: Expression): Option[String] = nameOf(e).filter(bounds.contains)
     def visit(e: Expression): Unit = e match {
       case And(l, r) => visit(l); visit(r)

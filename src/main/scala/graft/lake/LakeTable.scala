@@ -286,24 +286,21 @@ final class LakeTable(spark: SparkSession, val root: String,
   /** Bloom layer of [[planFiles]]: equality literals on columns whose files
     * ADVERTISE a parquet bloom probe the embedded filters and drop definite
     * negatives — the high-cardinality point lookups range stats can never
-    * prune. `strCols`/`longCols` carry the planner's (already delta-safe)
-    * prunable column sets.
+    * prune. `strCols`/`longCols` carry the planner's (already delta-safe
+    * and type-checked) prunable column sets.
     */
   private def bloomPruneFiles(
       snap: Snapshot, cond: org.apache.spark.sql.catalyst.expressions.Expression,
       candidates: Seq[DataFileEntry],
       strCols: Seq[String], longCols: Seq[String]): Seq[DataFileEntry] = {
-    val byName = snap.schema.fields.map(f => f.name -> f.dataType).toMap
     // advertised blooms from the CANDIDATES, not snap.files: only candidate
     // files get probed, and a file without the bloom fails open anyway —
     // equivalent pruning, and the header's `files` are never loaded.
     // Advertised names are PHYSICAL (footers); extraction runs on LOGICAL
     // names and the probe re-keys to physical (renamed columns keep blooms).
     val advertised = candidates.iterator.flatMap(_.bloomCols).toSet
-    def bloomed(cols: Seq[String], kind: StatKind[_]) = cols.filter(c =>
-      advertised.contains(snap.physicalOf(c)) && byName.get(c).exists(kind.accepts))
-    val bloomStr = bloomed(strCols, StatKind.utf8)
-    val bloomLong = bloomed(longCols, StatKind.int64)
+    val bloomStr = strCols.filter(c => advertised.contains(snap.physicalOf(c)))
+    val bloomLong = longCols.filter(c => advertised.contains(snap.physicalOf(c)))
     if (bloomStr.isEmpty && bloomLong.isEmpty) candidates
     else BloomPrune.prune(spark, candidates,
       KeyPredicates.extractEqualities(cond, bloomStr, bloomLong).rekey(snap.physicalOf))
@@ -1494,12 +1491,21 @@ object LakeTable {
     * which is why all pruning comparisons run through here.
     */
   private[lake] def utf8Compare(a: String, b: String): Int =
-    unsignedBytes.compare(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+    utf8Compare(a.getBytes("UTF-8"), b.getBytes("UTF-8"))
 
-  /** Unsigned lexicographic byte order: [[utf8Compare]] on encoded strings,
-    * and the order of Parquet's binary min/max stats.
+  /** [[utf8Compare]] on encoded bytes: unsigned lexicographic, also the
+    * order of Parquet's binary min/max stats.
     */
-  private val unsignedBytes: Ordering[Array[Byte]] = java.util.Arrays.compareUnsigned(_, _)
+  private[lake] def utf8Compare(x: Array[Byte], y: Array[Byte]): Int = {
+    var i = 0
+    val n = math.min(x.length, y.length)
+    while (i < n) {
+      val d = (x(i) & 0xff) - (y(i) & 0xff)
+      if (d != 0) return d
+      i += 1
+    }
+    x.length - y.length
+  }
 
   /** What the merge's pre-pass learns of a batch: the schema-change rows
     * as `(lsn, payload)` in lsn order, the paths of the target files that may
@@ -1599,7 +1605,8 @@ object LakeTable {
       blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
       column: String): (Option[String], Option[String]) = {
     def ascii(b: Array[Byte]) = Option.when(b.forall(_ >= 0))(new String(b, "UTF-8"))
-    footerBounds(blocks, column, unsignedBytes)(st => Some((st.getMinBytes, st.getMaxBytes)))
+    footerBounds(blocks, column, utf8Compare(_: Array[Byte], _: Array[Byte]))(st =>
+      Some((st.getMinBytes, st.getMaxBytes)))
       .map { case (mn, mx) => (ascii(mn), ascii(mx)) }.getOrElse((None, None))
   }
 
